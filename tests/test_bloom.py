@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from thuvienphapluat_crawler_spark.operators.bloom import (
     BloomFilter,
@@ -75,16 +76,9 @@ def test_non_byte_aligned_capacity_roundtrip(tmp_path):
     assert g.n_bits == f.n_bits and g.contains(keys).all()
 
 
-# --- cuckoo fallback: same contract through the same interface -------------
-
-import pytest
-
-from thuvienphapluat_crawler_spark.operators.bloom import CuckooFilter, make_filter
-
-
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("kind", ["bloom"])
 def test_filter_contract(kind):
-    f = make_filter(kind, 10_000)
+    f = BloomFilter.for_capacity(10_000)
     keys = (np.arange(10_000, dtype=np.int64) * 2_654_435_761) ^ 0x5DEECE66D
     f.add(keys)
     assert f.contains(keys).all(), "no false negatives"
@@ -93,66 +87,33 @@ def test_filter_contract(kind):
     assert f.contains(fresh).mean() < 0.05
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("kind", ["bloom"])
 def test_filter_persistence_roundtrip(tmp_path, kind):
     root = str(tmp_path)
     k0 = np.array([11, 22, 33], dtype=np.int64)
     k5 = np.array([77, 88], dtype=np.int64)
-    update_bucket(root, 1, epoch=0, keys=k0, kind=kind)
-    update_bucket(root, 1, epoch=2, keys=k5, kind=kind)
+    update_bucket(root, 1, epoch=0, keys=k0)
+    update_bucket(root, 1, epoch=2, keys=k5)
     f = load_bucket(root, 1, 2)
-    assert isinstance(f, CuckooFilter) == (kind == "cuckoo")
+    assert isinstance(f, BloomFilter)
     assert f.contains(np.concatenate([k0, k5])).all()
     assert probe_bucket(root, 1, 1, k0).all() and not probe_bucket(root, 1, 1, k5).any()
 
 
-def test_cuckoo_supports_deletion():
-    f = CuckooFilter.for_capacity(1000)
-    keys = np.arange(1, 800, dtype=np.int64) * 7919
-    f.add(keys)
-    gone = keys[::2]
-    assert f.delete(gone).all()
-    assert f.contains(keys[1::2]).all(), "undeleted keys must remain"
-    assert f.contains(gone).mean() < 0.05, "deleted keys should probe absent"
-
-
-def test_engine_seen_set_identical_with_cuckoo(spark, tmp_path):
-    from thuvienphapluat_crawler_spark.plans.frontier import CrawlEngine
-    from thuvienphapluat_crawler_spark.sources.synthetic_web import World
-
-    world = World(n_hosts=2, base_size=24, links_per_page=3, budget_per_host=5, max_epochs=2)
-    results = {}
-    for kind in ("bloom", "cuckoo"):
-        eng = CrawlEngine(spark, world, str(tmp_path / kind), n_buckets=4, filter_kind=kind)
-        eng.run()
-        results[kind] = {
-            "seen": sorted(r.canonical_url for r in eng.seen().collect()),
-            "log": sorted(
-                (r.epoch, r.host, r.rank, r.canonical_url) for r in eng.crawl_log().collect()
-            ),
-        }
-    assert results["bloom"] == results["cuckoo"]
-
-
-def test_cuckoo_saturates_gracefully():
-    # over-capacity must DEGRADE (all maybe-seen), never crash — the
-    # exact anti-join downstream keeps correctness either way
-    f = CuckooFilter(64)  # 64 buckets × 4 slots = 256 capacity
-    keys = np.arange(1, 5000, dtype=np.int64) * 6364136223846793005
-    f.add(keys)  # far over capacity
-    assert f.saturated
-    assert f.contains(keys).all(), "saturated filter must stay no-false-negative"
-    assert f.contains(np.array([123456789], dtype=np.int64)).all()
-    # persists+reloads as saturated
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as root:
-        update_bucket(root, 0, epoch=0, keys=keys[:10], capacity=10_000, kind="cuckoo")
-        # force saturation through the persistence path
-        g = load_bucket(root, 0, 0)
-        g._saturate()
-        import numpy as _np, os as _os
-        with open(_os.path.join(root, "bloom", "epoch=00000", "bucket_0.npy"), "wb") as fh:
-            _np.save(fh, g.table, allow_pickle=False)
-        h = load_bucket(root, 0, 0)
-        assert h.saturated and h.contains(np.array([1], dtype=np.int64)).all()
+def test_load_bucket_rejects_non_bitmap(tmp_path):
+    # a 2-D uint16 slot table (the on-disk shape of the removed cuckoo
+    # filter) read as a bloom bitmap could answer "definitely new" for a
+    # seen URL; the loader must refuse it and name the file
+    root = str(tmp_path)
+    d = tmp_path / "bloom" / "epoch=00000"
+    d.mkdir(parents=True)
+    with open(d / "bucket_3.npy", "wb") as fh:
+        np.save(fh, np.zeros((256, 4), dtype=np.uint16), allow_pickle=False)
+    with pytest.raises(ValueError, match="bucket_3.npy"):
+        load_bucket(root, 3, 0)
+    with pytest.raises(ValueError, match="not a bloom bitmap"):
+        probe_bucket(root, 3, 2, np.array([1], dtype=np.int64))
+    with open(d / "bucket_4.npy", "wb") as fh:  # right rank, wrong dtype
+        np.save(fh, np.zeros(128, dtype=np.uint16), allow_pickle=False)
+    with pytest.raises(ValueError, match="bucket_4.npy"):
+        load_bucket(root, 4, 0)

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from thuvienphapluat_crawler_spark.plans import crawl_oracle
@@ -118,6 +120,52 @@ def test_resume_equals_full_run(spark, tmp_path_factory, run):
     a = {r.canonical_url for r in resumed.seen().collect()}
     b = {r.canonical_url for r in full.seen().collect()}
     assert a == b
+
+
+def _pool_threads() -> set[threading.Thread]:
+    return {t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")}
+
+
+def test_epoch_failure_after_writes_start_leaves_no_pool(spark, tmp_path_factory, monkeypatch):
+    """A failure in run_epoch after the staged writes are submitted (here:
+    the manifest read for the checkpoint lineage) must propagate with the
+    failed writes' errors attached, commit nothing for that epoch, and
+    leave no writer thread behind. A fresh engine on the same root then
+    resumes to the oracle's result."""
+    root = str(tmp_path_factory.mktemp("wh_fail"))
+    engine = CrawlEngine(spark, WORLD, root, n_buckets=4)
+    engine.bootstrap()
+    before = _pool_threads()
+    log_write_started = threading.Event()
+    real_stage, real_read = engine.wh.stage, engine.wh.read_manifest
+
+    def stage(table, epoch, df):
+        if table == "crawl_log":
+            log_write_started.set()
+            raise OSError("injected crawl_log write failure")
+        return real_stage(table, epoch, df)  # docs: a real write, still running
+
+    def read_manifest():
+        if _pool_threads() - before:  # the writer pool has started
+            assert log_write_started.wait(60)
+            raise RuntimeError("injected manifest read failure")
+        return real_read()
+
+    monkeypatch.setattr(engine.wh, "stage", stage)
+    monkeypatch.setattr(engine.wh, "read_manifest", read_manifest)
+    with pytest.raises(RuntimeError, match="injected manifest") as err:
+        engine.run_epoch(1)
+    monkeypatch.undo()
+
+    assert any("injected crawl_log write failure" in n for n in err.value.__notes__)
+    assert 1 not in engine.wh.read_manifest()["epochs"]
+    assert not (_pool_threads() - before), "writer pool threads left running"
+
+    resumed = CrawlEngine(spark, WORLD, root, n_buckets=4)
+    resumed.run()
+    oracle = crawl_oracle.crawl(WORLD)
+    assert spark_log_rows(resumed) == oracle_log_rows(oracle)
+    assert {r.canonical_url for r in resumed.seen().collect()} == oracle.seen
 
 
 def test_determinism_across_parallelism(spark, tmp_path_factory, run):

@@ -100,3 +100,17 @@ def test_shingles_short_docs_yield_empty_array(spark):
     assert got["b"] == []
     assert got["c"] == []
     assert got["d"] == ["exactly five tokens right here"]
+
+
+def test_jaccard_on_pairs_zero_intersection(spark):
+    """A candidate pair whose hash sets share nothing still yields ONE row,
+    with n_inter=0 and jaccard=0.0 (it is not dropped by the joins)."""
+    sets = spark.createDataFrame(
+        [("a", [1, 2, 3]), ("b", [4, 5]), ("c", [1, 2, 9])], "doc_id string, hs array<long>"
+    )
+    pairs = spark.createDataFrame([("a", "b"), ("a", "c")], "doc_a string, doc_b string")
+    got = {(r.doc_a, r.doc_b): r for r in D.jaccard_on_pairs(pairs, sets).collect()}
+    assert set(got) == {("a", "b"), ("a", "c")}
+    disjoint, overlap = got[("a", "b")], got[("a", "c")]
+    assert (disjoint.n_inter, disjoint.n_a, disjoint.n_b, disjoint.jaccard) == (0, 3, 2, 0.0)
+    assert (overlap.n_inter, overlap.jaccard) == (2, 0.5)

@@ -80,8 +80,8 @@ def test_multitable_ann_recall_beats_single_table(spark):
         return out
 
     exact = topk_sets(S.brute_force_topk(emb, qids, k=5))
-    single = topk_sets(S.lsh_ann_topk(emb, qids, k=5))
-    multi = topk_sets(S.lsh_multitable_topk(emb, qids, k=5))
+    single = topk_sets(S.lsh_topk(emb, qids, [S.HYPERPLANES], k=5))
+    multi = topk_sets(S.lsh_topk(emb, qids, S.HYPERPLANE_TABLES, k=5))
 
     def recall(approx):
         hits = sum(len(approx.get(q, set()) & exact[q]) for q in exact)

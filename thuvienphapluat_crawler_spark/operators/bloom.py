@@ -12,10 +12,11 @@ Bitmaps are persisted per (epoch, bucket) beside the warehouse manifest
 (lineage records the bloom version). On a real cluster the .npy files
 live on shared storage (S3/HDFS); executors read the bucket they own.
 
-A cuckoo-filter fallback (same probe interface, supports deletion) can
-slot behind BloomBank without touching the engine: the engine only calls
-contains()/add(). Generalizes the reference's only dedup structure — the
-in-memory id() set of crawler.py:131-136 — to 10^10 URLs.
+The bloom is the only seen filter. The seen set only grows (no
+deletion), and the benchmark measures the bloom's false-positive rate on
+the crawl_wide workload. Generalizes the reference's only dedup
+structure — the in-memory id() set of crawler.py:131-136 — to 10^10
+URLs.
 """
 
 from __future__ import annotations
@@ -100,14 +101,17 @@ def _bloom_dir(root: str, epoch: int) -> str:
     return os.path.join(root, "bloom", f"epoch={epoch:05d}")
 
 
-def load_bucket(root: str, bucket: int, up_to_epoch: int):
-    """Most recent persisted filter for `bucket` at epoch ≤ up_to_epoch
-    (bloom or cuckoo — the array shape says which)."""
+def load_bucket(root: str, bucket: int, up_to_epoch: int) -> BloomFilter | None:
+    """Most recent persisted bloom for `bucket` at epoch ≤ up_to_epoch.
+    Anything but a 1-D uint8 bitmap is refused: loaded as a bloom, it
+    could answer "definitely new" for a seen URL."""
     for e in range(up_to_epoch, -1, -1):
         p = os.path.join(_bloom_dir(root, e), f"bucket_{bucket}.npy")
         if os.path.exists(p):
             arr = np.load(p, allow_pickle=False)
-            return _from_array(arr)
+            if arr.ndim != 1 or arr.dtype != np.uint8:
+                raise ValueError(f"{p}: not a bloom bitmap (shape {arr.shape}, dtype {arr.dtype})")
+            return BloomFilter(n_bits=int(arr.shape[0]) * 8, bits=arr)
     return None
 
 
@@ -125,148 +129,15 @@ def update_bucket(
     epoch: int,
     keys: np.ndarray,
     capacity: int = 1 << 16,
-    kind: str = "bloom",
 ) -> None:
-    """Add keys to the bucket's filter and persist it at `epoch`
-    (atomic tmp+rename; based on the last filter at ≤ epoch-1 so a
-    crashed half-epoch write is never compounded). `kind` selects the
-    filter for a NEW bucket; existing buckets keep their own kind."""
-    f = load_bucket(root, bucket, epoch - 1) or make_filter(kind, capacity)
+    """Add keys to the bucket's bloom and persist it at `epoch`
+    (atomic tmp+rename; based on the last bloom at ≤ epoch-1 so a
+    crashed half-epoch write is never compounded)."""
+    f = load_bucket(root, bucket, epoch - 1) or BloomFilter.for_capacity(capacity)
     f.add(keys)
-    arr = f.table if isinstance(f, CuckooFilter) else f.bits
     d = _bloom_dir(root, epoch)
     os.makedirs(d, exist_ok=True)
     tmp = os.path.join(d, f".bucket_{bucket}.tmp.npy")
     with open(tmp, "wb") as fh:  # np.save on a path would re-append .npy
-        np.save(fh, arr, allow_pickle=False)
+        np.save(fh, f.bits, allow_pickle=False)
     os.replace(tmp, os.path.join(d, f"bucket_{bucket}.npy"))
-
-
-# ---------------------------------------------------------------------------
-# Cuckoo filter — the promised fallback behind the same probe/update
-# interface (SURVEY M3). Same no-false-negative contract as the bloom,
-# plus DELETION (a bloom cannot unset bits; a cuckoo removes one copy of
-# a fingerprint), which a recrawl-after-expiry policy needs.
-# Layout: n_buckets × 4 slots of 16-bit fingerprints (0 = empty);
-# candidate buckets i1 = h(x), i2 = i1 ^ h(fp) — the classic partial-key
-# cuckoo scheme. contains() is fully vectorized; add() kicks at most
-# MAX_KICKS times per key.
-# ---------------------------------------------------------------------------
-
-_MAX_KICKS = 500
-
-
-class CuckooFilter:
-    def __init__(self, n_buckets: int, slots: int = 4, table: np.ndarray | None = None):
-        if table is not None:
-            self.table = table
-            self.n_buckets, self.slots = table.shape
-        else:
-            n = 1
-            while n < n_buckets:
-                n <<= 1  # power of two so i1 ^ h(fp) stays in range
-            self.n_buckets, self.slots = n, slots
-            self.table = np.zeros((n, slots), dtype=np.uint16)
-
-    @classmethod
-    def for_capacity(cls, capacity: int) -> "CuckooFilter":
-        # 4 slots/bucket at ~95% max load → buckets ≥ capacity/3.8
-        return cls(max(256, int(capacity / 3.8) + 1))
-
-    def _fp(self, keys: np.ndarray) -> np.ndarray:
-        fp = (_mix(keys.astype(np.uint64)) & np.uint64(0xFFFF)).astype(np.uint16)
-        fp[fp == 0] = 1  # 0 means empty slot
-        return fp
-
-    def _i1(self, keys: np.ndarray) -> np.ndarray:
-        with np.errstate(over="ignore"):
-            return (_mix(keys.astype(np.uint64) + _GOLDEN) % np.uint64(self.n_buckets)).astype(np.int64)
-
-    def _alt(self, i: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        return (i ^ (_mix(fp.astype(np.uint64)) % np.uint64(self.n_buckets)).astype(np.int64)) % self.n_buckets
-
-    @property
-    def saturated(self) -> bool:
-        """Over-capacity sentinel: a 1×1 table means the filter gave up
-        and answers maybe-seen for EVERYTHING. Graceful like a saturated
-        bloom — the exact anti-join authority still guarantees
-        correctness; only the prefilter benefit is lost for this bucket
-        (partial-key cuckoos cannot resize in place: bucket indices
-        derive from the lost original keys)."""
-        return self.table.size == 1
-
-    def _saturate(self) -> None:
-        self.table = np.zeros((1, 1), dtype=np.uint16)
-        self.n_buckets, self.slots = 1, 1
-
-    def add(self, keys: np.ndarray) -> None:
-        if len(keys) == 0 or self.saturated:
-            return
-        keys = np.asarray(keys)
-        fps, i1s = self._fp(keys), self._i1(keys)
-        for fp, i in zip(fps, i1s):
-            fp = np.uint16(fp)
-            i = int(i)
-            for bucket in (i, int(self._alt(np.int64(i), np.uint16(fp)))):
-                empty = np.flatnonzero(self.table[bucket] == 0)
-                if len(empty):
-                    self.table[bucket, empty[0]] = fp
-                    break
-            else:
-                # kick loop: evict a deterministic slot and relocate it
-                cur = i
-                for kick in range(_MAX_KICKS):
-                    slot = kick % self.slots
-                    fp, self.table[cur, slot] = self.table[cur, slot], fp
-                    cur = int(self._alt(np.int64(cur), np.uint16(fp)))
-                    empty = np.flatnonzero(self.table[cur] == 0)
-                    if len(empty):
-                        self.table[cur, empty[0]] = fp
-                        break
-                else:
-                    self._saturate()  # over capacity → degrade, never crash
-                    return
-
-    def contains(self, keys: np.ndarray) -> np.ndarray:
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        if self.saturated:
-            return np.ones(len(keys), dtype=bool)  # all maybe-seen
-        keys = np.asarray(keys)
-        fps, i1 = self._fp(keys), self._i1(keys)
-        i2 = self._alt(i1, fps)
-        hit1 = (self.table[i1] == fps[:, None]).any(axis=1)
-        hit2 = (self.table[i2] == fps[:, None]).any(axis=1)
-        return hit1 | hit2
-
-    def delete(self, keys: np.ndarray) -> np.ndarray:
-        """Remove ONE stored copy per present key; returns per-key found flags."""
-        keys = np.asarray(keys)
-        if self.saturated:
-            return np.zeros(len(keys), dtype=bool)
-        fps, i1s = self._fp(keys), self._i1(keys)
-        out = np.zeros(len(keys), dtype=bool)
-        for n, (fp, i) in enumerate(zip(fps, i1s)):
-            for bucket in (int(i), int(self._alt(np.int64(i), np.uint16(fp)))):
-                slots = np.flatnonzero(self.table[bucket] == fp)
-                if len(slots):
-                    self.table[bucket, slots[0]] = 0
-                    out[n] = True
-                    break
-        return out
-
-
-def make_filter(kind: str, capacity: int):
-    """Factory behind the seen-set interface: 'bloom' (default) or 'cuckoo'."""
-    if kind == "cuckoo":
-        return CuckooFilter.for_capacity(capacity)
-    return BloomFilter.for_capacity(capacity)
-
-
-def _from_array(arr: np.ndarray):
-    """Persisted array → filter (bloom = 1-D uint8 bitmap, cuckoo = 2-D
-    uint16 slot table) — the loader auto-detects, so probe code is
-    filter-agnostic."""
-    if arr.ndim == 2:
-        return CuckooFilter(arr.shape[0], table=arr)
-    return BloomFilter(n_bits=int(arr.shape[0]) * 8, bits=arr)

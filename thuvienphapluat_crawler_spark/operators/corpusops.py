@@ -25,7 +25,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _dot, as_double, cosine
+from .similarity import _dot, _topk_by_cosine, as_double
 from .textstats import tokens
 
 # ---------------------------------------------------------------------------
@@ -416,19 +416,7 @@ def ivf_topk(
         .withColumn("cid", F.explode(ivf_probe_lists(F.col("qe"), cents, nprobe)))
     )
     cand = corpus.join(F.broadcast(probes), "cid").filter(F.col("nid") != F.col("qid"))
-    sims = cand.withColumn("sim", F.round(cosine(F.col("qe"), F.col("ne")), 6))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (
-        sims.select("qid", "nid", "sim", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("nid").alias("neighbor_id"),
-            F.col("rank"),
-        )
-    )
+    return _topk_by_cosine(cand, k)
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,14 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths:
+Two paths, one shared top-k tail (_topk_by_cosine):
   brute force — exact cosine top-k. The queries side is tiny (top-k for a
       handful of probes) → broadcast the queries, stream the corpus once:
       cost O(|corpus|·|queries|·dim) with NO shuffle of the corpus.
-  LSH (random hyperplanes) — sign-bit bucket per vector from D seeded
-      hyperplanes; candidates share a bucket → top-k within bucket. The
-      scale path: one narrow map to bucket ids, then a bucket-equi-join.
+  LSH (random hyperplanes) — lsh_topk: sign-bit bucket per vector and
+      per hyperplane table; candidates share a bucket with one of the
+      query's probes in any table → exact cosine top-k over the
+      candidates. One table, several tables and multi-probe are the same
+      call with different tables / max_flips.
 
 Cosine is computed with explicit fold arithmetic (dot/(√aa·√bb)) in
 float64, summing in index order, so a SQL oracle (list_inner_product)
@@ -41,6 +43,18 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
+def _topk_by_cosine(cand: DataFrame, k: int) -> DataFrame:
+    """Shared top-k tail: exact cosine over (qid, qe, nid, ne) candidate
+    pairs, rounded to 6 places, ranked per query by (sim desc, nid)."""
+    sims = cand.withColumn("sim", F.round(cosine(F.col("qe"), F.col("ne")), 6))
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), "nid")
+    return (
+        sims.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select(F.col("qid").alias("query_id"), F.col("nid").alias("neighbor_id"), F.col("rnk").alias("rank"))
+    )
+
+
 def brute_force_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -54,66 +68,24 @@ def brute_force_topk(
         emb.filter(F.col(id_col).isin(query_ids))
         .select(F.col(id_col).alias("qid"), as_double(F.col(vec_col)).alias("qe"))
     )
-    sims = (
-        vecs.join(F.broadcast(queries), F.col("nid") != F.col("qid"))
-        .withColumn("sim", F.round(cosine(F.col("qe"), F.col("ne")), 6))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), "nid")
-    return (
-        sims.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(F.col("qid").alias("query_id"), F.col("nid").alias("neighbor_id"), F.col("rnk").alias("rank"))
-    )
-
-
-def lsh_bucket(vec: Column) -> Column:
-    """Random-hyperplane signature: bit p set iff <v, plane_p> > 0."""
-    sig = F.lit(0)
-    for p, plane in enumerate(HYPERPLANES):
-        plane_col = F.array(*[F.lit(x) for x in plane])
-        sig = sig + F.when(_dot(vec, plane_col) > 0, F.lit(2**p)).otherwise(F.lit(0))
-    return sig
-
-
-def lsh_ann_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: exact cosine, but only within the query's LSH
-    bucket. One narrow bucket-id projection + bucket equi-join — the
-    shape that survives 10^9-vector corpora (bucket is the shuffle key)."""
-    vecs = emb.select(
-        F.col(id_col).alias("nid"),
-        as_double(F.col(vec_col)).alias("ne"),
-    ).withColumn("bucket", lsh_bucket(F.col("ne")))
-    queries = (
-        vecs.filter(F.col("nid").isin(query_ids))
-        .select(F.col("nid").alias("qid"), F.col("ne").alias("qe"), "bucket")
-    )
-    sims = (
-        vecs.join(F.broadcast(queries), "bucket")
-        .filter(F.col("nid") != F.col("qid"))
-        .withColumn("sim", F.round(cosine(F.col("qe"), F.col("ne")), 6))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), "nid")
-    return (
-        sims.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(F.col("qid").alias("query_id"), F.col("nid").alias("neighbor_id"), F.col("rnk").alias("rank"))
-    )
+    return _topk_by_cosine(vecs.join(F.broadcast(queries), F.col("nid") != F.col("qid")), k)
 
 
 # ---------------------------------------------------------------------------
-# Multi-table LSH — the production ANN shape. A single P-plane table has
+# LSH top-k over L sign-hyperplane tables. A single P-plane table has
 # 2^P buckets; at 10^9 vectors each bucket still holds millions AND true
 # neighbors split across bucket boundaries cost recall. L independent
 # tables with fewer planes each: a candidate is anything sharing ANY
 # table's bucket with the query — recall ≈ 1-(1-p^P)^L instead of p^P —
-# and the per-table bucket key remains the shuffle key (cost is L narrow
-# projections + L bucket equi-joins, still never O(n²)).
+# and the per-table bucket key remains the join key (cost is the corpus
+# exploded L-fold, one row per table bucket, + one broadcast bucket join,
+# never O(n²)).
+# Multi-probe (the Lv et al. VLDB'07 idea on sign-LSH) keeps the same
+# index but lets each query also probe every bucket within Hamming
+# distance max_flips of its own signature: near neighbors that fell a
+# sign-bit or two across a boundary become candidates without building
+# more tables; the extra cost is probe rows only (|Q|·L·Σ C(P,f), still
+# broadcast).
 # ---------------------------------------------------------------------------
 
 LSH_TABLES = 4
@@ -141,62 +113,12 @@ NEARDUP_HYPERPLANES: list[list[list[float]]] = _make_hyperplanes(NEARDUP_TABLES,
 
 
 def planes_bucket(vec: Column, planes: list[list[float]]) -> Column:
+    """Random-hyperplane signature: bit p set iff <v, plane_p> > 0."""
     sig = F.lit(0)
     for p, plane in enumerate(planes):
         plane_col = F.array(*[F.lit(x) for x in plane])
         sig = sig + F.when(_dot(vec, plane_col) > 0, F.lit(2**p)).otherwise(F.lit(0))
     return sig
-
-
-def lsh_table_bucket(vec: Column, table: int) -> Column:
-    return planes_bucket(vec, HYPERPLANE_TABLES[table])
-
-
-def lsh_multitable_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k with L independent hash tables: candidate set =
-    union over tables of the query's bucket mates; exact cosine on the
-    DISTINCT candidates only. The bucket projections are narrow
-    (id + L ints); the 64-dim vectors join in once, at the end, keyed on
-    the candidate id — vectors never fan out L-fold."""
-    vecs = emb.select(F.col(id_col).alias("nid"), as_double(F.col(vec_col)).alias("ne"))
-    buckets = vecs.select(
-        "nid", *[lsh_table_bucket(F.col("ne"), t).alias(f"b{t}") for t in range(LSH_TABLES)]
-    )
-    narrow = buckets.select(
-        "nid",
-        F.explode(
-            F.array(*[F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("b")) for t in range(LSH_TABLES)])
-        ).alias("tb"),
-    ).select("nid", F.col("tb.t").alias("t"), F.col("tb.b").alias("b"))
-    qn = narrow.filter(F.col("nid").isin(query_ids)).select(
-        F.col("nid").alias("qid"), "t", "b"
-    )
-    cand = (
-        narrow.join(F.broadcast(qn), ["t", "b"])
-        .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid")
-        .distinct()
-    )
-    queries = vecs.filter(F.col("nid").isin(query_ids)).select(
-        F.col("nid").alias("qid"), F.col("ne").alias("qe")
-    )
-    sims = (
-        cand.join(vecs, "nid")
-        .join(F.broadcast(queries), "qid")
-        .withColumn("sim", F.round(cosine(F.col("qe"), F.col("ne")), 6))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), "nid")
-    return (
-        sims.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(F.col("qid").alias("query_id"), F.col("nid").alias("neighbor_id"), F.col("rnk").alias("rank"))
-    )
 
 
 # Probe radius for emb_knn_multiprobe (and its oracle — the mask list is
@@ -218,58 +140,54 @@ def probe_masks(n_planes: int, max_flips: int) -> list[int]:
     ]
 
 
-def lsh_multiprobe_topk(
+def lsh_candidates(
     emb: DataFrame,
     query_ids: list[int],
-    k: int = 5,
+    tables: list[list[list[float]]],
+    max_flips: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_flips: int = MULTIPROBE_MAX_FLIPS,
 ) -> DataFrame:
-    """Multi-probe LSH (the Lv et al. VLDB'07 idea on sign-LSH): the
-    corpus index is UNCHANGED — same L tables, same bucket projections —
-    but each query also probes every bucket within Hamming distance
-    max_flips of its own signature. Near neighbors that fell a sign-bit
-    or two across a boundary become candidates without building more
-    tables; the extra cost is probe rows only (|Q|·L·Σ C(P,f) narrow
-    rows, still broadcast). Recall tail fix for the random-top-k probes
-    the single-bucket variant misses."""
+    """(qid, qe, nid, ne) candidate pairs: every vector sharing a bucket
+    with one of the query's probes in any table. Each vector explodes to
+    one (nid, ne, t, b) row per table; the query probes (its own bucket,
+    XOR-ed by the probe masks when max_flips > 0) are broadcast-joined on
+    (t, b). A pair can only repeat across tables or probes, so the
+    distinct runs only then."""
     vecs = emb.select(F.col(id_col).alias("nid"), as_double(F.col(vec_col)).alias("ne"))
-    buckets = vecs.select(
-        "nid", *[lsh_table_bucket(F.col("ne"), t).alias(f"b{t}") for t in range(LSH_TABLES)]
+    per_table = [
+        F.struct(F.lit(t).alias("t"), planes_bucket(F.col("ne"), planes).alias("b"))
+        for t, planes in enumerate(tables)
+    ]
+    buckets = vecs.select("nid", "ne", F.explode(F.array(*per_table)).alias("tb")).select(
+        "nid", "ne", "tb.t", "tb.b"
     )
-    narrow = buckets.select(
-        "nid",
-        F.explode(
-            F.array(*[F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("b")) for t in range(LSH_TABLES)])
-        ).alias("tb"),
-    ).select("nid", F.col("tb.t").alias("t"), F.col("tb.b").alias("b"))
-    masks = probe_masks(LSH_PLANES_PER_TABLE, max_flips)
-    probes = (
-        narrow.filter(F.col("nid").isin(query_ids))
-        .select(F.col("nid").alias("qid"), "t", "b")
-        .select(
-            "qid", "t",
-            F.explode(F.array(*[F.col("b").bitwiseXOR(F.lit(m)) for m in masks])).alias("b"),
-        )
+    masks = probe_masks(len(tables[0]), max_flips)
+    probes = buckets.filter(F.col("nid").isin(query_ids)).select(
+        F.col("nid").alias("qid"),
+        F.col("ne").alias("qe"),
+        "t",
+        F.explode(F.array(*[F.col("b").bitwiseXOR(F.lit(m)) for m in masks])).alias("b"),
     )
     cand = (
-        narrow.join(F.broadcast(probes), ["t", "b"])
+        buckets.join(F.broadcast(probes), ["t", "b"])
         .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid")
-        .distinct()
+        .select("qid", "qe", "nid", "ne")
     )
-    queries = vecs.filter(F.col("nid").isin(query_ids)).select(
-        F.col("nid").alias("qid"), F.col("ne").alias("qe")
-    )
-    sims = (
-        cand.join(vecs, "nid")
-        .join(F.broadcast(queries), "qid")
-        .withColumn("sim", F.round(cosine(F.col("qe"), F.col("ne")), 6))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), "nid")
-    return (
-        sims.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(F.col("qid").alias("query_id"), F.col("nid").alias("neighbor_id"), F.col("rnk").alias("rank"))
-    )
+    return cand.distinct() if len(tables) > 1 or len(masks) > 1 else cand
+
+
+def lsh_topk(
+    emb: DataFrame,
+    query_ids: list[int],
+    tables: list[list[list[float]]],
+    k: int = 5,
+    max_flips: int = 0,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Approximate top-k: exact cosine, but only over the LSH candidates
+    of lsh_candidates. One table with max_flips=0 is the classic
+    single-bucket search; several tables take the union of bucket mates;
+    max_flips > 0 adds the multi-probe buckets on the same index."""
+    return _topk_by_cosine(lsh_candidates(emb, query_ids, tables, max_flips, id_col, vec_col), k)

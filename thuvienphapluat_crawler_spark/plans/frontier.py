@@ -83,7 +83,6 @@ class CrawlEngine:
         root: str,
         n_buckets: int = 8,
         seeds_per_host: int = 2,
-        filter_kind: str = "bloom",
         content: str = "spans",
         robots: bool = False,
     ):
@@ -92,7 +91,6 @@ class CrawlEngine:
         self.wh = SnapshotWarehouse(root)
         self.n_buckets = n_buckets
         self.seeds_per_host = seeds_per_host
-        self.filter_kind = filter_kind  # 'bloom' | 'cuckoo' (same interface)
         # robots=True: per-host robots.txt TEXT is parsed (sources/robots)
         # into a broadcast rule dim; disallowed URLs are filtered out of
         # every epoch's batch BEFORE ranking, and the fetch stage takes
@@ -273,11 +271,11 @@ class CrawlEngine:
         """Distributed bloom update: one applyInPandas task per bucket
         writes its own .npy (atomic rename); buckets with no new keys
         keep their previous file (walk-back read)."""
-        root, kind = self.wh.root, self.filter_kind
+        root = self.wh.root
 
         def upd(pdf: pd.DataFrame) -> pd.DataFrame:
             b = int(pdf["host_bucket"].iloc[0])
-            B.update_bucket(root, b, epoch, pdf["url_hash"].to_numpy(dtype=np.int64), kind=kind)
+            B.update_bucket(root, b, epoch, pdf["url_hash"].to_numpy(dtype=np.int64))
             return pd.DataFrame({"host_bucket": [b], "n": [len(pdf)]})
 
         counts = (
@@ -286,6 +284,77 @@ class CrawlEngine:
             .applyInPandas(upd, "host_bucket int, n long")
         )
         counts.collect()  # action: materialize the writes
+
+    def _discover(self, ok: DataFrame, frontier: DataFrame, epoch: int) -> tuple[DataFrame, DataFrame]:
+        """Outlinks of the ok fetches → (probed candidates, confirmed-new
+        frontier rows): bloom prefilter, then the exact anti-join."""
+        links = ok.select("canonical_url", "depth").mapInPandas(self._outlinks_fn(), OUTLINK_SCHEMA)
+        # one shuffle, not two: frontier columns are per-URL expressions, so
+        # compute them BEFORE the exchange, repartition by host_bucket once,
+        # and fold duplicate outlinks (min-depth) colocated — the groupBy
+        # keys contain host_bucket, so the agg reuses the repartition
+        # layout instead of adding its own url-keyed exchange.
+        ann = self._frontier_cols(
+            links.withColumnRenamed("out_url", "canonical_url"), "src_depth", epoch + 1
+        )
+        frontier_cols = [f.split()[0] for f in FRONTIER_SCHEMA.split(", ")]
+        id_cols = [c for c in frontier_cols if c != "depth"]
+        cands = (
+            ann.repartition(self.n_buckets, "host_bucket")
+            .groupBy(*id_cols)
+            .agg((F.min("depth") + 1).cast("int").alias("depth"))
+            .select(*frontier_cols)
+        )
+
+        probed = cands.mapInPandas(self._bloom_probe_fn(epoch - 1), FRONTIER_SCHEMA + ", maybe_seen boolean")
+        probed = probed.localCheckpoint()
+        fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
+        confirmed = (
+            probed.filter(F.col("maybe_seen"))
+            .drop("maybe_seen")
+            .join(frontier.select("url_fp"), "url_fp", "left_anti")
+        )
+        new_rows = fresh.unionByName(confirmed).localCheckpoint()
+        return probed, new_rows
+
+    def _checkpoints(self, fetched: DataFrame, probed: DataFrame, new_rows: DataFrame, epoch: int) -> DataFrame:
+        """Per-bucket lineage + metrics for the checkpoints table (the
+        distributed progress.json, ocr/ocr_pdf.py:77-88,179-195)."""
+        lineage = json.dumps(
+            {"epoch": epoch, "bloom_base": epoch - 1, "manifest_epochs": self.wh.read_manifest()["epochs"]}
+        )
+        fstats = fetched.groupBy("host_bucket").agg(
+            F.count("*").alias("n_fetched"),
+            F.sum((F.col("status") == "ok").cast("long")).alias("n_ok"),
+            F.sum((F.col("status") == "error").cast("long")).alias("n_error"),
+            F.sum("attempts").alias("n_attempts"),
+            F.max("fetch_slot").alias("max_fetch_slot"),
+            F.count("*").alias("n_ranked"),
+        )
+        # candidate + new counts in ONE union-based pass (was two
+        # aggregations + an extra full_outer join)
+        cnstats = (
+            probed.select("host_bucket", F.lit(1).alias("_c"), F.lit(0).alias("_n"))
+            .unionByName(new_rows.select("host_bucket", F.lit(0).alias("_c"), F.lit(1).alias("_n")))
+            .groupBy("host_bucket")
+            .agg(F.sum("_c").alias("n_candidates"), F.sum("_n").alias("n_new"))
+        )
+        return (
+            fstats.join(cnstats, "host_bucket", "full_outer")
+            .select(
+                F.col("host_bucket").alias("partition_id"),
+                F.lit(epoch).cast("int").alias("epoch"),
+                F.coalesce("n_ranked", F.lit(0)).cast("long").alias("n_ranked"),
+                F.coalesce("n_fetched", F.lit(0)).cast("long").alias("n_fetched"),
+                F.coalesce("n_ok", F.lit(0)).cast("long").alias("n_ok"),
+                F.coalesce("n_error", F.lit(0)).cast("long").alias("n_error"),
+                F.coalesce("n_attempts", F.lit(0)).cast("long").alias("n_attempts"),
+                F.coalesce("n_candidates", F.lit(0)).cast("long").alias("n_candidates"),
+                F.coalesce("n_new", F.lit(0)).cast("long").alias("n_new"),
+                F.coalesce("max_fetch_slot", F.lit(0.0)).alias("max_fetch_slot"),
+                F.lit(lineage).alias("lineage"),
+            )
+        )
 
     # -- one epoch ---------------------------------------------------------
 
@@ -353,85 +422,31 @@ class CrawlEngine:
         # manifest commit still happens strictly after ALL writes land, so
         # atomicity/resume semantics are unchanged.
         pool = ThreadPoolExecutor(max_workers=3)
-        early_futs = [
-            pool.submit(wh.stage, "crawl_log", epoch, fetched),
-            pool.submit(wh.stage, "docs", epoch, docs),
-        ]
-
-        links = ok.select("canonical_url", "depth").mapInPandas(self._outlinks_fn(), OUTLINK_SCHEMA)
-        # one shuffle, not two: frontier columns are per-URL expressions, so
-        # compute them BEFORE the exchange, repartition by host_bucket once,
-        # and fold duplicate outlinks (min-depth) colocated — the groupBy
-        # keys contain host_bucket, so the agg reuses the repartition
-        # layout instead of adding its own url-keyed exchange.
-        ann = self._frontier_cols(
-            links.withColumnRenamed("out_url", "canonical_url"), "src_depth", epoch + 1
-        )
-        frontier_cols = [f.split()[0] for f in FRONTIER_SCHEMA.split(", ")]
-        id_cols = [c for c in frontier_cols if c != "depth"]
-        cands = (
-            ann.repartition(self.n_buckets, "host_bucket")
-            .groupBy(*id_cols)
-            .agg((F.min("depth") + 1).cast("int").alias("depth"))
-            .select(*frontier_cols)
-        )
-
-        probed = cands.mapInPandas(self._bloom_probe_fn(epoch - 1), FRONTIER_SCHEMA + ", maybe_seen boolean")
-        probed = probed.localCheckpoint()
-        fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        confirmed = (
-            probed.filter(F.col("maybe_seen"))
-            .drop("maybe_seen")
-            .join(frontier.select("url_fp"), "url_fp", "left_anti")
-        )
-        new_rows = fresh.unionByName(confirmed).localCheckpoint()
-
-        # per-bucket lineage + metrics (the distributed progress.json,
-        # ocr/ocr_pdf.py:77-88,179-195)
-        lineage = json.dumps(
-            {"epoch": epoch, "bloom_base": epoch - 1, "manifest_epochs": wh.read_manifest()["epochs"]}
-        )
-        fstats = fetched.groupBy("host_bucket").agg(
-            F.count("*").alias("n_fetched"),
-            F.sum((F.col("status") == "ok").cast("long")).alias("n_ok"),
-            F.sum((F.col("status") == "error").cast("long")).alias("n_error"),
-            F.sum("attempts").alias("n_attempts"),
-            F.max("fetch_slot").alias("max_fetch_slot"),
-            F.count("*").alias("n_ranked"),
-        )
-        # candidate + new counts in ONE union-based pass (was two
-        # aggregations + an extra full_outer join)
-        cnstats = (
-            probed.select("host_bucket", F.lit(1).alias("_c"), F.lit(0).alias("_n"))
-            .unionByName(new_rows.select("host_bucket", F.lit(0).alias("_c"), F.lit(1).alias("_n")))
-            .groupBy("host_bucket")
-            .agg(F.sum("_c").alias("n_candidates"), F.sum("_n").alias("n_new"))
-        )
-        checkpoints = (
-            fstats.join(cnstats, "host_bucket", "full_outer")
-            .select(
-                F.col("host_bucket").alias("partition_id"),
-                F.lit(epoch).cast("int").alias("epoch"),
-                F.coalesce("n_ranked", F.lit(0)).cast("long").alias("n_ranked"),
-                F.coalesce("n_fetched", F.lit(0)).cast("long").alias("n_fetched"),
-                F.coalesce("n_ok", F.lit(0)).cast("long").alias("n_ok"),
-                F.coalesce("n_error", F.lit(0)).cast("long").alias("n_error"),
-                F.coalesce("n_attempts", F.lit(0)).cast("long").alias("n_attempts"),
-                F.coalesce("n_candidates", F.lit(0)).cast("long").alias("n_candidates"),
-                F.coalesce("n_new", F.lit(0)).cast("long").alias("n_new"),
-                F.coalesce("max_fetch_slot", F.lit(0.0)).alias("max_fetch_slot"),
-                F.lit(lineage).alias("lineage"),
-            )
-        )
-
+        futs = []
         try:
-            futs = early_futs + [
+            futs += [
+                pool.submit(wh.stage, "crawl_log", epoch, fetched),
+                pool.submit(wh.stage, "docs", epoch, docs),
+            ]
+            probed, new_rows = self._discover(ok, frontier, epoch)
+            checkpoints = self._checkpoints(fetched, probed, new_rows, epoch)
+            futs += [
                 pool.submit(wh.stage, "frontier", epoch, new_rows.repartition(self.n_buckets, "host_bucket")),
                 pool.submit(wh.stage, "checkpoints", epoch, checkpoints),
                 pool.submit(self._bloom_update, new_rows, epoch),
             ]
             for f in futs:
                 f.result()  # propagate the first failure, never commit partial
+        except BaseException as e:
+            # drop the writes not yet started, wait for the running ones,
+            # and keep their errors on the one that propagates
+            for f in futs:
+                f.cancel()
+            for f in futs:
+                err = None if f.cancelled() else f.exception()
+                if err is not None and err is not e:
+                    e.add_note(f"epoch {epoch} write also failed: {err!r}")
+            raise
         finally:
             pool.shutdown(wait=True)
         wh.commit_epoch(

@@ -1416,7 +1416,7 @@ def emb_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-id projection is one narrow map; candidate join keys on the
     bucket — the layout that scales to 10^9 vectors."""
     emb = _fanout(load(spark, sf_dir, "embeddings"), spark)
-    return S.lsh_ann_topk(emb, _KNN_QUERY_IDS, k=5).orderBy("query_id", "rank")
+    return S.lsh_topk(emb, _KNN_QUERY_IDS, [S.HYPERPLANES], k=5).orderBy("query_id", "rank")
 
 
 def _duck_bucket_expr(t: int, tables=None) -> str:
@@ -1459,10 +1459,10 @@ def emb_knn_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table LSH ANN (the production index shape): L=4 independent
     6-plane tables; candidates = union of the query's bucket mates
     across tables (recall 1-(1-p^6)^4 instead of p^8); exact cosine on
-    distinct candidates only. Vectors never fan out L-fold — the bucket
-    projections are (id, table, bucket) narrow rows."""
+    distinct candidates only. Each vector rides along its L (table,
+    bucket) rows, so candidates never join back to the corpus by id."""
     emb = _fanout(load(spark, sf_dir, "embeddings"), spark)
-    return S.lsh_multitable_topk(emb, _KNN_QUERY_IDS, k=5).orderBy("query_id", "rank")
+    return S.lsh_topk(emb, _KNN_QUERY_IDS, S.HYPERPLANE_TABLES, k=5).orderBy("query_id", "rank")
 
 
 def _lsh_multiprobe_oracle() -> str:
@@ -1501,7 +1501,9 @@ def emb_knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     harness (tools/ann_recall.py): recall@5 uplift over the single-probe
     variant at the same table count."""
     emb = _fanout(load(spark, sf_dir, "embeddings"), spark)
-    return S.lsh_multiprobe_topk(emb, _KNN_QUERY_IDS, k=5).orderBy("query_id", "rank")
+    return S.lsh_topk(
+        emb, _KNN_QUERY_IDS, S.HYPERPLANE_TABLES, k=5, max_flips=S.MULTIPROBE_MAX_FLIPS
+    ).orderBy("query_id", "rank")
 
 
 def _emb_near_dup_ctes() -> str:

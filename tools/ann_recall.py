@@ -32,31 +32,10 @@ def recall(approx: dict[int, set[int]], exact: dict[int, set[int]], k: int) -> f
     return sum(per) / len(per)
 
 
-def cand_avg(vecs, probes: list[int], multiprobe: int) -> float:
+def cand_avg(emb, probes: list[int], tables, max_flips: int = 0) -> float:
     """Average candidate-set size per query (the cost side of the
-    recall/cost tradeoff), mirroring the operators' candidate stage."""
-    buckets = vecs.select(
-        "nid", *[S.lsh_table_bucket(F.col("ne"), t).alias(f"b{t}") for t in range(S.LSH_TABLES)]
-    )
-    narrow = buckets.select(
-        "nid",
-        F.explode(
-            F.array(*[F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("b")) for t in range(S.LSH_TABLES)])
-        ).alias("tb"),
-    ).select("nid", F.col("tb.t").alias("t"), F.col("tb.b").alias("b"))
-    qn = narrow.filter(F.col("nid").isin(probes)).select(F.col("nid").alias("qid"), "t", "b")
-    if multiprobe:
-        masks = S.probe_masks(S.LSH_PLANES_PER_TABLE, multiprobe)
-        qn = qn.select(
-            "qid", "t",
-            F.explode(F.array(*[F.col("b").bitwiseXOR(F.lit(m)) for m in masks])).alias("b"),
-        )
-    cand = (
-        narrow.join(F.broadcast(qn), ["t", "b"])
-        .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid")
-        .distinct()
-    )
+    recall/cost tradeoff): rows of lsh_topk's own candidate stage."""
+    cand = S.lsh_candidates(emb, probes, tables, max_flips)
     rows = cand.groupBy("qid").count().agg(F.avg("count")).collect()
     return float(rows[0][0] or 0.0)
 
@@ -65,7 +44,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 20
     k = int(sys.argv[3]) if len(sys.argv) > 3 else 5
-    spark = get_spark(app_name="ann-recall", cpus=16)
+    spark = get_spark(app_name="ann-recall")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     n = emb.count()
     probes = [r.vec_id for r in emb.select("vec_id").orderBy("vec_id").limit(n_probes).collect()]
@@ -95,12 +74,13 @@ def main() -> None:
         if r.sim >= 0.9:
             strong.setdefault(r.qid, set()).add(r.nid)
 
-    single = topk_sets(S.lsh_ann_topk(emb, probes, k=k))
-    multi = topk_sets(S.lsh_multitable_topk(emb, probes, k=k))
-    multiprobe = topk_sets(S.lsh_multiprobe_topk(emb, probes, k=k, max_flips=1))
-    multiprobe2 = topk_sets(S.lsh_multiprobe_topk(emb, probes, k=k, max_flips=2))
+    tables = S.HYPERPLANE_TABLES
+    single = topk_sets(S.lsh_topk(emb, probes, [S.HYPERPLANES], k=k))
+    multi = topk_sets(S.lsh_topk(emb, probes, tables, k=k))
+    multiprobe = topk_sets(S.lsh_topk(emb, probes, tables, k=k, max_flips=1))
+    multiprobe2 = topk_sets(S.lsh_topk(emb, probes, tables, k=k, max_flips=2))
 
-    single_b = vecs.withColumn("bucket", S.lsh_bucket(F.col("ne")))
+    single_b = vecs.withColumn("bucket", S.planes_bucket(F.col("ne"), S.HYPERPLANES))
     sizes1 = single_b.groupBy("bucket").count().agg(F.avg("count")).collect()[0][0]
 
     n_strong = sum(len(v) for v in strong.values())
@@ -108,11 +88,11 @@ def main() -> None:
     print(f"single-table ({S.LSH_PLANES} planes):   recall@{k} = {recall(single, exact, k):.3f}  "
           f"(avg bucket {sizes1:.0f} of {n})")
     print(f"multi-table ({S.LSH_TABLES}x{S.LSH_PLANES_PER_TABLE} planes): recall@{k} = "
-          f"{recall(multi, exact, k):.3f}  (avg candidates {cand_avg(vecs, probes, 0):.0f})")
+          f"{recall(multi, exact, k):.3f}  (avg candidates {cand_avg(emb, probes, tables):.0f})")
     print(f"multi-probe (same index, flip<=1): recall@{k} = "
-          f"{recall(multiprobe, exact, k):.3f}  (avg candidates {cand_avg(vecs, probes, 1):.0f})")
+          f"{recall(multiprobe, exact, k):.3f}  (avg candidates {cand_avg(emb, probes, tables, 1):.0f})")
     print(f"multi-probe (same index, flip<=2): recall@{k} = "
-          f"{recall(multiprobe2, exact, k):.3f}  (avg candidates {cand_avg(vecs, probes, 2):.0f})")
+          f"{recall(multiprobe2, exact, k):.3f}  (avg candidates {cand_avg(emb, probes, tables, 2):.0f})")
     if strong:
         print(f"strong neighbors (cos>=0.9, n={n_strong}): "
               f"single recall = {recall(single, strong, k):.3f}, "
@@ -136,18 +116,11 @@ def main() -> None:
 
     # Equal-candidate-budget control: a 20-table index reaches roughly the
     # multi-probe candidate count the expensive way (5x the index build +
-    # memory). Plane literals bake into the plan at build time, so a scoped
-    # override of the table set is driver-side only.
-    saved_tables, saved_n = S.HYPERPLANE_TABLES, S.LSH_TABLES
-    try:
-        S.HYPERPLANE_TABLES = S._make_hyperplanes(20, S.LSH_PLANES_PER_TABLE, 99)
-        S.LSH_TABLES = 20
-        big = topk_sets(S.lsh_multitable_topk(emb, probes, k=k))
-        big_cand = cand_avg(vecs, probes, 0)
-        print(f"equal-budget control (20x{S.LSH_PLANES_PER_TABLE} tables): recall@{k} = "
-              f"{recall(big, exact, k):.3f}  (avg candidates {big_cand:.0f})")
-    finally:
-        S.HYPERPLANE_TABLES, S.LSH_TABLES = saved_tables, saved_n
+    # memory).
+    big_tables = S._make_hyperplanes(20, S.LSH_PLANES_PER_TABLE, 99)
+    big = topk_sets(S.lsh_topk(emb, probes, big_tables, k=k))
+    print(f"equal-budget control (20x{S.LSH_PLANES_PER_TABLE} tables): recall@{k} = "
+          f"{recall(big, exact, k):.3f}  (avg candidates {cand_avg(emb, probes, big_tables):.0f})")
     spark.stop()
 
 
