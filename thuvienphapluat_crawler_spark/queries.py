@@ -4847,6 +4847,7 @@ def pdf_page_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def raster(it):
+        import numpy as np
         import pandas as pd
 
         for pdf in it:
@@ -4860,7 +4861,7 @@ def pdf_page_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # decoder stays exercised by png_real_features + tests
                 png = encode_png(img, row_filters=(0, 2))
                 dec = decode_png(png)
-                ink = int((dec.sum(axis=2) == 0).sum())
+                ink = np.count_nonzero((dec[..., 0] | dec[..., 1] | dec[..., 2]) == 0)
                 rows.append(
                     (str(doc_id), "raster/p0.png", "image",
                      int(dec.shape[1]), int(dec.shape[0]), len(draws), ink, png)

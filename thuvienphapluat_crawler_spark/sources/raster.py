@@ -9,7 +9,8 @@ native library — but `build_pdf` output uses exactly one Type1 font and
 TL/Td/T*/Tj text ops, so for THAT subset a fixed-glyph rasterizer is
 complete: walk the parsed text draws (pdfdoc.parse_pdf_text_ops), scale
 page points to pixels by dpi/72 (the reference's Matrix), and paint each
-character's 5×7 bitmap at integer scale. The output is a real pixel
+character's 5×7 bitmap at integer scale, all glyphs of a page in one
+vectorized paint, clipped at every page edge. The output is a real pixel
 array that round-trips through the real PNG codec (sources/pngcodec) —
 so PDF bytes → raster → PNG → decode → features runs end-to-end with
 zero native deps, and every pixel is closed-form predictable (ink =
@@ -81,9 +82,8 @@ def glyph_rows(ch: str) -> tuple[int, ...]:
 
 @lru_cache(maxsize=None)
 def glyph_bitmap(ch: str) -> np.ndarray:
-    """(7, 5) uint8 0/1 bitmap. Memoized: the page rasterizer calls this
-    per character drawn (~10^5-10^6 times per task over a corpus) and the
-    font has a few dozen glyphs — callers only read the array."""
+    """(7, 5) uint8 0/1 bitmap. Memoized: the font has a few dozen
+    glyphs and callers only read the array."""
     rows = glyph_rows(ch)
     return np.array(
         [[(r >> (GLYPH_W - 1 - c)) & 1 for c in range(GLYPH_W)] for r in rows],
@@ -102,6 +102,16 @@ def glyph_scale(dpi: int) -> int:
     return max(1, round(dpi / 72))
 
 
+@lru_cache(maxsize=None)
+def _ink_offsets(ch: str, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(rows, cols) of the glyph's ink pixels at integer scale k, relative
+    to its top-left corner. Memoized per (glyph, scale); callers only read."""
+    bm = glyph_bitmap(ch)
+    if k > 1:
+        bm = np.repeat(np.repeat(bm, k, axis=0), k, axis=1)
+    return np.nonzero(bm)
+
+
 def rasterize_draws(
     draws: list[tuple[float, float, str]], dpi: int = 150
 ) -> np.ndarray:
@@ -109,24 +119,31 @@ def rasterize_draws(
     black glyphs on white. Geometry mirrors the reference render: pixel
     = point · dpi/72 (fitz.Matrix(dpi/72, dpi/72), ocr_pdf.py:39); the
     draw's y is the line top in our single-font subset. Glyphs paint at
-    integer scale k with a 6k-pixel character pitch; out-of-page glyph
-    pixels are clipped."""
+    integer scale k with a 6k-pixel character pitch; glyph pixels past
+    any page edge are clipped.
+
+    The page is painted once: every glyph's ink offsets are gathered with
+    its origin, shifted, clipped to the page and set to black by a single
+    fancy-index assignment."""
     s = dpi / 72.0
     w_px, h_px = round(PAGE_W_PT * s), round(PAGE_H_PT * s)
     k = glyph_scale(dpi)
     img = np.full((h_px, w_px, 3), 255, dtype=np.uint8)
+    ink_r, ink_c, origin_r, origin_c, count = [], [], [], [], []
     for x_pt, y_pt, text in draws:
         top = round((PAGE_H_PT - y_pt) * s)
         left0 = round(x_pt * s)
         for i, ch in enumerate(text):
-            bm = glyph_bitmap(ch)
-            if k > 1:
-                bm = np.repeat(np.repeat(bm, k, axis=0), k, axis=1)
-            gh, gw = bm.shape
-            r0, c0 = top, left0 + i * CHAR_PITCH * k
-            r1, c1 = min(r0 + gh, h_px), min(c0 + gw, w_px)
-            if r0 >= h_px or c0 >= w_px or r0 < 0 or c0 < 0:
-                continue
-            patch = bm[: r1 - r0, : c1 - c0].astype(bool)
-            img[r0:r1, c0:c1][patch] = 0
+            gr, gc = _ink_offsets(ch, k)
+            ink_r.append(gr)
+            ink_c.append(gc)
+            origin_r.append(top)
+            origin_c.append(left0 + i * CHAR_PITCH * k)
+            count.append(gr.size)
+    if not count:
+        return img
+    rr = np.concatenate(ink_r) + np.repeat(np.array(origin_r), count)
+    cc = np.concatenate(ink_c) + np.repeat(np.array(origin_c), count)
+    on_page = (rr >= 0) & (rr < h_px) & (cc >= 0) & (cc < w_px)
+    img[rr[on_page], cc[on_page]] = 0
     return img
