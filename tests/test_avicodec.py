@@ -75,6 +75,9 @@ def test_frame_stats_are_decoded_not_formulaic():
         lambda b: b.replace(b"vids", b"auds", 1),           # not a video stream
         lambda b: b.replace(struct.pack("<HHI", 1, 24, 0),  # MJPEG fourcc in strf
                             struct.pack("<HH", 1, 24) + b"MJPG", 1),
+        lambda b: (b[: b.index(b"strf") + 12]               # strf width 2^31-1 over the
+                   + struct.pack("<i", 2**31 - 1)           # unchanged frames: rejected
+                   + b[b.index(b"strf") + 16 :]),           # before any allocation
     ],
 )
 def test_malformed_raises(mutate):

@@ -51,3 +51,19 @@ def test_is_a_real_zip_with_expected_parts():
 def test_doc_conversion_is_environmental_stub():
     with pytest.raises(NotImplementedError):
         convert_doc_to_docx(b"\xd0\xcf\x11\xe0old-ole2")
+
+
+def test_fuzz_damaged_docx_raises_value_error(mutants):
+    """Seeded damage to a valid .docx either parses or raises ValueError
+    chained from the zip/zlib/XML error — never BadZipFile, zlib.error or
+    KeyError."""
+    outcomes = {"parsed": 0, "ValueError": 0}
+    for data in mutants(build_docx(BLOCKS), seed=6):
+        try:
+            parse_docx(data)
+        except ValueError as e:
+            assert e.__cause__ is not None or "w:body" in str(e)
+            outcomes["ValueError"] += 1
+        else:
+            outcomes["parsed"] += 1
+    assert all(outcomes.values()), outcomes

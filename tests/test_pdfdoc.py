@@ -17,6 +17,7 @@ from thuvienphapluat_crawler_spark.sources.pdfdoc import (
     pages_from_pdfs,
     parse_pdf_cells,
     parse_pdf_text,
+    parse_pdf_text_ops,
 )
 
 PAGES = [
@@ -133,3 +134,20 @@ def test_scan_objects_ignores_adversarial_stream_bytes():
     assert sorted(scanned) == [1, 2, 3, 4]  # no phantom object 99
     assert payload in scanned[4]  # body not truncated at embedded endobj
     assert parse_pdf_text(bytes(buf)) == [(0, "hello")]
+
+
+def test_fuzz_damaged_pdf_raises_typed_errors(mutants):
+    """Seeded damage to a valid Flate PDF either parses or raises
+    ValueError / NotImplementedError: a missing object, a missing /Kids
+    array or a broken Flate stream is never a KeyError, AttributeError
+    or zlib.error."""
+    outcomes = {"parsed": 0, "ValueError": 0, "NotImplementedError": 0}
+    for data in mutants(build_pdf(PAGES, compress=True), seed=5):
+        for parse in (parse_pdf_text, parse_pdf_text_ops):
+            try:
+                parse(data)
+            except (ValueError, NotImplementedError) as e:
+                outcomes[type(e).__name__] += 1
+            else:
+                outcomes["parsed"] += 1
+    assert outcomes["parsed"] and outcomes["ValueError"], outcomes

@@ -1,0 +1,69 @@
+"""flat_map_rows against its own definition: the Spark output must equal
+`fn` applied serially to the collected input rows, across many small
+Arrow batches."""
+
+from __future__ import annotations
+
+import pytest
+
+from thuvienphapluat_crawler_spark.rowmap import flat_map_rows
+
+IN_SCHEMA = "doc_id long, payload binary, tags array<string>, note string"
+OUT_SCHEMA = "doc_id long, i int, chunk binary, tags array<string>, note string, score double"
+
+
+def _expander():
+    # nested, so Spark pickles it by value: workers cannot import this module
+    def expand(doc_id, payload, tags, note):
+        # docs 0-2 (the whole first 3-record batch) yield nothing; after
+        # that 0, 1 or many rows per doc
+        n = 0 if doc_id < 3 else (doc_id * 7) % 5
+        for i in range(n):
+            yield (
+                doc_id,
+                i,
+                None if payload is None else bytes(payload[i:]),
+                None if tags is None else [*tags, None if i % 2 else f"t{i}"],
+                note,
+                None if i == 1 else doc_id / (i + 1),
+            )
+
+    return expand
+
+
+def _input_rows():
+    rows = []
+    for d in range(17):
+        payload = None if d % 6 == 5 else bytes(range(d % 4, 8))
+        tags = None if d % 5 == 4 else [f"a{d}", None][: 1 + d % 2]
+        note = None if d % 3 == 0 else f"n{d}"
+        rows.append((d, payload, tags, note))
+    return rows
+
+
+@pytest.fixture
+def small_batches(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        yield spark
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_flat_map_rows_matches_serial_loop(small_batches):
+    df = small_batches.createDataFrame(_input_rows(), IN_SCHEMA).coalesce(1)
+    expand = _expander()
+    got = sorted(tuple(r) for r in flat_map_rows(df, expand, OUT_SCHEMA).collect())
+    want = sorted(out for r in df.collect() for out in expand(*r))
+    assert got == want
+    counts = {d: sum(1 for r in want if r[0] == d) for d in range(17)}
+    assert {0, 1}.issubset(counts.values()) and max(counts.values()) > 1
+
+
+def test_flat_map_rows_no_output_rows(small_batches):
+    df = small_batches.createDataFrame(_input_rows()[:3], IN_SCHEMA).coalesce(1)
+    out = flat_map_rows(df, _expander(), OUT_SCHEMA)
+    assert out.collect() == []
+    assert out.schema == small_batches.createDataFrame([], OUT_SCHEMA).schema

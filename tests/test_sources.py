@@ -113,3 +113,23 @@ def test_sheets_from_xlsx_spark_path(spark):
         (r.doc_id, r.sheet_name, r.row_idx, list(r.cells)) for r in sheets_from_xlsx(df).collect()
     )
     assert rows == [("d1", "Sheet1", 0, ["a", "b"]), ("d1", "Sheet1", 1, ["1", None])]
+
+
+def test_xlsx_fuzz_damaged_bytes_raise_value_error(mutants):
+    """Seeded damage to a valid .xlsx either parses or raises ValueError
+    chained from the zip/zlib/XML/index error — never BadZipFile,
+    zlib.error, KeyError or IndexError."""
+    from thuvienphapluat_crawler_spark.sources.workbook import build_xlsx, parse_xlsx_bytes
+
+    blob = build_xlsx(
+        {"Sheet1": [["STT", "MÃ SỐ", "Tên"], ["r0", None, "x"]], "PhuLuc": [["PHỤ LỤC 3"], ["a"]]}
+    )
+    outcomes = {"parsed": 0, "ValueError": 0}
+    for data in mutants(blob, seed=7):
+        try:
+            parse_xlsx_bytes(data)
+        except ValueError:
+            outcomes["ValueError"] += 1
+        else:
+            outcomes["parsed"] += 1
+    assert all(outcomes.values()), outcomes

@@ -63,11 +63,6 @@ def url_hash64(url: Column) -> Column:
     return F.xxhash64(url)
 
 
-def url_hash32(url: Column) -> Column:
-    """Murmur3 x86_32 (Spark's built-in F.hash)."""
-    return F.hash(url)
-
-
 def host_bucket(host: Column, num_buckets: int) -> Column:
     """Politeness partition key: hash(host) % P, non-negative.
 

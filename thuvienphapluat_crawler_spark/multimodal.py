@@ -20,13 +20,13 @@ media parquet with a small row-group target.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .rowmap import flat_map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -63,53 +63,48 @@ def synth_media(
     AVIs (sources/avicodec) — all with seed-derived dims/params and
     pixel/sample formulas an oracle can replay. The remaining ffmpeg
     boundary is COMPRESSED video (MJPEG/H.264), not the container."""
+    from .sources.avicodec import encode_avi
+    from .sources.pngcodec import encode_png
+    from .sources.wavcodec import encode_wav
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .sources.avicodec import encode_avi
-        from .sources.pngcodec import encode_png
-        from .sources.wavcodec import encode_wav
+    def item(doc_id, ref, kind):
+        seed = hashlib.md5(f"{doc_id}|{ref}".encode()).digest()
+        s0, s1 = seed[0], seed[1]
+        if real_codecs and kind == "image":
+            w, h = 8 + s0 % 8, 6 + s1 % 4
+            i = np.arange(h)[:, None]
+            j = np.arange(w)[None, :]
+            img = np.stack(
+                [
+                    (s0 + 3 * i + 7 * j) % 256,
+                    (s1 + 5 * i + j) % 256,
+                    (s0 + s1 + i + 11 * j) % 256,
+                ],
+                axis=-1,
+            ).astype(np.uint8)
+            blob = encode_png(img)
+        elif real_codecs and kind == "audio":
+            n, ch = 64 + s0 % 64, 1 + s1 % 2
+            i = np.arange(n, dtype=np.int64)[:, None]
+            c = np.arange(ch, dtype=np.int64)[None, :]
+            blob = encode_wav(((i * (s0 + 1) + 7 * c) % 2001) - 1000, 8000)
+        elif real_codecs and kind == "video":
+            w, h, n_fr = 8 + s0 % 5, 6 + s1 % 3, 3 + s0 % 4
+            t = np.arange(n_fr)[:, None, None, None]
+            i = np.arange(h)[None, :, None, None]
+            j = np.arange(w)[None, None, :, None]
+            c = np.arange(3)[None, None, None, :]
+            vid = ((s0 * (c + 1) + 2 * t + 3 * i + 7 * j + 5 * c + s1) % 256).astype(
+                np.uint8
+            )
+            blob = encode_avi(vid, 10)
+        else:
+            header = b"FAKE" + bytes([s0, s1]) + kind[:1].encode()
+            body = (seed * (bytes_per_item // 16 + 1))[: bytes_per_item - len(header)]
+            blob = header + body
+        yield doc_id, ref, kind, blob
 
-        for pdf in it:
-            out = []
-            for doc_id, ref, kind in zip(pdf["doc_id"], pdf["media_ref"], pdf["kind"]):
-                seed = hashlib.md5(f"{doc_id}|{ref}".encode()).digest()
-                s0, s1 = seed[0], seed[1]
-                if real_codecs and kind == "image":
-                    w, h = 8 + s0 % 8, 6 + s1 % 4
-                    i = np.arange(h)[:, None]
-                    j = np.arange(w)[None, :]
-                    img = np.stack(
-                        [
-                            (s0 + 3 * i + 7 * j) % 256,
-                            (s1 + 5 * i + j) % 256,
-                            (s0 + s1 + i + 11 * j) % 256,
-                        ],
-                        axis=-1,
-                    ).astype(np.uint8)
-                    blob = encode_png(img)
-                elif real_codecs and kind == "audio":
-                    n, ch = 64 + s0 % 64, 1 + s1 % 2
-                    i = np.arange(n, dtype=np.int64)[:, None]
-                    c = np.arange(ch, dtype=np.int64)[None, :]
-                    blob = encode_wav(((i * (s0 + 1) + 7 * c) % 2001) - 1000, 8000)
-                elif real_codecs and kind == "video":
-                    w, h, n_fr = 8 + s0 % 5, 6 + s1 % 3, 3 + s0 % 4
-                    t = np.arange(n_fr)[:, None, None, None]
-                    i = np.arange(h)[None, :, None, None]
-                    j = np.arange(w)[None, None, :, None]
-                    c = np.arange(3)[None, None, None, :]
-                    vid = ((s0 * (c + 1) + 2 * t + 3 * i + 7 * j + 5 * c + s1) % 256).astype(
-                        np.uint8
-                    )
-                    blob = encode_avi(vid, 10)
-                else:
-                    header = b"FAKE" + bytes([s0, s1]) + kind[:1].encode()
-                    body = (seed * (bytes_per_item // 16 + 1))[: bytes_per_item - len(header)]
-                    blob = header + body
-                out.append((doc_id, ref, kind, blob))
-            yield pd.DataFrame(out, columns=["doc_id", "media_ref", "kind", "content"])
-
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return flat_map_rows(docs.select("doc_id", "media_ref", "kind"), item, MEDIA_SCHEMA)
 
 
 def decode_stub(content: bytes, real_decoders: bool = False) -> tuple[str, int, int]:
@@ -153,22 +148,15 @@ def extract_features(media: DataFrame, real_decoders: bool = False) -> DataFrame
     """Media table → per-item metadata + FEATURE_DIM-dim embedding.
     Arrow-batched; binary stays inside the scan-side pass (never shuffled)."""
 
-    def feats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, ref, kind, content in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["kind"], pdf["content"]
-            ):
-                fmt, w, h = decode_stub(bytes(content), real_decoders)
-                digest = hashlib.md5(bytes(content)).digest()
-                vec = (np.frombuffer(digest[:FEATURE_DIM], dtype=np.uint8) / 255.0).astype(np.float64)
-                rows.append((doc_id, ref, kind, len(content), fmt, w, h, list(vec)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "media_ref", "kind", "n_bytes", "format", "width", "height", "features"],
-            )
+    def feats(doc_id, ref, kind, content):
+        fmt, w, h = decode_stub(bytes(content), real_decoders)
+        digest = hashlib.md5(bytes(content)).digest()
+        vec = (np.frombuffer(digest[:FEATURE_DIM], dtype=np.uint8) / 255.0).astype(np.float64)
+        yield doc_id, ref, kind, len(content), fmt, w, h, list(vec)
 
-    return media.mapInPandas(feats, FEATURES_SCHEMA)
+    return flat_map_rows(
+        media.select("doc_id", "media_ref", "kind", "content"), feats, FEATURES_SCHEMA
+    )
 
 
 def sample_frames(media: DataFrame, frame_size: int = 512, every_k: int = 4) -> DataFrame:
@@ -181,32 +169,22 @@ def sample_frames(media: DataFrame, frame_size: int = 512, every_k: int = 4) -> 
     pixels (the DuckDB-replayable form — see avi_frame_stats). Non-AVI
     blobs keep the byte-chunk sampler (compressed codecs = the ffmpeg
     boundary). Binary never leaves the scan-side pass either way."""
+    from .sources.avicodec import decode_avi
 
-    def frames(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .sources.avicodec import decode_avi
+    def frames(doc_id, ref, content):
+        b = bytes(content)
+        if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"AVI ":
+            vid, _fps = decode_avi(b)
+            for idx in range(0, vid.shape[0], every_k):
+                raw = vid[idx].tobytes()
+                yield doc_id, ref, idx, len(raw), hashlib.md5(raw.hex().encode()).hexdigest()
+        else:
+            n_frames = (len(b) + frame_size - 1) // frame_size
+            for idx in range(0, n_frames, every_k):
+                chunk = b[idx * frame_size : (idx + 1) * frame_size]
+                yield doc_id, ref, idx, len(chunk), hashlib.md5(chunk).hexdigest()
 
-        for pdf in it:
-            rows = []
-            for doc_id, ref, content in zip(pdf["doc_id"], pdf["media_ref"], pdf["content"]):
-                b = bytes(content)
-                if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                    vid, _fps = decode_avi(b)
-                    for idx in range(0, vid.shape[0], every_k):
-                        raw = vid[idx].tobytes()
-                        rows.append(
-                            (doc_id, ref, idx, len(raw),
-                             hashlib.md5(raw.hex().encode()).hexdigest())
-                        )
-                else:
-                    n_frames = (len(b) + frame_size - 1) // frame_size
-                    for idx in range(0, n_frames, every_k):
-                        chunk = b[idx * frame_size : (idx + 1) * frame_size]
-                        rows.append((doc_id, ref, idx, len(chunk), hashlib.md5(chunk).hexdigest()))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "media_ref", "frame_idx", "frame_bytes", "frame_md5"]
-            )
-
-    return media.mapInPandas(frames, FRAME_SCHEMA)
+    return flat_map_rows(media.select("doc_id", "media_ref", "content"), frames, FRAME_SCHEMA)
 
 
 def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -53,11 +53,6 @@ def ngrams_of(toks: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def ngrams(text: Column, n: int) -> Column:
-    """Convenience wrapper: tokenize then n-gram (single-gram-size use)."""
-    return ngrams_of(tokens(text), n)
-
-
 # Gopher §A1.1 repetition thresholds (basis points of characters):
 # top 2-gram <= 0.20, top 3-gram <= 0.18, top 4-gram <= 0.16,
 # characters in duplicated 5-grams <= 0.15.

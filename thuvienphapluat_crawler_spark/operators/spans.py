@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 WORDS_PER_SPAN = 12
 MEDIA_EVERY = 4
@@ -37,18 +36,6 @@ def url_encode_segment(col: F.Column) -> F.Column:
     Spark's url_encode is form-encoding (space→'+'), so '+' is mapped
     back to '%20'. Identical for any text without literal '+'/'*'/'~'."""
     return F.replace(F.url_encode(col), F.lit("+"), F.lit("%20"))
-
-SPAN_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("kind", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("offset", T.IntegerType()),
-        ]
-    )
-)
-
 
 def explode_to_spans(docs: DataFrame, doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """documents(doc_id, text) → one row per span (doc_id, offset, kind, text, media_ref).

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..functions import urls as U
 from ..operators import bloom as B
+from ..rowmap import flat_map_rows
 from ..sources import synthetic_web as SW
 from .warehouse import SnapshotWarehouse
 
@@ -194,16 +195,12 @@ class CrawlEngine:
         return fetch
 
     @staticmethod
-    def _parse_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        """Fetched page → interleaved span rows (the extract stage,
+    def _parse_fn(url: str):
+        """Fetched page URL → its interleaved span rows (the extract stage,
         pipeline.py:216-322 re-expressed; content from the synthetic web)."""
-        for pdf in it:
-            rows = []
-            for url in pdf["canonical_url"]:
-                doc_id = _doc_id_for(url)
-                for kind, text, media_ref, offset in SW.page_spans(url):
-                    rows.append((doc_id, url, kind, text, media_ref, offset))
-            yield pd.DataFrame(rows, columns=["doc_id", "canonical_url", "kind", "text", "media_ref", "offset"])
+        doc_id = _doc_id_for(url)
+        for kind, text, media_ref, offset in SW.page_spans(url):
+            yield doc_id, url, kind, text, media_ref, offset
 
     def _html_span_rows(self, ok: DataFrame) -> DataFrame:
         """The real extract path: fetch raw HTML (synthetic DOM twin of
@@ -213,13 +210,10 @@ class CrawlEngine:
         same sanitization as _doc_id_for."""
         from ..sources.html_parse import extract_documents, parse_pages
 
-        def fetch_html(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                yield pd.DataFrame(
-                    {"page_url": pdf["canonical_url"], "html": [SW.page_html(u) for u in pdf["canonical_url"]]}
-                )
+        def fetch_html(url: str):
+            yield url, SW.page_html(url)
 
-        pages = ok.select("canonical_url").mapInPandas(fetch_html, "page_url string, html string")
+        pages = flat_map_rows(ok.select("canonical_url"), fetch_html, "page_url string, html string")
         paras = extract_documents(parse_pages(pages, id_col="page_url"))
         url = F.col("doc_id")  # extract keys on the page URL
         derived = F.concat(
@@ -244,15 +238,11 @@ class CrawlEngine:
     def _outlinks_fn(self):
         world = self.world
 
-        def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                rows = []
-                for url, depth in zip(pdf["canonical_url"], pdf["depth"]):
-                    for out in SW.page_outlinks(url, world):
-                        rows.append((out, int(depth)))
-                yield pd.DataFrame(rows, columns=["out_url", "src_depth"])
+        def outlinks(url: str, depth: int):
+            for out in SW.page_outlinks(url, world):
+                yield out, int(depth)
 
-        return gen
+        return outlinks
 
     def _bloom_probe_fn(self, up_to_epoch: int):
         root, n = self.wh.root, self.n_buckets
@@ -288,7 +278,7 @@ class CrawlEngine:
     def _discover(self, ok: DataFrame, frontier: DataFrame, epoch: int) -> tuple[DataFrame, DataFrame]:
         """Outlinks of the ok fetches → (probed candidates, confirmed-new
         frontier rows): bloom prefilter, then the exact anti-join."""
-        links = ok.select("canonical_url", "depth").mapInPandas(self._outlinks_fn(), OUTLINK_SCHEMA)
+        links = flat_map_rows(ok.select("canonical_url", "depth"), self._outlinks_fn(), OUTLINK_SCHEMA)
         # one shuffle, not two: frontier columns are per-URL expressions, so
         # compute them BEFORE the exchange, repartition by host_bucket once,
         # and fold duplicate outlinks (min-depth) colocated — the groupBy
@@ -401,7 +391,7 @@ class CrawlEngine:
         if self.content == "html":
             span_rows = self._html_span_rows(ok)
         else:
-            span_rows = ok.select("canonical_url").mapInPandas(self._parse_fn, SPAN_ROW_SCHEMA)
+            span_rows = flat_map_rows(ok.select("canonical_url"), self._parse_fn, SPAN_ROW_SCHEMA)
         docs = (
             span_rows.groupBy("doc_id", "canonical_url")
             .agg(F.collect_list(F.struct("kind", "text", "media_ref", "offset")).alias("_s"))

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions import urls as U
+from .rowmap import flat_map_rows
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -2059,51 +2060,46 @@ def media_sniff_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe). Blob synth + sniff live in one mapInPandas — binary never
     crosses a shuffle; only (doc_id, fmt, depth) leave the scan."""
     import numpy as np
-    import pandas as _pd
+
+    from .sources.avicodec import encode_avi
+    from .sources.pdfdoc import build_pdf
+    from .sources.pngcodec import encode_png
+    from .sources.sitemap import encode_urlset
+    from .sources.sniff import sniff_format
+    from .sources.warccodec import encode_record
+    from .sources.wavcodec import encode_wav
+    from .sources.workbook import build_xlsx
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(it):
-        from .sources.avicodec import encode_avi
-        from .sources.pdfdoc import build_pdf
-        from .sources.pngcodec import encode_png
-        from .sources.sitemap import encode_urlset
-        from .sources.sniff import sniff_format
-        from .sources.warccodec import encode_record
-        from .sources.wavcodec import encode_wav
-        from .sources.workbook import build_xlsx
+    def sniff(doc_id, text):
+        d = int(doc_id)
+        kind = d % 7
+        if kind == 0:
+            blob = build_pdf([[f"Trang {d}", str(text)[:40]]])
+        elif kind == 1:
+            img = ((d + np.arange(6 * 8 * 3)) % 256).astype(np.uint8)
+            blob = encode_png(img.reshape(6, 8, 3))
+        elif kind == 2:
+            i = np.arange(64, dtype=np.int64)[:, None]
+            blob = encode_wav(((i * (d % 97 + 1)) % 2001) - 1000, 8000)
+        elif kind == 3:
+            vid = ((d + np.arange(2 * 6 * 8 * 3)) % 256).astype(np.uint8)
+            blob = encode_avi(vid.reshape(2, 6, 8, 3), 10)
+        elif kind == 4:
+            blob = encode_record(
+                f"https://docs.example.test/{d}", str(text).encode("ascii")
+            )
+        elif kind == 5:
+            blob = build_xlsx({"Sheet1": [[str(d), "a"], ["b", None]]})
+        else:
+            blob = encode_urlset(
+                [(f"https://docs.example.test/{d}", "2026-01-01")]
+            ).encode("ascii")
+        fmt, depth = sniff_format(blob)
+        yield d, fmt, depth
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                kind = d % 7
-                if kind == 0:
-                    blob = build_pdf([[f"Trang {d}", str(text)[:40]]])
-                elif kind == 1:
-                    img = ((d + np.arange(6 * 8 * 3)) % 256).astype(np.uint8)
-                    blob = encode_png(img.reshape(6, 8, 3))
-                elif kind == 2:
-                    i = np.arange(64, dtype=np.int64)[:, None]
-                    blob = encode_wav(((i * (d % 97 + 1)) % 2001) - 1000, 8000)
-                elif kind == 3:
-                    vid = ((d + np.arange(2 * 6 * 8 * 3)) % 256).astype(np.uint8)
-                    blob = encode_avi(vid.reshape(2, 6, 8, 3), 10)
-                elif kind == 4:
-                    blob = encode_record(
-                        f"https://docs.example.test/{d}", str(text).encode("ascii")
-                    )
-                elif kind == 5:
-                    blob = build_xlsx({"Sheet1": [[str(d), "a"], ["b", None]]})
-                else:
-                    blob = encode_urlset(
-                        [(f"https://docs.example.test/{d}", "2026-01-01")]
-                    ).encode("ascii")
-                fmt, depth = sniff_format(blob)
-                rows.append((d, fmt, depth))
-            yield _pd.DataFrame(rows, columns=["doc_id", "fmt", "sniff_depth"])
-
-    return docs.mapInPandas(run, "doc_id long, fmt string, sniff_depth long").orderBy(
+    return flat_map_rows(docs, sniff, "doc_id long, fmt string, sniff_depth long").orderBy(
         "doc_id"
     )
 
@@ -3401,37 +3397,29 @@ def xlsx_real_sheets(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded CELL VALUES (shared-string resolution, None-gap padding),
     not just row counts. Replaces the r02 'xlsx decode stubbed' caveat
     (reference: format_xls.py:182-186 pd.read_excel(sheet_name=None))."""
-    import pandas as pd  # noqa: F401  (inside mapInPandas below)
-
     from .operators.enrich import detect_header_row
     from .sources.workbook import SHEET_ROW_SCHEMA, build_xlsx, parse_xlsx_bytes
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
 
-    def synth_and_scan(it):
-        import pandas as pd
+    def synth_and_scan(doc_id, text):
+        d, t = int(doc_id), str(text)
+        n1, h1 = 5 + d % 4, 1 + d % 2
+        s1 = [
+            ["STT", "MÃ SỐ", "Tên thủ tục"] if i == h1 else [f"r{i}", f"M{d}.{i}", t[:8]]
+            for i in range(n1)
+        ]
+        s2 = [
+            [f"PHỤ LỤC {d % 5}", None, None],
+            [t[:12], None, None],
+            ["cột a", "cột b", "cột c"],
+            ["x3", "y3", "z3"],
+            ["x4", "y4", "z4"],
+        ]
+        for name, i, cells in parse_xlsx_bytes(build_xlsx({"Sheet1": s1, "PhuLuc": s2})):
+            yield str(d), name, i, cells
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d, t = int(doc_id), str(text)
-                n1, h1 = 5 + d % 4, 1 + d % 2
-                s1 = [
-                    ["STT", "MÃ SỐ", "Tên thủ tục"] if i == h1 else [f"r{i}", f"M{d}.{i}", t[:8]]
-                    for i in range(n1)
-                ]
-                s2 = [
-                    [f"PHỤ LỤC {d % 5}", None, None],
-                    [t[:12], None, None],
-                    ["cột a", "cột b", "cột c"],
-                    ["x3", "y3", "z3"],
-                    ["x4", "y4", "z4"],
-                ]
-                for name, i, cells in parse_xlsx_bytes(build_xlsx({"Sheet1": s1, "PhuLuc": s2})):
-                    rows.append((str(d), name, i, cells))
-            yield pd.DataFrame(rows, columns=["doc_id", "sheet_name", "row_idx", "cells"])
-
-    sheets = docs.mapInPandas(synth_and_scan, SHEET_ROW_SCHEMA).localCheckpoint()  # 3 consumers
+    sheets = flat_map_rows(docs, synth_and_scan, SHEET_ROW_SCHEMA).localCheckpoint()  # 3 consumers
     hdr = detect_header_row(sheets, doc_col=["doc_id", "sheet_name"], markers=("STT", "MÃ"))
     nrows = sheets.groupBy("doc_id", "sheet_name").agg(F.count("*").alias("n_rows"))
     cell0 = sheets.select(
@@ -3486,27 +3474,20 @@ def pdf_real_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
 
-    def synth_and_scan(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d, t = int(doc_id), str(text)
-                pages = [
-                    [t[10 * i : 10 * i + 24], f"({t[4:16]}) \\ câu {i + 1}"]
-                    for i in range(1 + d % 3)
-                ]
-                data = build_pdf(pages, compress=(d % 2 == 1))
-                flate = b"/FlateDecode" in data
-                for i, txt in parse_pdf_text(data):
-                    rows.append((str(d), i, flate, txt, len(txt)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page_idx", "flate", "page_text", "page_chars"]
-            )
+    def synth_and_scan(doc_id, text):
+        d, t = int(doc_id), str(text)
+        pages = [
+            [t[10 * i : 10 * i + 24], f"({t[4:16]}) \\ câu {i + 1}"]
+            for i in range(1 + d % 3)
+        ]
+        data = build_pdf(pages, compress=(d % 2 == 1))
+        flate = b"/FlateDecode" in data
+        for i, txt in parse_pdf_text(data):
+            yield str(d), i, flate, txt, len(txt)
 
     return (
-        docs.mapInPandas(
+        flat_map_rows(
+            docs,
             synth_and_scan,
             "doc_id string, page_idx int, flate boolean, page_text string, page_chars int",
         )
@@ -3556,39 +3537,30 @@ def png_real_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id"), spark)
 
-    def synth_and_scan(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 16 + d % 8, 12 + d % 4
-                i = np.arange(h)[:, None]
-                j = np.arange(w)[None, :]
-                img = np.stack(
-                    [
-                        (d + 3 * i + 7 * j) % 256,
-                        (2 * d + 5 * i + j) % 256,
-                        (3 * d + i + 11 * j) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                dec = decode_png(encode_png(img))
-                s = dec.astype(np.int64).sum(axis=(0, 1))
-                br = resize_nearest(dec, 4, 4)[3, 3]
-                rows.append(
-                    (str(d), w, h, int(s[0]), int(s[1]), int(s[2]),
-                     int(br[0]), int(br[1]), int(br[2]))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "r_sum", "g_sum", "b_sum",
-                         "br_r", "br_g", "br_b"],
-            )
+    def synth_and_scan(doc_id):
+        d = int(doc_id)
+        w, h = 16 + d % 8, 12 + d % 4
+        i = np.arange(h)[:, None]
+        j = np.arange(w)[None, :]
+        img = np.stack(
+            [
+                (d + 3 * i + 7 * j) % 256,
+                (2 * d + 5 * i + j) % 256,
+                (3 * d + i + 11 * j) % 256,
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        dec = decode_png(encode_png(img))
+        s = dec.astype(np.int64).sum(axis=(0, 1))
+        br = resize_nearest(dec, 4, 4)[3, 3]
+        yield (
+            str(d), w, h, int(s[0]), int(s[1]), int(s[2]),
+            int(br[0]), int(br[1]), int(br[2]),
+        )
 
     return (
-        docs.mapInPandas(
+        flat_map_rows(
+            docs,
             synth_and_scan,
             "doc_id string, width int, height int, r_sum bigint, g_sum bigint, "
             "b_sum bigint, br_r int, br_g int, br_b int",
@@ -3639,31 +3611,22 @@ def wav_real_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id"), spark)
 
-    def synth_and_scan(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                k, n, ch = (d % 31) + 1, 800 + (d % 5) * 160, (d % 2) + 1
-                i = np.arange(n, dtype=np.int64)[:, None]
-                c = np.arange(ch, dtype=np.int64)[None, :]
-                sig = ((i * k + 7 * c) % 2001) - 1000
-                blob = encode_wav(sig, 8000)
-                st = wav_stats(blob)
-                rows.append(
-                    (str(d), st["sample_rate"], st["channels"], st["n_frames"],
-                     st["duration_ms"], len(blob), st["peak"], st["sum_sq"])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "sample_rate", "channels", "n_frames",
-                         "duration_ms", "wav_bytes", "peak", "sum_sq"],
-            )
+    def synth_and_scan(doc_id):
+        d = int(doc_id)
+        k, n, ch = (d % 31) + 1, 800 + (d % 5) * 160, (d % 2) + 1
+        i = np.arange(n, dtype=np.int64)[:, None]
+        c = np.arange(ch, dtype=np.int64)[None, :]
+        sig = ((i * k + 7 * c) % 2001) - 1000
+        blob = encode_wav(sig, 8000)
+        st = wav_stats(blob)
+        yield (
+            str(d), st["sample_rate"], st["channels"], st["n_frames"],
+            st["duration_ms"], len(blob), st["peak"], st["sum_sq"],
+        )
 
     return (
-        docs.mapInPandas(
+        flat_map_rows(
+            docs,
             synth_and_scan,
             "doc_id string, sample_rate int, channels int, n_frames int, "
             "duration_ms bigint, wav_bytes bigint, peak int, sum_sq bigint",
@@ -3718,32 +3681,23 @@ def avi_real_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id"), spark)
 
-    def synth_and_scan(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, nf = 8 + d % 5, 6 + d % 3, 3 + d % 4
-                t = np.arange(nf)[:, None, None, None]
-                i = np.arange(h)[None, :, None, None]
-                j = np.arange(w)[None, None, :, None]
-                c = np.arange(3)[None, None, None, :]
-                vid = ((d * (c + 1) + 2 * t + 3 * i + 7 * j + 5 * c) % 256).astype(np.uint8)
-                for st in avi_frame_stats(encode_avi(vid, 10)):
-                    rows.append(
-                        (str(d), st["frame_idx"], st["fps"], st["width"], st["height"],
-                         st["pix_sum"], st["frame_md5"])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "fps", "width", "height",
-                         "pix_sum", "frame_md5"],
+    def synth_and_scan(doc_id):
+        d = int(doc_id)
+        w, h, nf = 8 + d % 5, 6 + d % 3, 3 + d % 4
+        t = np.arange(nf)[:, None, None, None]
+        i = np.arange(h)[None, :, None, None]
+        j = np.arange(w)[None, None, :, None]
+        c = np.arange(3)[None, None, None, :]
+        vid = ((d * (c + 1) + 2 * t + 3 * i + 7 * j + 5 * c) % 256).astype(np.uint8)
+        for st in avi_frame_stats(encode_avi(vid, 10)):
+            yield (
+                str(d), st["frame_idx"], st["fps"], st["width"], st["height"],
+                st["pix_sum"], st["frame_md5"],
             )
 
     return (
-        docs.mapInPandas(
+        flat_map_rows(
+            docs,
             synth_and_scan,
             "doc_id string, frame_idx int, fps int, width int, height int, "
             "pix_sum bigint, frame_md5 string",
@@ -3800,32 +3754,26 @@ def docx_real_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
 
-    def synth_and_scan(it):
-        import pandas as pd
+    def synth_and_scan(doc_id, text):
+        d, t = int(doc_id), str(text)
+        if d % 4 == 0:
+            paras: list = ["PHỤ LỤC"]
+        else:
+            paras = [f"PHỤ LỤC {d % 5}", t[:30], f"Ban hành kèm theo {t[30:55]}"]
+        table = [["STT", "MÃ SỐ", "Tên thủ tục"]] + [
+            [str(j), f"M{d}.{j}", t[6 * (j - 1) : 6 * (j - 1) + 8]]
+            for j in range(1, 4 + d % 2)
+        ]
+        blob = build_docx([*paras, table])
+        ps, tbls = parse_docx(blob)
+        for i, p in enumerate(ps):
+            yield str(d), "p", i, [p]
+        for tbl in tbls:
+            for i, row in enumerate(tbl):
+                yield str(d), "t", i, row
 
-        for pdf in it:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d, t = int(doc_id), str(text)
-                if d % 4 == 0:
-                    paras: list = ["PHỤ LỤC"]
-                else:
-                    paras = [f"PHỤ LỤC {d % 5}", t[:30], f"Ban hành kèm theo {t[30:55]}"]
-                table = [["STT", "MÃ SỐ", "Tên thủ tục"]] + [
-                    [str(j), f"M{d}.{j}", t[6 * (j - 1) : 6 * (j - 1) + 8]]
-                    for j in range(1, 4 + d % 2)
-                ]
-                blob = build_docx([*paras, table])
-                ps, tbls = parse_docx(blob)
-                for i, p in enumerate(ps):
-                    out.append((str(d), "p", i, [p]))
-                for tbl in tbls:
-                    for i, row in enumerate(tbl):
-                        out.append((str(d), "t", i, row))
-            yield pd.DataFrame(out, columns=["doc_id", "src", "row_idx", "cells"])
-
-    rows = docs.mapInPandas(
-        synth_and_scan, "doc_id string, src string, row_idx int, cells array<string>"
+    rows = flat_map_rows(
+        docs, synth_and_scan, "doc_id string, src string, row_idx int, cells array<string>"
     ).localCheckpoint()  # 3 consumers (annex, header, markdown): parse once
     annex = annex_title(rows.filter(F.col("src") == "p"), max_rows=12, min_len=40)
     trows = rows.filter(F.col("src") == "t")
@@ -3913,27 +3861,21 @@ def pdf_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
 
-    def synth_and_scan(it):
-        import pandas as pd
+    def synth_and_scan(doc_id, text):
+        d, t = int(doc_id), str(text)
+        cells = [(72.0, 770.0, f"PHỤ LỤC {d % 5}")]
+        for cx, h in zip((72.0, 200.0, 330.0), ("STT", "MÃ SỐ", "Tên thủ tục")):
+            cells.append((cx, 740.0, h))
+        for j in range(1, 5 + d % 3):
+            y = 720.0 - 20.0 * (j - 1)
+            row = (str(j), f"M{d}.{j}", t[8 * (j - 1) : 8 * (j - 1) + 10])
+            cells.extend((cx, y, v) for cx, v in zip((72.0, 200.0, 330.0), row))
+        data = build_pdf_positioned([cells], compress=(d % 2 == 1))
+        for pg, x, y, cell in parse_pdf_cells(data):
+            yield str(d), pg, x, y, cell
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d, t = int(doc_id), str(text)
-                cells = [(72.0, 770.0, f"PHỤ LỤC {d % 5}")]
-                for cx, h in zip((72.0, 200.0, 330.0), ("STT", "MÃ SỐ", "Tên thủ tục")):
-                    cells.append((cx, 740.0, h))
-                for j in range(1, 5 + d % 3):
-                    y = 720.0 - 20.0 * (j - 1)
-                    row = (str(j), f"M{d}.{j}", t[8 * (j - 1) : 8 * (j - 1) + 10])
-                    cells.extend((cx, y, v) for cx, v in zip((72.0, 200.0, 330.0), row))
-                data = build_pdf_positioned([cells], compress=(d % 2 == 1))
-                for pg, x, y, cell in parse_pdf_cells(data):
-                    rows.append((str(d), pg, x, y, cell))
-            yield pd.DataFrame(rows, columns=["doc_id", "page_idx", "x", "y", "cell"])
-
-    words = docs.mapInPandas(
-        synth_and_scan, "doc_id string, page_idx int, x double, y double, cell string"
+    words = flat_map_rows(
+        docs, synth_and_scan, "doc_id string, page_idx int, x double, y double, cell string"
     )
     pg = Window.partitionBy("doc_id", "page_idx")
     placed = words.select(
@@ -4831,6 +4773,8 @@ def pdf_page_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     in closed form (ink = k²·Σ glyph popcounts over the sanitized text)
     and replays the routing CASEs — so raster geometry, glyph painting,
     PNG encode AND decode are all value-gated, not just smoke-run."""
+    import numpy as np
+
     from .multimodal import route_media
     from .sources.pdfdoc import build_pdf, parse_pdf_text_ops
     from .sources.pngcodec import decode_png, encode_png
@@ -4846,37 +4790,26 @@ def pdf_page_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
         san3.alias("l3"),
     )
 
-    def raster(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, l1, l2, l3 in zip(pdf["doc_id"], pdf["l1"], pdf["l2"], pdf["l3"]):
-                data = build_pdf([[str(l1), str(l2), str(l3)]], compress=int(doc_id) % 2 == 1)
-                draws = parse_pdf_text_ops(data)[0]
-                img = rasterize_draws(draws, dpi=36)
-                # big pages take the cheap filter set (None/Up), the way a
-                # real encoder's per-row heuristic would; the full 5-filter
-                # decoder stays exercised by png_real_features + tests
-                png = encode_png(img, row_filters=(0, 2))
-                dec = decode_png(png)
-                ink = np.count_nonzero((dec[..., 0] | dec[..., 1] | dec[..., 2]) == 0)
-                rows.append(
-                    (str(doc_id), "raster/p0.png", "image",
-                     int(dec.shape[1]), int(dec.shape[0]), len(draws), ink, png)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "media_ref", "kind", "width_px", "height_px",
-                         "n_draws", "ink_pixels", "content"],
-            )
+    def raster(doc_id, l1, l2, l3):
+        data = build_pdf([[str(l1), str(l2), str(l3)]], compress=int(doc_id) % 2 == 1)
+        draws = parse_pdf_text_ops(data)[0]
+        img = rasterize_draws(draws, dpi=36)
+        # big pages take the cheap filter set (None/Up), the way a
+        # real encoder's per-row heuristic would; the full 5-filter
+        # decoder stays exercised by png_real_features + tests
+        png = encode_png(img, row_filters=(0, 2))
+        dec = decode_png(png)
+        ink = np.count_nonzero((dec[..., 0] | dec[..., 1] | dec[..., 2]) == 0)
+        yield (
+            str(doc_id), "raster/p0.png", "image",
+            int(dec.shape[1]), int(dec.shape[0]), len(draws), ink, png,
+        )
 
     schema = (
         "doc_id string, media_ref string, kind string, width_px int, height_px int, "
         "n_draws int, ink_pixels bigint, content binary"
     )
-    rastered = prepped.mapInPandas(raster, schema)
+    rastered = flat_map_rows(prepped, raster, schema)
     routed = route_media(
         rastered, passthrough=("width_px", "height_px", "n_draws", "ink_pixels")
     )

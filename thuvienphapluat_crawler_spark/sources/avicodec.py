@@ -164,17 +164,20 @@ def decode_avi(data: bytes) -> tuple[np.ndarray, int]:
     bottom_up = h > 0
     h = abs(h)
     stride = (w * 3 + 3) & ~3
-    out = np.empty((len(frame_payloads), h, w, 3), dtype=np.uint8)
-    for i, (s, z) in enumerate(frame_payloads):
+    if not frame_payloads:
+        raise AviFormatError("no frame chunks in movi list")
+    # every frame's byte count is checked BEFORE allocating: the header's
+    # w/h alone must not size the output tensor
+    for i, (_s, z) in enumerate(frame_payloads):
         if z != stride * h:
             raise AviFormatError(f"frame {i}: {z} bytes, expected {stride * h}")
+    out = np.empty((len(frame_payloads), h, w, 3), dtype=np.uint8)
+    for i, (s, z) in enumerate(frame_payloads):
         rows = np.frombuffer(data[s : s + z], dtype=np.uint8).reshape(h, stride)
         bgr = rows[:, : w * 3].reshape(h, w, 3)
         if bottom_up:
             bgr = bgr[::-1]
         out[i] = bgr[:, :, ::-1]
-    if not len(frame_payloads):
-        raise AviFormatError("no frame chunks in movi list")
     return out, rate // scale
 
 

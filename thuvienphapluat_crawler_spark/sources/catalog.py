@@ -11,9 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-CATALOG_COLUMNS = ["file", "document_number", "document_type", "issuing_authority", "title", "issued_date"]
-
-
 def read_catalog(spark: SparkSession, path: str) -> DataFrame:
     return (
         spark.read.option("header", True).csv(path)

@@ -11,9 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-COOKIE_COLUMNS = ["domain", "include_subdomains", "path", "secure", "expires", "name", "value"]
-
-
 def read_cookies(spark: SparkSession, path: str) -> DataFrame:
     raw = (
         spark.read.option("sep", "\t")

@@ -16,11 +16,21 @@ split as the xlsx codec (workbook.py) and the PDF codec (pdfdoc.py).
 from __future__ import annotations
 
 import io
+import lzma
 import zipfile
+import zlib
 from xml.etree import ElementTree as ET
 
 _W = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
 _DOCX_EPOCH = (1980, 1, 1, 0, 0, 0)  # fixed zip mtime → deterministic bytes
+
+# What reading a damaged zip of XML parts raises: bad structure or CRC,
+# a broken deflate/bzip2/lzma member (OSError is bz2's), an encrypted-flag
+# bit (RuntimeError), a missing member (KeyError), malformed XML.
+ZIP_XML_ERRORS = (
+    zipfile.BadZipFile, zlib.error, lzma.LZMAError, OSError, EOFError,
+    RuntimeError, KeyError, ET.ParseError,
+)
 
 
 def _esc(s: str) -> str:
@@ -84,9 +94,13 @@ def _cat_text(el: ET.Element) -> str:
 def parse_docx(data: bytes) -> tuple[list[str], list[list[list[str]]]]:
     """(paragraphs, tables) from word/document.xml, in document order:
     body-level w:p → paragraphs (table-cell paragraphs excluded, as in
-    python-docx), w:tbl → rows of cell texts."""
-    with zipfile.ZipFile(io.BytesIO(data)) as z:
-        root = ET.fromstring(z.read("word/document.xml"))
+    python-docx), w:tbl → rows of cell texts. Bytes that are not a
+    readable zip holding word/document.xml raise ValueError."""
+    try:
+        with zipfile.ZipFile(io.BytesIO(data)) as z:
+            root = ET.fromstring(z.read("word/document.xml"))
+    except ZIP_XML_ERRORS as e:
+        raise ValueError(f"unreadable .docx: {e}") from e
     body = root.find(f"{{{_W}}}body")
     if body is None:
         raise ValueError("no w:body in document.xml")

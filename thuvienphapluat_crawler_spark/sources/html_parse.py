@@ -32,14 +32,13 @@ joins and window ops — the parse is the only Python, and it is batched.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import merge_lines_to_paragraphs
+from ..rowmap import flat_map_rows
 
 NODE_SCHEMA = (
     "doc_id string, offset int, node_kind string, tag string, text string, "
@@ -149,23 +148,14 @@ def parse_page(html: str) -> list[tuple]:
 
 def parse_pages(df: DataFrame, id_col: str = "doc_id", html_col: str = "html") -> DataFrame:
     """(doc_id, html) → node/element/tooltip/note rows with a document-order
-    offset. One Arrow batch per partition; no per-row Python UDFs."""
+    offset: parse_page per page inside one flat_map_rows stage; no
+    per-row Python UDFs."""
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for doc_id, html in zip(pdf[id_col], pdf[html_col]):
-                for off, row in enumerate(parse_page(html)):
-                    out.append((str(doc_id), off, *row))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "offset", "node_kind", "tag", "text",
-                    "atmm", "onmouseover", "element_id", "css_class",
-                ],
-            )
+    def page_rows(doc_id, html):
+        for off, row in enumerate(parse_page(html)):
+            yield str(doc_id), off, *row
 
-    return df.select(F.col(id_col), F.col(html_col)).mapInPandas(run, NODE_SCHEMA)
+    return flat_map_rows(df.select(F.col(id_col), F.col(html_col)), page_rows, NODE_SCHEMA)
 
 
 def tooltip_class_col(atmm: Column, onmouseover: Column) -> Column:

@@ -23,11 +23,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..rowmap import flat_map_rows
 
 PDF_PAGE_SCHEMA = "doc_id string, page_idx int, text string"
 
@@ -200,12 +200,18 @@ def _page_stream_bytes(data: bytes) -> list[bytes]:
     Follows Catalog→Pages→Kids→Contents; /FlateDecode inflated via
     stdlib zlib; any other /Filter raises NotImplementedError (the
     honest boundary — LZW/JBIG2/CCITT need a real decoder, the
-    container has none)."""
+    container has none). A broken object graph or Flate stream raises
+    ValueError."""
     objs: dict[int, bytes] = _scan_objects(data)
 
     def ref(body: bytes, key: bytes) -> int | None:
         m = re.search(key + rb"\s+(\d+)\s+0\s+R", body)
         return int(m.group(1)) if m else None
+
+    def obj(i: int | None, what: str) -> bytes:
+        if i not in objs:
+            raise ValueError(f"{what} object {i} not found")
+        return objs[i]
 
     root = None
     for body in objs.values():
@@ -214,20 +220,25 @@ def _page_stream_bytes(data: bytes) -> list[bytes]:
             break
     if root is None:
         raise ValueError("no /Catalog with /Pages")
-    kids_m = re.search(rb"/Kids\s*\[(.*?)\]", objs[root], re.S)
+    kids_m = re.search(rb"/Kids\s*\[(.*?)\]", obj(root, "/Pages"), re.S)
+    if kids_m is None:
+        raise ValueError(f"/Pages object {root} has no /Kids array")
     kids = [int(x) for x in re.findall(rb"(\d+)\s+0\s+R", kids_m.group(1))]
 
     out: list[bytes] = []
     for kid in kids:
-        cont = ref(objs[kid], rb"/Contents")
-        body = objs[cont]
+        cont = ref(obj(kid, "/Kids page"), rb"/Contents")
+        body = obj(cont, "/Contents")
         raw = _stream_bytes(body)
         if raw is None:
             raw = b""
         elif b"/Filter" in body:
             if b"/FlateDecode" not in body:
                 raise NotImplementedError("unsupported PDF stream filter (only FlateDecode)")
-            raw = zlib.decompress(raw)
+            try:
+                raw = zlib.decompress(raw)
+            except zlib.error as e:
+                raise ValueError(f"/Contents object {cont}: bad FlateDecode stream") from e
         out.append(raw)
     return out
 
@@ -302,14 +313,10 @@ def parse_pdf_cells(data: bytes) -> list[tuple[int, float, float, str]]:
 
 def pages_from_pdfs(df: DataFrame, id_col: str = "doc_id", bin_col: str = "pdf") -> DataFrame:
     """(doc_id, pdf:binary) → one row per page with its text layer — the
-    S6 scan (binaryFile + mapInPandas), Arrow-batched."""
+    S6 scan (binaryFile + flat_map_rows), Arrow-batched."""
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                for i, text in parse_pdf_text(bytes(payload)):
-                    rows.append((str(doc_id), i, text))
-            yield pd.DataFrame(rows, columns=["doc_id", "page_idx", "text"])
+    def pages(doc_id, payload):
+        for i, text in parse_pdf_text(bytes(payload)):
+            yield str(doc_id), i, text
 
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(run, PDF_PAGE_SCHEMA)
+    return flat_map_rows(df.select(F.col(id_col), F.col(bin_col)), pages, PDF_PAGE_SCHEMA)

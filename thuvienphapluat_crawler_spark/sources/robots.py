@@ -21,11 +21,11 @@ and evaluate with regexp_like — the 10^10-row side never leaves the JVM.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..rowmap import flat_map_rows
 
 
 def _pattern_to_regex(pattern: str) -> str:
@@ -123,26 +123,15 @@ def rules_from_robots_txt(df: DataFrame, agent: str) -> DataFrame:
     NULL-pattern row so crawl_delay survives. Tiny output — meant to be
     broadcast against the frontier."""
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for host, text in zip(pdf["host"], pdf["robots_txt"]):
-                parsed = parse_robots(str(text), agent)
-                delay = parsed["crawl_delay"]
-                if parsed["rules"]:
-                    for pattern, allow in parsed["rules"]:
-                        rows.append(
-                            (host, delay, pattern, _pattern_to_regex(pattern),
-                             allow, len(pattern))
-                        )
-                else:
-                    rows.append((host, delay, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["host", "crawl_delay", "pattern", "rx", "allow", "specificity"],
-            )
+    def rules(host, text):
+        parsed = parse_robots(str(text), agent)
+        delay = parsed["crawl_delay"]
+        if not parsed["rules"]:
+            yield host, delay, None, None, None, None
+        for pattern, allow in parsed["rules"]:
+            yield host, delay, pattern, _pattern_to_regex(pattern), allow, len(pattern)
 
-    return df.select("host", "robots_txt").mapInPandas(run, RULE_SCHEMA)
+    return flat_map_rows(df.select("host", "robots_txt"), rules, RULE_SCHEMA)
 
 
 def sitemaps_from_robots_txt(df: DataFrame) -> DataFrame:
@@ -151,18 +140,13 @@ def sitemaps_from_robots_txt(df: DataFrame) -> DataFrame:
     collection). The discovery entrypoint feeding sources/sitemap.py —
     tiny output, per-host, broadcastable like the rules."""
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for host, text in zip(pdf["host"], pdf["robots_txt"]):
-                parsed = parse_robots(str(text), agent="-")
-                rows.extend(
-                    (host, i, url) for i, url in enumerate(parsed["sitemaps"])
-                )
-            yield pd.DataFrame(rows, columns=["host", "sm_pos", "sitemap_url"])
+    def sitemaps(host, text):
+        parsed = parse_robots(str(text), agent="-")
+        for i, url in enumerate(parsed["sitemaps"]):
+            yield host, i, url
 
-    return df.select("host", "robots_txt").mapInPandas(
-        run, "host string, sm_pos long, sitemap_url string"
+    return flat_map_rows(
+        df.select("host", "robots_txt"), sitemaps, "host string, sm_pos long, sitemap_url string"
     )
 
 

@@ -133,20 +133,6 @@ def robots_allowed(url: str) -> bool:
     return decide(rules, path)[0]
 
 
-def host_cookie_file_lines(n_hosts: int) -> list[str]:
-    """The same cookie dimension in Netscape cookies.txt form (7-col TSV,
-    crawler.py:9-47) — what a real deployment would feed the S1 scan;
-    host_cookie_header(h) is its per-host projection."""
-    lines = ["# Netscape HTTP Cookie File"]
-    for h in range(n_hosts):
-        if h % 3 == 2:
-            continue
-        dom = host_name(h)
-        lines.append(f".{dom}\tTRUE\t/\tTRUE\t2147483647\tsession\ttvpl{h:03d}")
-        lines.append(f".{dom}\tTRUE\t/\tFALSE\t2147483647\tlang\tvi")
-    return lines
-
-
 def fetch_attempts(url: str) -> tuple[str, int]:
     """Deterministic fetch outcome: ('ok'|'error', attempts_used).
     digit 0 → permanent error after 3 attempts (error sentinel, never an

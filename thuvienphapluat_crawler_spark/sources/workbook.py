@@ -30,11 +30,15 @@ the same nullability contract pd.read_excel gives pandas NaNs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import io
+import xml.etree.ElementTree as ET
+import zipfile
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..rowmap import flat_map_rows
+from .docxdoc import ZIP_XML_ERRORS
 
 GS, RS, US = "\x1d", "\x1e", "\x1f"
 
@@ -88,9 +92,6 @@ def build_xlsx(sheets: dict[str, list[list[str | None]]]) -> bytes:
     SpreadsheetML parts with a shared-string table (the standard Excel
     layout, so the reader's sst path is exercised). None cells are
     simply not written — the reader reconstructs the gaps from A1 refs."""
-    import io
-    import zipfile
-
     sst: list[str] = []
     sst_idx: dict[str, int] = {}
 
@@ -193,11 +194,15 @@ def parse_xlsx_bytes(data: bytes) -> list[tuple[str, int, list[str | None]]]:
     0-based dense row indices (row gaps become all-None rows, exactly
     pd.read_excel(header=None)'s NaN rows), every row padded to the
     sheet's max used width. Handles shared-string (t="s"), inline
-    (t="inlineStr") and raw (<v>) cells."""
-    import io
-    import xml.etree.ElementTree as ET
-    import zipfile
+    (t="inlineStr") and raw (<v>) cells. Bytes that are not a readable
+    workbook raise ValueError."""
+    try:
+        return _xlsx_rows(data)
+    except (*ZIP_XML_ERRORS, IndexError) as e:  # IndexError: shared-string index
+        raise ValueError(f"unreadable .xlsx: {e}") from e
 
+
+def _xlsx_rows(data: bytes) -> list[tuple[str, int, list[str | None]]]:
     z = zipfile.ZipFile(io.BytesIO(data))
 
     sst: list[str] = []
@@ -258,18 +263,14 @@ def parse_xlsx_bytes(data: bytes) -> list[tuple[str, int, list[str | None]]]:
 
 def sheets_from_xlsx(df: DataFrame, id_col: str = "doc_id", bin_col: str = "xlsx") -> DataFrame:
     """(doc_id, xlsx:binary) → one row per sheet row via the REAL decoder,
-    same Arrow-batched mapInPandas slot as sheets_from_workbooks — the
+    same Arrow-batched flat_map_rows stage as sheets_from_workbooks — the
     production S8 scan is `spark.read.format('binaryFile')` + this."""
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                for name, i, cells in parse_xlsx_bytes(bytes(payload)):
-                    rows.append((str(doc_id), name, i, cells))
-            yield pd.DataFrame(rows, columns=["doc_id", "sheet_name", "row_idx", "cells"])
+    def sheet_rows(doc_id, payload):
+        for name, i, cells in parse_xlsx_bytes(bytes(payload)):
+            yield str(doc_id), name, i, cells
 
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(run, SHEET_ROW_SCHEMA)
+    return flat_map_rows(df.select(F.col(id_col), F.col(bin_col)), sheet_rows, SHEET_ROW_SCHEMA)
 
 
 def sheets_from_workbooks(
@@ -277,14 +278,10 @@ def sheets_from_workbooks(
 ) -> DataFrame:
     """(doc_id, workbook) → one row per sheet row, Arrow-batched. With a
     real xlsx source this is `binaryFile` scan + openpyxl inside the same
-    mapInPandas (decode swap is local to this function)."""
+    flat_map_rows stage (decode swap is local to this function)."""
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[wb_col]):
-                for name, i, cells in parse_workbook(payload):
-                    rows.append((str(doc_id), name, i, cells))
-            yield pd.DataFrame(rows, columns=["doc_id", "sheet_name", "row_idx", "cells"])
+    def sheet_rows(doc_id, payload):
+        for name, i, cells in parse_workbook(payload):
+            yield str(doc_id), name, i, cells
 
-    return df.select(F.col(id_col), F.col(wb_col)).mapInPandas(run, SHEET_ROW_SCHEMA)
+    return flat_map_rows(df.select(F.col(id_col), F.col(wb_col)), sheet_rows, SHEET_ROW_SCHEMA)
