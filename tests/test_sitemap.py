@@ -61,3 +61,19 @@ def test_lastmod_optional_in_urlset():
     )
     kind, parsed = parse_sitemap(xml)
     assert parsed == [("https://h/d", None)]
+
+
+def test_fuzz_damaged_sitemap_raises_only_sitemap_format_error(mutants):
+    """Seeded damage to a valid urlset, decoded as a fetched body would be
+    (errors="replace"), either parses or raises SitemapFormatError —
+    never a bare ParseError, ValueError or AttributeError."""
+    blob = encode_urlset([(f"https://h0.example.test/doc/{i}", "2026-01-02") for i in range(4)]).encode()
+    outcomes = {"parsed": 0, "SitemapFormatError": 0}
+    for data in mutants(blob, seed=10):
+        try:
+            parse_sitemap(data.decode("utf-8", errors="replace"))
+        except SitemapFormatError:
+            outcomes["SitemapFormatError"] += 1
+        else:
+            outcomes["parsed"] += 1
+    assert all(outcomes.values()), outcomes

@@ -113,45 +113,3 @@ def test_salted_agg_count_and_avg_with_nulls(spark):
     }
     assert salted == plain
 
-
-def test_scale_job_memoized_sketch_equals_direct_formula():
-    # the frontier_scale_job parse stage memoizes per-token minhash/simhash
-    # contributions; values must equal the direct per-doc matrix formula
-    import hashlib
-
-    import numpy as np
-
-    from thuvienphapluat_crawler_spark.operators.dedup import (
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_P,
-    )
-    from thuvienphapluat_crawler_spark.sources import synthetic_web as SW
-
-    a_vec = np.array(MINHASH_A, dtype=np.int64).reshape(-1, 1)
-    b_vec = np.array(MINHASH_B, dtype=np.int64).reshape(-1, 1)
-    a0, b0 = int(MINHASH_A[0]), int(MINHASH_B[0])
-    bitpow = 1 << np.arange(32, dtype=np.int64)
-    for k in range(40):
-        u = SW.make_url(k % 7, k)
-        text = " ".join(s[1] for s in SW.page_spans(u) if s[0] == "text")
-        toks = set(text.split())
-        if not toks:
-            continue
-        th = np.array(
-            [int(hashlib.md5(t.encode()).hexdigest()[:8], 16) for t in toks], dtype=np.int64
-        )
-        sigs = ((th % MINHASH_P) * a_vec + b_vec) % MINHASH_P
-        want_sig0 = sigs.min(axis=1)[0]
-        bits = ((th[:, None] >> np.arange(32)) & 1) * 2 - 1
-        want_sim = int((bits.sum(axis=0) > 0).astype(np.int64) @ bitpow)
-        # memo-form (per token)
-        entries = []
-        for t in toks:
-            h = int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
-            s0 = ((h % MINHASH_P) * a0 + b0) % MINHASH_P
-            eb = (((h >> np.arange(32)) & 1) * 2 - 1).astype(np.int64)
-            entries.append((s0, eb))
-        got_sig0 = min(e[0] for e in entries)
-        got_sim = int((np.sum(np.stack([e[1] for e in entries]), axis=0) > 0).astype(np.int64) @ bitpow)
-        assert got_sig0 == want_sig0 and got_sim == want_sim, k

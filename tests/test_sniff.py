@@ -61,3 +61,23 @@ def test_text_and_binary_junk():
 def test_truncated_riff_is_not_misclassified():
     # 'RIFF' with fewer than 12 bytes cannot prove a subtype
     assert sniff_format(b"RIFF\x00\x00")[0] != "wav"
+
+
+def test_fuzz_damaged_blobs_never_raise(mutants):
+    """Seeded damage to every real codec's output still sniffs to a
+    (format, confidence) pair: the sniffer never raises."""
+    from thuvienphapluat_crawler_spark.sources.pngcodec import encode_png
+    from thuvienphapluat_crawler_spark.sources.warccodec import encode_record
+    from thuvienphapluat_crawler_spark.sources.wavcodec import encode_wav
+    from thuvienphapluat_crawler_spark.sources.workbook import build_xlsx
+
+    blobs = [
+        encode_png(np.zeros((4, 4, 3), dtype=np.uint8)),
+        encode_wav(np.zeros((8, 1), dtype=np.int64), 8000),
+        encode_record("https://h/1", b"x"),
+        build_xlsx({"S": [["a"]]}),
+    ]
+    for seed, blob in enumerate(blobs, start=11):
+        for data in mutants(blob, seed=seed):
+            kind, conf = sniff_format(data)
+            assert isinstance(kind, str) and isinstance(conf, int), (kind, conf)

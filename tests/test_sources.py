@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import textwrap
 
+import pytest
+
 from thuvienphapluat_crawler_spark.sources.catalog import catalog_file_join, read_catalog
 from thuvienphapluat_crawler_spark.sources.cookies import read_cookies
 
@@ -64,21 +66,14 @@ def test_xlsx_roundtrip_exact():
     assert got == sheets  # values, escaping, None gaps, sheet order
 
 
-def test_xlsx_parser_handles_row_gaps_and_inline_strings():
-    """Hand-built sheet XML (not from our writer): skipped row numbers
-    become all-None rows (pd.read_excel NaN-row semantics), sparse A1
-    refs land in the right columns, inline strings decode without a
-    shared-string table."""
+def _xlsx_with_sheet(sheet_data: str) -> bytes:
+    """A one-sheet .xlsx (sheet "S") around hand-written <sheetData> XML."""
     import io
     import zipfile
 
-    from thuvienphapluat_crawler_spark.sources.workbook import parse_xlsx_bytes
-
     sheet = (
         '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>'
-        '<row r="1"><c r="C1" t="inlineStr"><is><t>wide</t></is></c></row>'
-        '<row r="3"><c r="A3"><v>42</v></c></row>'
-        "</sheetData></worksheet>"
+        f"{sheet_data}</sheetData></worksheet>"
     )
     wb = (
         '<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
@@ -94,12 +89,55 @@ def test_xlsx_parser_handles_row_gaps_and_inline_strings():
         z.writestr("xl/workbook.xml", wb)
         z.writestr("xl/_rels/workbook.xml.rels", rels)
         z.writestr("xl/worksheets/sheet1.xml", sheet)
-    rows = parse_xlsx_bytes(buf.getvalue())
+    return buf.getvalue()
+
+
+def test_xlsx_parser_handles_row_gaps_and_inline_strings():
+    """Hand-built sheet XML (not from our writer): skipped row numbers
+    become all-None rows (pd.read_excel NaN-row semantics), sparse A1
+    refs land in the right columns, inline strings decode without a
+    shared-string table."""
+    from thuvienphapluat_crawler_spark.sources.workbook import parse_xlsx_bytes
+
+    rows = parse_xlsx_bytes(
+        _xlsx_with_sheet(
+            '<row r="1"><c r="C1" t="inlineStr"><is><t>wide</t></is></c></row>'
+            '<row r="3"><c r="A3"><v>42</v></c></row>'
+        )
+    )
     assert rows == [
         ("S", 0, [None, None, "wide"]),
         ("S", 1, [None, None, None]),  # gap row materialized
         ("S", 2, ["42", None, None]),  # raw <v> kept as string
     ]
+
+
+@pytest.mark.parametrize(
+    "second_row",
+    [
+        '<row r="3000000"><c r="A3000000"><v>1</v></c></row>',  # past row 1,048,576
+        '<row r="2"><c r="ZZZ2"><v>1</v></c></row>',  # past column XFD
+        '<row r="0"><c r="A1"><v>1</v></c></row>',  # rows are 1-based
+        '<row r="2"><c r="2"><v>1</v></c></row>',  # cell ref without a column
+    ],
+    ids=["huge_row", "huge_column", "row_zero", "digits_only_cell_ref"],
+)
+def test_xlsx_out_of_range_refs_raise_value_error(second_row):
+    """A row/cell ref outside A1:XFD1048576, or malformed, raises
+    instead of padding the sheet to it or silently dropping the cell."""
+    from thuvienphapluat_crawler_spark.sources.workbook import parse_xlsx_bytes
+
+    ok = '<row r="1"><c r="A1"><v>1</v></c></row>'
+    assert parse_xlsx_bytes(_xlsx_with_sheet(ok)) == [("S", 0, ["1"])]
+    with pytest.raises(ValueError):
+        parse_xlsx_bytes(_xlsx_with_sheet(ok + second_row))
+
+
+def test_xlsx_last_column_xfd_is_accepted():
+    from thuvienphapluat_crawler_spark.sources.workbook import parse_xlsx_bytes
+
+    [(_, _, cells)] = parse_xlsx_bytes(_xlsx_with_sheet('<row r="1"><c r="XFD1"><v>1</v></c></row>'))
+    assert len(cells) == 16_384 and cells[-1] == "1"
 
 
 def test_sheets_from_xlsx_spark_path(spark):

@@ -94,3 +94,17 @@ def test_missing_trailer_raises():
 def test_record_id_is_content_derived():
     uri = "https://docs.example.test/7"
     assert record_id_for(uri) == f"<urn:md5:{hashlib.md5(uri.encode()).hexdigest()}>"
+
+
+def test_fuzz_damaged_warc_raises_only_warc_format_error(mutants):
+    """Seeded damage to a valid WARC file either decodes or raises
+    WarcFormatError — never UnicodeDecodeError, ValueError or IndexError."""
+    outcomes = {"decoded": 0, "WarcFormatError": 0}
+    for data in mutants(encode_warc(RECORDS), seed=9):
+        try:
+            decode_warc(data)
+        except WarcFormatError:
+            outcomes["WarcFormatError"] += 1
+        else:
+            outcomes["decoded"] += 1
+    assert all(outcomes.values()), outcomes

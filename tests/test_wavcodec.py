@@ -101,3 +101,17 @@ def test_encode_out_of_int16_range_raises():
         encode_wav(np.array([0, 40000], dtype=np.int64), 8000)
     with pytest.raises(WavFormatError, match="int16 range"):
         encode_wav(np.array([-32769], dtype=np.int64), 8000)
+
+
+def test_fuzz_damaged_wav_raises_only_wav_format_error(mutants):
+    """Seeded damage to a valid WAV either decodes or raises
+    WavFormatError — never struct.error, ValueError or IndexError."""
+    outcomes = {"decoded": 0, "WavFormatError": 0}
+    for data in mutants(encode_wav(_sig(64, 2), 8000), seed=8):
+        try:
+            decode_wav(data)
+        except WavFormatError:
+            outcomes["WavFormatError"] += 1
+        else:
+            outcomes["decoded"] += 1
+    assert all(outcomes.values()), outcomes

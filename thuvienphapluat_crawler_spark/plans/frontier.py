@@ -41,7 +41,6 @@ from __future__ import annotations
 import json
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
-from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -168,8 +167,6 @@ class CrawlEngine:
     # -- pandas-UDF stages ------------------------------------------------
 
     def _fetch_group_fn(self, epoch: int):
-        world = self.world
-
         def fetch(pdf: pd.DataFrame) -> pd.DataFrame:
             # One host per group → politeness is structural. Virtual-clock
             # slots replace sleep() (upload_documents.py:129) so the
@@ -478,160 +475,3 @@ class CrawlEngine:
     def checkpoints(self) -> DataFrame:
         return self.wh.read(self.spark, "checkpoints", CHECKPOINT_SCHEMA)
 
-
-def frontier_scale_job(
-    spark: SparkSession,
-    n_urls: int,
-    n_hosts: int = 997,
-    budget_per_host: int = 1 << 30,
-    with_fetch: bool = True,
-) -> int:
-    """One full frontier generation over n_urls synthetic URLs — the
-    CPU-bound scaling workload for the N-vs-4N-parallelism evidence
-    (BASELINE.json north metric: URLs fetched+deduped/sec).
-
-    Pipeline (the engine's per-epoch dataflow, minus bookkeeping):
-      generate raw URLs (20% duplicated — dedup has real work)
-        → canonicalize (regex chain) → xxhash64
-        → exact dedup (groupBy url_hash)
-        → anti-join a 10%-of-space seen set
-        → per-host window rank (category_priority, depth, url_hash)
-        → politeness fetch slots
-        → fetch+parse (Arrow-batched pandas stage: retry simulation,
-          interleaved span extraction, content fingerprint)
-        → per-host aggregate
-
-    Shuffle hygiene: everything that crosses a shuffle is 4 narrow ints —
-    the URL string is re-derived inside the parse stage, never shuffled.
-
-    Returns the number of URLs fetched (actions the whole plan).
-    """
-    ids = spark.range(0, n_urls).select(
-        (F.col("id") % int(n_urls * 0.8)).alias("k")  # 20% dup rate
-    )
-    host_n = F.pmod(F.hash(F.col("k").cast("string")), F.lit(n_hosts))
-    doc_n = F.pmod(F.hash(F.concat(F.lit("d"), F.col("k").cast("string"))), F.lit(1_000_000))
-    cat = F.element_at(
-        F.array(*[F.lit(c) for c in SW.CATEGORIES]), (F.pmod(doc_n, F.lit(5)) + 1).cast("int")
-    )
-    raw = ids.select(
-        F.concat(
-            F.lit("HTTPS://Host"),
-            F.format_string("%03d", host_n),
-            F.lit(".Example.VN:443/van-ban/"),
-            cat,
-            F.lit("/doc-"),
-            doc_n.cast("string"),
-            F.lit(".aspx#section"),
-        ).alias("raw_url"),
-        F.pmod(F.col("k"), F.lit(6)).cast("int").alias("depth"),
-    )
-    url = U.canonicalize_url(F.col("raw_url"))
-    fr = raw.select(
-        F.xxhash64(url).alias("url_hash"),
-        F.regexp_extract(url, r"host(\d+)\.", 1).cast("int").alias("host_n"),
-        F.regexp_extract(url, r"doc-(\d+)\.aspx", 1).cast("int").alias("doc_n"),
-        U.category_priority(U.url_category(url)).alias("category_priority"),
-        F.col("depth"),
-    )
-    deduped = fr.groupBy("url_hash").agg(
-        F.first("host_n").alias("host_n"),
-        F.first("doc_n").alias("doc_n"),
-        F.first("category_priority").alias("category_priority"),
-        F.min("depth").alias("depth"),
-    )
-    # seen-set membership: the 10%-of-space "seen" predicate is derivable
-    # from the key itself here, so it stays a filter (the real engine's
-    # seen set is external state → bloom prefilter + left-anti join in
-    # run_epoch; that join is exercised there and in seen_antijoin)
-    pending = deduped.filter(F.pmod(F.col("url_hash"), F.lit(10)) != 0)
-    w = Window.partitionBy("host_n").orderBy("category_priority", "depth", "url_hash")
-    ranked = (
-        pending.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= budget_per_host)
-        .withColumn(
-            "fetch_slot",
-            (F.col("rank") - 1).cast("double") * (1.0 + F.pmod(F.col("host_n"), F.lit(3)).cast("double")),
-        )
-    )
-    if not with_fetch:
-        out = ranked.groupBy("host_n").agg(F.count("*").alias("n"), F.max("fetch_slot").alias("max_slot"))
-        return out.agg(F.sum("n")).collect()[0][0]
-
-    # MinHash permutation constants (content near-dup sketch per page)
-    from ..operators.dedup import MINHASH_A, MINHASH_B, MINHASH_P
-
-    def fetch_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # The engine's full per-document work: fetch simulation (retry
-        # semantics), interleaved span extraction, content fingerprint,
-        # MinHash signature + SimHash sketch over token hashes — i.e.
-        # what a training-data crawl actually computes per page.
-        # Token→(minhash contribution, simhash bits) is MEMOIZED across
-        # the task's whole input: corpus vocabularies are Zipfian, so
-        # the md5 + per-token matrix work collapses to a dict hit for
-        # all but first occurrences (values identical to the direct
-        # formula — tested in test_skew_and_state).
-        import hashlib
-
-        a0, b0 = int(MINHASH_A[0]), int(MINHASH_B[0])
-        bit_idx = np.arange(32)
-        bitpow = 1 << np.arange(32, dtype=np.int64)
-        tok_ix: dict[str, int] = {}
-        s0_rows: list[int] = []
-        bit_rows: list[np.ndarray] = []
-        S0 = np.empty(0, dtype=np.int64)
-        B = np.empty((0, 32), dtype=np.int64)
-
-        def tok_index(t: str) -> int:
-            i = tok_ix.get(t)
-            if i is None:
-                h = int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
-                tok_ix[t] = i = len(s0_rows)
-                s0_rows.append(((h % MINHASH_P) * a0 + b0) % MINHASH_P)
-                bit_rows.append((((h >> bit_idx) & 1) * 2 - 1).astype(np.int64))
-            return i
-
-        for pdf in it:
-            m = len(pdf)
-            ok = np.empty(m, dtype=bool)
-            n_spans = np.zeros(m, dtype=np.int64)
-            total_len = np.zeros(m, dtype=np.int64)
-            sig0 = np.zeros(m, dtype=np.int64)
-            simhash = np.zeros(m, dtype=np.int64)
-            for i, (h, n) in enumerate(zip(pdf["host_n"], pdf["doc_n"])):
-                u = SW.make_url(int(h), int(n))
-                status, _ = SW.fetch_attempts(u)
-                ok[i] = status == "ok"
-                if not ok[i]:
-                    continue
-                spans = SW.page_spans(u)
-                n_spans[i] = len(spans)
-                text = " ".join(s[1] for s in spans if s[0] == "text")
-                total_len[i] = len(text)
-                idx = [tok_index(t) for t in set(text.split())]
-                if len(s0_rows) > len(S0):  # vocab grew: rebuild the memo
-                    S0 = np.array(s0_rows, dtype=np.int64)  # matrices (rare
-                    B = np.vstack(bit_rows)  # after the first few docs)
-                sig0[i] = int(S0[idx].min())
-                simhash[i] = int((B[idx].sum(axis=0) > 0).astype(np.int64) @ bitpow)
-            yield pd.DataFrame(
-                {
-                    "host_n": pdf["host_n"],
-                    "ok": ok,
-                    "n_spans": n_spans,
-                    "total_len": total_len,
-                    "sig0": sig0,
-                    "simhash": simhash,
-                }
-            )
-
-    parsed = ranked.select("host_n", "doc_n").mapInPandas(
-        fetch_parse, "host_n int, ok boolean, n_spans long, total_len long, sig0 long, simhash long"
-    )
-    out = parsed.groupBy("host_n").agg(
-        F.count("*").alias("n"),
-        F.sum("n_spans").alias("spans"),
-        F.sum("total_len").alias("chars"),
-        F.approx_count_distinct("simhash").alias("distinct_sketches"),
-    )
-    return out.agg(F.sum("n")).collect()[0][0]

@@ -4457,10 +4457,9 @@ def crawl_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-signed, LSH-banded (with the hot-bucket cap), self-joined
     into candidate pairs, and exact-Jaccard-verified — the full
     crawl → sketch → candidates → verify loop the north_star describes.
-    At 100 TB: signatures are computed in the same scan that already
-    tokenizes the fetched page (frontier_scale_job demonstrates the
-    fused fetch+sketch stage); the banded self-join touches only
-    (doc_id, band, hash) rows, never page text."""
+    At 100 TB: signatures would be computed in the same scan that
+    already tokenizes the fetched page; the banded self-join touches
+    only (doc_id, band, hash) rows, never page text."""
     import atexit
     import shutil
     import tempfile

@@ -31,6 +31,7 @@ the same nullability contract pd.read_excel gives pandas NaNs.
 from __future__ import annotations
 
 import io
+import re
 import xml.etree.ElementTree as ET
 import zipfile
 
@@ -74,11 +75,22 @@ def _col_letter(i: int) -> str:
     return s
 
 
+MAX_ROWS, MAX_COLS = 1_048_576, 16_384  # SpreadsheetML sheet limits: A1:XFD1048576
+_CELL_REF = re.compile(r"([A-Z]+)[0-9]+")
+
+
+def _bounded(i: int, limit: int, what: str) -> int:
+    if not 0 <= i < limit:
+        raise ValueError(f"{what} {i + 1} outside 1..{limit}")
+    return i
+
+
 def _col_index(ref: str) -> int:
+    m = _CELL_REF.fullmatch(ref)
+    if not m:
+        raise ValueError(f"bad cell ref {ref!r}")
     n = 0
-    for ch in ref:
-        if ch.isdigit():
-            break
+    for ch in m[1]:
         n = n * 26 + (ord(ch) - 64)
     return n - 1
 
@@ -195,7 +207,8 @@ def parse_xlsx_bytes(data: bytes) -> list[tuple[str, int, list[str | None]]]:
     pd.read_excel(header=None)'s NaN rows), every row padded to the
     sheet's max used width. Handles shared-string (t="s"), inline
     (t="inlineStr") and raw (<v>) cells. Bytes that are not a readable
-    workbook raise ValueError."""
+    workbook raise ValueError, as do malformed row/cell refs and refs
+    outside A1:XFD1048576, so dense padding never exceeds a real sheet."""
     try:
         return _xlsx_rows(data)
     except (*ZIP_XML_ERRORS, IndexError) as e:  # IndexError: shared-string index
@@ -232,7 +245,7 @@ def _xlsx_rows(data: bytes) -> list[tuple[str, int, list[str | None]]]:
         for row_el in ET.fromstring(z.read(path)).iter():
             if _localname(row_el.tag) != "row":
                 continue
-            ri = int(row_el.get("r", next_row + 1)) - 1
+            ri = _bounded(int(row_el.get("r", next_row + 1)) - 1, MAX_ROWS, "row")
             next_row = ri + 1
             cells: dict[int, str] = {}
             next_col = 0
@@ -240,7 +253,7 @@ def _xlsx_rows(data: bytes) -> list[tuple[str, int, list[str | None]]]:
                 if _localname(c.tag) != "c":
                     continue
                 ref = c.get("r")
-                ci = _col_index(ref) if ref else next_col
+                ci = _bounded(_col_index(ref) if ref else next_col, MAX_COLS, "column")
                 next_col = ci + 1
                 t = c.get("t", "n")
                 val: str | None = None

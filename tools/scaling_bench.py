@@ -1,143 +1,75 @@
-"""Scaling-efficiency evidence: the same frontier generation job at two
-parallelism levels (local[N] vs local[4N]) on identical input.
+"""Throughput scaling efficiency of the crawl engine from N to 4N cores.
 
-The sandbox has no multi-executor cluster, so per BASELINE.md the
-two-cluster-size criterion is evidenced by core-count scaling: run
-frontier_scale_job (canonicalize → hash → dedup → seen anti-join →
-window rank → politeness slots) over the same n_urls at local[8] and
-local[32], report URLs/sec at both and efficiency =
-(throughput_4N / throughput_N) / 4.
+Each pair runs the benchmark's `crawl_wide` workload (perfbench/run.py)
+twice on the same seed: pinned to one core and pinned to four distinct
+cores. run.py sizes Spark from its CPU affinity, so the pin alone sets
+local[1] vs local[4]. A leg counts only if it exits 0 and its output
+passed the crawl oracle ("correct": true); a failed leg is reported with
+its stderr tail and the run goes on. Pair k uses seed k, and the leg
+order alternates (1-core first on odd pairs). Prints one JSON line per
+leg and per pair, then the median and IQR of the pair efficiencies
+tp4 / tp1 / 4 against the 0.8 target.
 
-Each parallelism level runs in a FRESH SparkSession (new JVM would be
-ideal; in-process we at least re-create the session with the new master
-— spark.master cannot change within a JVM, so this script execs itself
-per level). Usage:
-    python tools/scaling_bench.py [n_urls]        # orchestrates both levels
-    python tools/scaling_bench.py --one N_CPUS N_URLS   # single level (internal)
+    python tools/scaling_bench.py [pairs]      # default 5 pairs
 """
 
 from __future__ import annotations
 
 import json
-import multiprocessing as mp
+import os
+import statistics
 import subprocess
 import sys
-import time
 
-REPS = 1
-
-
-def _spin(q) -> None:
-    t0 = time.perf_counter()
-    n = 0
-    while time.perf_counter() - t0 < 3.0:
-        for _ in range(10000):
-            pass
-        n += 1
-    q.put(n)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CORES = {1: "0", 4: "0-3"}
+TARGET = 0.8
 
 
-def cpu_ceiling() -> dict:
-    """Pure-CPU hardware ceiling of this box: aggregate spin throughput at
-    8 vs 32 workers. On an SMT/oversubscribed host, 32 'cores' deliver
-    far less than 4× of 8 — NO job can scale past this ratio, so the
-    job's Spark-level efficiency is its speedup normalized by it."""
-    agg = {}
-    for workers in (8, 32):
-        q: mp.Queue = mp.Queue()
-        ps = [mp.Process(target=_spin, args=(q,)) for _ in range(workers)]
-        [p.start() for p in ps]
-        [p.join() for p in ps]
-        agg[workers] = sum(q.get() for _ in ps)
-    return {"agg8": agg[8], "agg32": agg[32], "ceiling_speedup": round(agg[32] / agg[8], 3)}
+def run_leg(cpus: int, seed: int) -> subprocess.CompletedProcess:
+    cmd = ["taskset", "-c", CORES[cpus], sys.executable, "perfbench/run.py",
+           "--workload", "crawl_wide", "--seed", str(seed), "--seconds", "10", "--trace", "0"]
+    return subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, check=False)
 
 
-def run_one(cpus: int, n_urls: int) -> None:
-    sys.path.insert(0, ".")
-    from thuvienphapluat_crawler_spark.plans.frontier import frontier_scale_job
-    from thuvienphapluat_crawler_spark.session import get_spark
-
-    spark = get_spark(app_name=f"scaling-{cpus}", cpus=cpus, shuffle_partitions=max(cpus, 8))
-    # JIT/codegen warm-up, twice (C2 compilation needs invocations), excluded from timing
-    frontier_scale_job(spark, 50_000)
-    frontier_scale_job(spark, 500_000)
-    best = None
-    for _ in range(REPS):
-        t0 = time.perf_counter()
-        n = frontier_scale_job(spark, n_urls)
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    print(json.dumps({"cpus": cpus, "n_urls": n_urls, "ranked": n, "sec": round(best, 3),
-                      "urls_per_sec": round(n_urls / best, 1)}))
-    spark.stop()
+def leg_throughput(out: subprocess.CompletedProcess) -> float:
+    """items_per_s of a correct leg; ValueError naming why it does not count."""
+    if out.returncode != 0:
+        raise ValueError(f"leg exited {out.returncode}")
+    try:
+        res = json.loads(out.stdout.strip().splitlines()[-1])
+    except (IndexError, json.JSONDecodeError):
+        raise ValueError("no result JSON line") from None
+    if res.get("correct") is not True:
+        raise ValueError("leg output not correct")
+    return float(res["metrics"]["items_per_s"]["value"])
 
 
-def main() -> None:
-    """Interleave the two levels over ROUNDS rounds (fresh subprocess per
-    measurement) and take best-of per level: the sandbox VM's host is
-    oversubscribed and identical runs vary several-fold, so adjacent
-    interleaved rounds + best-of is the least-biased estimator here."""
-    if len(sys.argv) > 1 and sys.argv[1] == "--one":
-        run_one(int(sys.argv[2]), int(sys.argv[3]))
-        return
-    n_urls = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
-    rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    best: dict[int, dict] = {}
-    ceilings = []
-    pair_effs = []
-    for rnd in range(rounds):
-        ceil = cpu_ceiling()  # measure the box right before the pair
-        ceilings.append(ceil["ceiling_speedup"])
-        print(json.dumps({"round": rnd, **ceil}))
-        pair = {}
-        for cpus in (8, 32):
-            out = subprocess.run(
-                [sys.executable, __file__, "--one", str(cpus), str(n_urls)],
-                capture_output=True, text=True, check=False,
-            )
-            lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-            if out.returncode != 0 or not lines:
-                # a leg dying (executor OOM, co-tenant kill) must not lose
-                # the other legs' measurements — record the failure + the
-                # stderr tail and keep going
-                print(json.dumps({
-                    "round": rnd, "cpus": cpus, "n_urls": n_urls,
-                    "error": f"leg exited {out.returncode}",
-                    "stderr_tail": out.stderr[-2000:],
-                }))
+def measure(pairs: int, run=run_leg, emit=print) -> dict:
+    effs = []
+    for k in range(1, pairs + 1):
+        tp = {}
+        for cpus in (1, 4) if k % 2 else (4, 1):
+            out = run(cpus, k)
+            try:
+                tp[cpus] = leg_throughput(out)
+            except ValueError as e:
+                emit(json.dumps({"pair": k, "cpus": cpus, "error": str(e), "stderr_tail": out.stderr[-2000:]}))
                 continue
-            res = json.loads(lines[-1])
-            print(json.dumps({"round": rnd, **res}))
-            pair[cpus] = res
-            if cpus not in best or res["sec"] < best[cpus]["sec"]:
-                best[cpus] = res
-        if 8 in pair and 32 in pair:
-            pair_effs.append(round(pair[32]["urls_per_sec"] / pair[8]["urls_per_sec"] / 4, 3))
-    if 8 not in best or 32 not in best:
-        print(json.dumps({"error": "no complete pair measured", "have": sorted(best)}))
-        return
-    tp8 = best[8]["urls_per_sec"]
-    tp32 = best[32]["urls_per_sec"]
-    speedup = tp32 / tp8
-    ceiling = max(ceilings)
-    print(json.dumps({
-        "metric": "throughput scaling efficiency N→4N (local[8]→local[32])",
-        "n_urls": n_urls,
-        "rounds": rounds,
-        "throughput_local8_urls_per_sec": tp8,
-        "throughput_local32_urls_per_sec": tp32,
-        "speedup": round(speedup, 3),
-        "efficiency_raw": round(speedup / 4, 3),
-        "per_round_pair_efficiency": pair_effs,
-        "cpu_ceiling_speedup_8to32": ceiling,
-        "efficiency_vs_hw_ceiling": round(speedup / ceiling, 3),
-        "note": "this box's 32 'cores' are SMT/oversubscribed — the pure-CPU "
-                "spin probe bounds ANY 8→32 speedup at ceiling_speedup; "
-                "efficiency_vs_hw_ceiling isolates the Spark-level scaling "
-                "the north rule is about (≥0.8 on real 4N executors)",
-        "target": 0.8,
-    }))
+            emit(json.dumps({"pair": k, "cpus": cpus, "items_per_s": tp[cpus]}))
+        if len(tp) == 2:
+            effs.append(tp[4] / tp[1] / 4)
+            emit(json.dumps({"pair": k, "seed": k, "first": "1-core" if k % 2 else "4-core",
+                             "efficiency": round(effs[-1], 3)}))
+    summary = {"metric": "crawl_wide throughput scaling efficiency, 1 -> 4 pinned cores",
+               "pairs": len(effs), "target": TARGET}
+    if effs:
+        q1, _, q3 = statistics.quantiles(effs, n=4, method="inclusive") if len(effs) > 1 else effs * 3
+        median = statistics.median(effs)
+        summary.update(median=round(median, 3), iqr=round(q3 - q1, 3), met=median >= TARGET)
+    emit(json.dumps(summary))
+    return summary
 
 
 if __name__ == "__main__":
-    main()
+    measure(int(sys.argv[1]) if len(sys.argv) > 1 else 5)
