@@ -189,3 +189,12 @@ def test_crawl_twice_is_idempotent(run):
     engine.run()
     assert engine.crawl_log().count() == n_log
     assert engine.seen().count() == n_seen
+
+
+def test_max_epochs_zero_runs_no_epoch(spark, tmp_path_factory):
+    """max_epochs=0 means bootstrap only: 0 is a bound, not "unset"."""
+    engine = CrawlEngine(spark, WORLD, str(tmp_path_factory.mktemp("wh_zero")), n_buckets=4)
+    assert engine.run(max_epochs=0) == 0
+    assert engine.wh.read_manifest()["epochs"] == [0]
+    assert engine.crawl_log().count() == 0
+    assert crawl_oracle.crawl(WORLD, max_epochs=0).log == []

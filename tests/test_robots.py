@@ -6,6 +6,10 @@ North-rule politeness: crawl-delay and robots rules; RFC 9309 semantics
 
 from __future__ import annotations
 
+import math
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from thuvienphapluat_crawler_spark.sources.robots import (
@@ -45,6 +49,30 @@ def test_star_fallback_when_agent_unknown():
     got = parse_robots(ROBOTS, "SomeOtherBot/2.0")
     assert got["rules"] == [("/van-ban/", False)]
     assert got["crawl_delay"] is None
+
+
+@pytest.mark.parametrize("val", ["inf", "Infinity", "1e999", "nan", "-3"])
+def test_non_finite_or_negative_crawl_delay_ignored(val):
+    got = parse_robots(f"User-agent: *\nCrawl-delay: {val}\nDisallow: /x\n", "bot")
+    assert got["crawl_delay"] is None
+    assert got["rules"] == [("/x", False)]
+
+
+@pytest.mark.parametrize("val, want", [("0", 0.0), ("2.5", 2.5)])
+def test_finite_crawl_delay_kept(val, want):
+    assert parse_robots(f"User-agent: *\nCrawl-delay: {val}\n", "bot")["crawl_delay"] == want
+
+
+def test_fuzz_parse_robots_shapes(mutants):
+    for blob in mutants(ROBOTS.encode(), seed=9):
+        got = parse_robots(blob.decode("utf-8", errors="replace"), "TVPL-Crawler/1.0")
+        assert isinstance(got["rules"], list) and isinstance(got["sitemaps"], list)
+        assert all(isinstance(p, str) and isinstance(a, bool) for p, a in got["rules"])
+        delay = got["crawl_delay"]
+        assert delay is None or (isinstance(delay, float) and math.isfinite(delay) and delay >= 0)
+        assert all(isinstance(u, str) for u in got["sitemaps"])
+        for pattern, _ in got["rules"]:
+            re.compile(_pattern_to_regex(pattern))
 
 
 def test_no_group_at_all():

@@ -67,3 +67,32 @@ def test_flat_map_rows_no_output_rows(small_batches):
     out = flat_map_rows(df, _expander(), OUT_SCHEMA)
     assert out.collect() == []
     assert out.schema == small_batches.createDataFrame([], OUT_SCHEMA).schema
+
+
+SPAN_IN = "doc_id long, n int"
+SPAN_OUT = "doc_id long, spans array<struct<kind:string,text:string,offset:int>>"
+
+
+def _doc_rows():
+    # one row per doc carrying a list of tuples: an empty list, a None
+    # array, a struct with a None field, and many structs
+    def doc_row(doc_id, n):
+        if doc_id % 4 == 1:
+            yield doc_id, None
+        else:
+            yield doc_id, [("text", None if i == 1 else f"s{doc_id}.{i}", i) for i in range(n)]
+
+    return doc_row
+
+
+def test_flat_map_rows_array_of_struct(small_batches):
+    df = small_batches.createDataFrame([(d, d % 3 * 2) for d in range(11)], SPAN_IN).coalesce(1)
+    doc_row = _doc_rows()
+    got = sorted(
+        (r.doc_id, None if r.spans is None else [tuple(s) for s in r.spans])
+        for r in flat_map_rows(df, doc_row, SPAN_OUT).collect()
+    )
+    want = sorted(out for r in df.collect() for out in doc_row(*r))
+    assert got == want
+    arrays = [s for _, s in want]
+    assert None in arrays and [] in arrays and any(s and s[1][1] is None for s in arrays)

@@ -30,7 +30,7 @@ def crawl(
     max_epochs: int | None = None,
     robots: bool = False,
 ) -> OracleResult:
-    max_epochs = max_epochs or world.max_epochs
+    max_epochs = world.max_epochs if max_epochs is None else max_epochs
     res = OracleResult()
 
     # frontier entries: url -> (depth, discovered_epoch); fetched set

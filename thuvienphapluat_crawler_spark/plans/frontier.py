@@ -12,7 +12,7 @@ checkpoint loop, ocr/ocr_pdf.py:158-195):
       │                              one task per host, virtual-clock slots)
       │                                                     ▼
       │                                   crawl_log (status, attempts, slot)
-      │                                           ok rows ──┬─ parse → spans → docs
+      │                                           ok rows ──┬─ parse → doc rows
       │                                                     └─ outlinks
       │                                                          ▼
       seen ◀──bloom prefilter + exact left-anti join── candidate URLs
@@ -61,7 +61,10 @@ CRAWL_LOG_SCHEMA = (
     FRONTIER_SCHEMA
     + ", epoch int, rank int, fetch_slot double, status string, attempts int, cookie_header string"
 )
-SPAN_ROW_SCHEMA = "doc_id string, canonical_url string, kind string, text string, media_ref string, offset int"
+DOC_SCHEMA = (
+    "doc_id string, canonical_url string, "
+    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, epoch int"
+)
 OUTLINK_SCHEMA = "out_url string, src_depth int"
 CHECKPOINT_SCHEMA = (
     "partition_id int, epoch int, n_ranked long, n_fetched long, n_ok long, n_error long, "
@@ -192,19 +195,18 @@ class CrawlEngine:
         return fetch
 
     @staticmethod
-    def _parse_fn(url: str):
-        """Fetched page URL → its interleaved span rows (the extract stage,
-        pipeline.py:216-322 re-expressed; content from the synthetic web)."""
-        doc_id = _doc_id_for(url)
-        for kind, text, media_ref, offset in SW.page_spans(url):
-            yield doc_id, url, kind, text, media_ref, offset
+    def _parse_fn(url: str, epoch: int):
+        """Fetched page URL → its one doc row, spans already in offset
+        order (the extract stage, pipeline.py:216-322 re-expressed;
+        content from the synthetic web)."""
+        yield _doc_id_for(url), url, SW.page_spans(url), epoch
 
-    def _html_span_rows(self, ok: DataFrame) -> DataFrame:
+    def _html_docs(self, ok: DataFrame, epoch: int) -> DataFrame:
         """The real extract path: fetch raw HTML (synthetic DOM twin of
         page_spans), run the DOM pipeline (parse → tooltip/footnote
-        joins → Điều normalization → line merge), emit paragraphs as
-        text spans. doc_id derives from the URL with column regexes —
-        same sanitization as _doc_id_for."""
+        joins → Điều normalization → line merge), fold each page's
+        paragraphs into its doc row as text spans. doc_id derives from
+        the URL with column regexes — same sanitization as _doc_id_for."""
         from ..sources.html_parse import extract_documents, parse_pages
 
         def fetch_html(url: str):
@@ -222,14 +224,19 @@ class CrawlEngine:
         )
         # merge emits source-line offsets; span offsets are the dense
         # paragraph sequence (0-based), matching the sequential oracle
-        w = Window.partitionBy("doc_id").orderBy("para_offset")
-        return paras.withColumn("_pi", F.row_number().over(w) - 1).select(
-            derived.alias("doc_id"),
-            url.alias("canonical_url"),
-            F.lit("text").alias("kind"),
-            F.col("paragraph").alias("text"),
-            F.lit("").alias("media_ref"),
-            F.col("_pi").cast("int").alias("offset"),
+        spans = F.transform(
+            F.sort_array(F.collect_list(F.struct("para_offset", "paragraph"))),
+            lambda p, i: F.struct(
+                F.lit("text").alias("kind"),
+                p["paragraph"].alias("text"),
+                F.lit("").alias("media_ref"),
+                i.alias("offset"),
+            ),
+        )
+        return (
+            paras.groupBy("doc_id")
+            .agg(spans.alias("spans"))
+            .select(derived.alias("doc_id"), url.alias("canonical_url"), "spans", F.lit(epoch).alias("epoch"))
         )
 
     def _outlinks_fn(self):
@@ -386,19 +393,9 @@ class CrawlEngine:
 
         ok = fetched.filter(F.col("status") == "ok")
         if self.content == "html":
-            span_rows = self._html_span_rows(ok)
+            docs = self._html_docs(ok, epoch)
         else:
-            span_rows = flat_map_rows(ok.select("canonical_url"), self._parse_fn, SPAN_ROW_SCHEMA)
-        docs = (
-            span_rows.groupBy("doc_id", "canonical_url")
-            .agg(F.collect_list(F.struct("kind", "text", "media_ref", "offset")).alias("_s"))
-            .select(
-                "doc_id",
-                "canonical_url",
-                F.expr("array_sort(_s, (a, b) -> a.offset - b.offset)").alias("spans"),
-                F.lit(epoch).cast("int").alias("epoch"),
-            )
-        )
+            docs = flat_map_rows(ok.select("canonical_url", F.lit(epoch)), self._parse_fn, DOC_SCHEMA)
 
         # The epoch's outputs split into two independent dataflows off the
         # localCheckpoint'ed fetch: (a) parse → docs + the crawl_log copy,
@@ -448,7 +445,7 @@ class CrawlEngine:
         or max_epochs; RESUMES from the last committed epoch (the
         progress.json semantics: max(last+1, start), ocr_pdf.py:135)."""
         self.bootstrap()
-        max_epochs = max_epochs or self.world.max_epochs
+        max_epochs = self.world.max_epochs if max_epochs is None else max_epochs
         e = self.wh.last_epoch() + 1
         while e <= max_epochs:
             if not self.run_epoch(e):
@@ -470,7 +467,7 @@ class CrawlEngine:
         )
 
     def docs(self) -> DataFrame:
-        return self.wh.read(self.spark, "docs", "doc_id string, canonical_url string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, epoch int")
+        return self.wh.read(self.spark, "docs", DOC_SCHEMA)
 
     def checkpoints(self) -> DataFrame:
         return self.wh.read(self.spark, "checkpoints", CHECKPOINT_SCHEMA)

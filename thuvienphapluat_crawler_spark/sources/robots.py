@@ -9,7 +9,7 @@ parse_robots implements the subset a crawler actually needs:
     most-specific agent match wins, '*' as fallback (RFC 9309 §2.2.1)
   - Allow/Disallow path rules with '*' wildcards and a '$' end anchor,
     longest-pattern-wins, tie → Allow (RFC 9309 §2.2.2)
-  - Crawl-delay (de-facto extension) per group
+  - Crawl-delay (de-facto extension) per group, finite and ≥ 0 only
   - comments (#), blank-line tolerance, empty Disallow = allow-all
 
 Rule evaluation is NOT done here row-by-row: rules_from_robots_txt turns
@@ -20,6 +20,7 @@ and evaluate with regexp_like — the 10^10-row side never leaves the JVM.
 
 from __future__ import annotations
 
+import math
 import re
 
 from pyspark.sql import DataFrame
@@ -75,9 +76,11 @@ def parse_robots(text: str, agent: str) -> dict:
                     cur["rules"].append((val, key == "allow"))
             elif key == "crawl-delay":
                 try:
-                    cur["delay"] = float(val)
+                    delay = float(val)
                 except ValueError:
-                    pass
+                    continue
+                if math.isfinite(delay) and delay >= 0:  # ignore inf, nan, negatives
+                    cur["delay"] = delay
 
     agent_lc = agent.lower()
     best, best_len = None, -1
