@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import threading
+from collections import Counter
 
 import pytest
 
@@ -103,6 +104,13 @@ def test_checkpoints_metrics_consistent(run):
     total_fetched = sum(c.n_fetched for c in cps)
     assert total_fetched == engine.crawl_log().count()
     assert all(c.lineage for c in cps)
+
+
+def test_manifest_n_ranked_is_epoch_log_size(run):
+    engine, _ = run
+    lineage = engine.wh.read_manifest()["lineage"]
+    ranked = {int(e): v["n_ranked"] for e, v in lineage.items() if e != "0"}
+    assert ranked and ranked == dict(Counter(r.epoch for r in engine.crawl_log().collect()))
 
 
 def test_resume_equals_full_run(spark, tmp_path_factory, run):

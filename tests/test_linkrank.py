@@ -52,3 +52,10 @@ def test_mass_is_bounded_by_total(spark):
     )
     total = sum(r.pr for r in pagerank_int(edges, nodes, iters=4).collect())
     assert total <= SCALE
+
+
+def test_empty_nodes_give_empty_ranks(spark):
+    edges, nodes = _graph(spark, [], [])
+    out = pagerank_int(edges, nodes, iters=3)
+    assert out.collect() == []
+    assert out.columns == ["node", "pr"]

@@ -51,6 +51,15 @@ def test_star_fallback_when_agent_unknown():
     assert got["crawl_delay"] is None
 
 
+@pytest.mark.parametrize("swap", [False, True])
+def test_empty_user_agent_names_no_agent(swap):
+    # "" is a substring of every agent string: counted as an agent, it tied
+    # '*' and file order picked the group
+    empty, star = "User-agent:\nDisallow: /\n", "User-agent: *\nAllow: /\n"
+    txt = f"{star}\n{empty}" if swap else f"{empty}\n{star}"
+    assert parse_robots(txt, "TVPL-Crawler")["rules"] == [("/", True)]
+
+
 @pytest.mark.parametrize("val", ["inf", "Infinity", "1e999", "nan", "-3"])
 def test_non_finite_or_negative_crawl_delay_ignored(val):
     got = parse_robots(f"User-agent: *\nCrawl-delay: {val}\nDisallow: /x\n", "bot")

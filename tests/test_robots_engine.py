@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 
 from thuvienphapluat_crawler_spark.plans import crawl_oracle
-from thuvienphapluat_crawler_spark.plans.frontier import CrawlEngine
+from thuvienphapluat_crawler_spark.plans.frontier import FRONTIER_SCHEMA, CrawlEngine
 from thuvienphapluat_crawler_spark.sources import synthetic_web as SW
 
 # budget/epochs chosen so the rules BITE: the plain crawl fetches 5 URLs
@@ -76,6 +76,21 @@ def test_robots_lineage_counts_blocked(run):
     lineage = engine.wh.read_manifest().get("lineage", {})
     blocked = [v.get("n_robots_blocked", 0) for v in lineage.values()]
     assert any(b > 0 for b in blocked)
+
+
+def test_robots_lineage_blocked_is_pending_disallowed(run):
+    # blocked URLs are never logged, so they stay pending and every epoch
+    # counts them again
+    engine, _ = run
+    frontier = engine.wh.read(engine.spark, "frontier", FRONTIER_SCHEMA).collect()
+    lineage = engine.wh.read_manifest()["lineage"]
+    for e, v in lineage.items():
+        if e == "0":
+            continue
+        want = sum(
+            1 for r in frontier if r.discovered_epoch <= int(e) and not SW.robots_allowed(r.canonical_url)
+        )
+        assert v["n_robots_blocked"] == want, e
 
 
 def test_missing_crawl_delay_falls_back(spark, tmp_path, monkeypatch):

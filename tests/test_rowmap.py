@@ -1,12 +1,16 @@
 """flat_map_rows against its own definition: the Spark output must equal
 `fn` applied serially to the collected input rows, across many small
-Arrow batches."""
+Arrow batches. materialize against a separate count() per counter, in
+one Spark job."""
 
 from __future__ import annotations
 
-import pytest
+import uuid
 
-from thuvienphapluat_crawler_spark.rowmap import flat_map_rows
+import pytest
+from pyspark.sql import functions as F
+
+from thuvienphapluat_crawler_spark.rowmap import flat_map_rows, materialize
 
 IN_SCHEMA = "doc_id long, payload binary, tags array<string>, note string"
 OUT_SCHEMA = "doc_id long, i int, chunk binary, tags array<string>, note string, score double"
@@ -96,3 +100,32 @@ def test_flat_map_rows_array_of_struct(small_batches):
     assert got == want
     arrays = [s for _, s in want]
     assert None in arrays and [] in arrays and any(s and s[1][1] is None for s in arrays)
+
+
+def _hits(spark, n):
+    return spark.range(n).select("id", (F.col("id") % 3 == 0).alias("hit"))
+
+
+def test_materialize_rows_and_counters_match_separate_counts(spark):
+    df = _hits(spark, 50)
+    out, counts = materialize(df, n=F.count(F.lit(1)), hits=F.count_if("hit"))
+    assert sorted(out.collect()) == sorted(df.collect())
+    assert counts == {"n": df.count(), "hits": df.filter("hit").count()}
+
+
+def test_materialize_empty_frame_counts_zero(spark):
+    out, counts = materialize(_hits(spark, 0), n=F.count(F.lit(1)), hits=F.count_if("hit"))
+    assert out.collect() == []
+    assert counts == {"n": 0, "hits": 0}
+
+
+def test_materialize_runs_one_job(spark):
+    sc = spark.sparkContext
+    group = f"materialize-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "materialize")
+    try:
+        materialize(_hits(spark, 50), n=F.count(F.lit(1)), hits=F.count_if("hit"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

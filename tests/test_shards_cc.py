@@ -72,6 +72,12 @@ def test_connected_components_diameter_100_chain_converges_fast(spark):
     assert len(got) == 101
 
 
+def test_connected_components_empty_edges(spark):
+    out = connected_components(spark.createDataFrame([], "src long, dst long"))
+    assert out.collect() == []
+    assert out.columns == ["node", "comp"]
+
+
 def test_connected_components_raises_on_exhausted_rounds(spark):
     """The silent-wrong path is gone: exhausting max_rounds before
     convergence raises instead of returning partial labels."""

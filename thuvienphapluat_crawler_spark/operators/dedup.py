@@ -25,6 +25,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..rowmap import materialize
 from .textstats import doc_fingerprint, token_hash32, tokens
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1
@@ -348,8 +349,9 @@ def connected_components(
     the component minimum shrink geometrically, so convergence is
     O(log diameter) rounds — a planted diameter-100 chain resolves in
     ~7 rounds, vs 100 for plain propagation. Each round is two bounded
-    shuffles on the node id; labels are localCheckpoint'ed per round so
-    the iterative plan never deepens. (Alternating small-star/large-star
+    shuffles on the node id and one `rowmap.materialize`: the checkpoint
+    keeps the iterative plan flat, and its job counts the changed labels
+    for the convergence check. (Alternating small-star/large-star
     [Kiveris et al., SoCC'14] is the other classic O(log n) layout; the
     hook+shortcut form reuses the same two join primitives and needs no
     edge-set rewriting.) Returns (node, component) with component = min
@@ -360,15 +362,11 @@ def connected_components(
     final zero-change detection round: a graph needing k productive
     rounds converges (is accepted) at max_rounds >= k + 1, because the
     fixpoint is only observed by one more round changing nothing."""
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     ).localCheckpoint()
-    labels = nodes.select("node", F.col("node").alias("comp")).localCheckpoint()
+    # every endpoint is an `a` of `sym`: never re-run the edge pipeline
+    labels = sym.select(F.col("a").alias("node"), F.col("a").alias("comp")).distinct().localCheckpoint()
     converged = False
     for _ in range(max_rounds):
         # hook: take the min label over the neighborhood
@@ -387,17 +385,17 @@ def connected_components(
         )
         # shortcut (pointer jumping): comp(u) <- comp(comp(u)). Labels are
         # always node ids, so the mapping join is total. The PREVIOUS
-        # label rides along so the convergence check is a filter over the
-        # freshly checkpointed round — not an extra old-vs-new join.
+        # label rides along so the convergence check is a counter on the
+        # round's checkpoint — not an extra old-vs-new join.
         ptr = hooked.select(F.col("node").alias("cnode"), F.col("comp").alias("ccomp"))
-        new = (
-            hooked.join(ptr, hooked["comp"] == ptr["cnode"])
-            .select("node", F.col("ccomp").alias("comp"), F.col("prev_comp"))
-            .localCheckpoint()
+        new, counts = materialize(
+            hooked.join(ptr, hooked["comp"] == ptr["cnode"]).select(
+                "node", F.col("ccomp").alias("comp"), F.col("prev_comp")
+            ),
+            n_changed=F.count_if(F.col("comp") != F.col("prev_comp")),
         )
-        n_changed = new.filter(F.col("comp") != F.col("prev_comp")).count()
         labels = new.select("node", "comp")
-        if n_changed == 0:
+        if counts["n_changed"] == 0:
             converged = True
             break
     if not converged:

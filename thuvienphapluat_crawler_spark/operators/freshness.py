@@ -22,15 +22,17 @@ rank, ties broken on page id — the established float-parity contract.
 Scale shape: one lag-window pass partitioned by page (each page's
 history is tiny; parallelism follows page count) → one groupBy(page)
 with map-side partial agg → scan-side estimator columns → one global
-rank for the schedule. At 10^10 pages the global dense_rank becomes a
-range-partitioned sort (the same distributed-prefix-sum shape as
-shards.py); the estimator itself stays two narrow shuffles.
+rank for the schedule, a range-partitioned prefix count
+(`shards.prefix_sum`), never a one-task global sort; the estimator
+itself stays two narrow shuffles.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .shards import prefix_sum
 
 MICROS_PER_DAY = 86_400_000_000
 
@@ -76,10 +78,10 @@ def freshness_schedule(history: DataFrame, n_parts: int | None = None) -> DataFr
     The global rank is DISTRIBUTED (r07): the order key
     (lambda desc_nulls_last, page_id asc) is total — page_id is unique
     per history row — so rank() degenerates to a global row_number,
-    computed as the shards.py two-phase prefix count:
+    computed as `shards.prefix_sum` of weight 1 (the rows before) + 1:
     repartitionByRange on the order key → per-partition row counts
     (P scalars to the driver) → broadcast exclusive offsets →
-    partition-local row_number + offset. No SinglePartition exchange
+    partition-local running count + offset. No SinglePartition exchange
     anywhere; recrawl scheduling is exactly the operator that runs over
     the full 10^10-page frontier, where a one-task global sort is the
     plan's scale-killer."""
@@ -110,24 +112,9 @@ def freshness_schedule(history: DataFrame, n_parts: int | None = None) -> DataFr
         ).alias("change_bp"),
         lam.alias("lambda_per_day"),
     )
-    spark = history.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    order_cols = [F.desc_nulls_last("lambda_per_day"), F.asc("page_id")]
-    parted = (
-        out.repartitionByRange(n_parts, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()  # pin sampled range boundaries across passes
-    )
-    counts = parted.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
-    acc = 0
-    offsets = []
-    for r in sorted(counts, key=lambda r: r["_pid"]):
-        offsets.append((int(r["_pid"]), acc))
-        acc += int(r["_n"])
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off bigint")
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
+    order = [F.desc_nulls_last("lambda_per_day"), F.asc("page_id")]
     return (
-        parted.join(F.broadcast(off_df), "_pid")
-        .withColumn("priority", (F.row_number().over(w) + F.col("_off")).cast("bigint"))
-        .drop("_pid", "_off")
+        prefix_sum(out, order, F.lit(1), n_parts)
+        .withColumn("priority", F.col("cum_before") + 1)
+        .drop("cum_before")
     )

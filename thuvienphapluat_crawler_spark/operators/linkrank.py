@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..rowmap import materialize
+
 SCALE = 1_000_000
 DAMP_PM = 850_000  # d = 0.85 in ppm
 
@@ -54,14 +56,13 @@ def pagerank_int(
     mass); `edges` rows are (src, dst) with duplicates meaningful
     (parallel links add parallel contributions, matching the SQL
     replay)."""
-    n_nodes = nodes.count()
+    nodes, counts = materialize(nodes.select(F.col(node).alias("node")), n_nodes=F.count(F.lit(1)))
+    n_nodes = counts["n_nodes"]
     if n_nodes == 0:
-        return nodes.select(F.col(node).alias("node"), F.lit(0).cast("bigint").alias("pr"))
+        return nodes.select("node", F.lit(0).cast("bigint").alias("pr"))
     base = (SCALE * (1_000_000 - DAMP_PM)) // (1_000_000 * n_nodes)
     outdeg = edges.groupBy(src).agg(F.count("*").alias("od"))
-    ranks = nodes.select(
-        F.col(node).alias("node"), F.lit(SCALE // n_nodes).cast("bigint").alias("pr")
-    ).localCheckpoint()
+    ranks = nodes.select("node", F.lit(SCALE // n_nodes).cast("bigint").alias("pr"))
     for _ in range(iters):
         contribs = (
             edges.join(ranks, edges[src] == ranks["node"])
@@ -76,8 +77,7 @@ def pagerank_int(
             .agg(F.sum("c").alias("s"))
         )
         ranks = (
-            nodes.select(F.col(node).alias("node"))
-            .join(contribs, "node", "left")
+            nodes.join(contribs, "node", "left")
             .select(
                 "node",
                 (F.lit(base) + F.coalesce(F.col("s"), F.lit(0))).cast("bigint").alias("pr"),

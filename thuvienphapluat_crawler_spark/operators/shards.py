@@ -20,8 +20,35 @@ across a range boundary and make "before" ambiguous).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def prefix_sum(
+    df: DataFrame, order: list[Column], weight: Column, n_parts: int | None = None
+) -> DataFrame:
+    """Adds `cum_before`: the global exclusive prefix sum of `weight` in
+    `order` (a unique key) order, by the two-phase form above."""
+    spark = df.sparkSession
+    n_parts = n_parts or spark.sparkContext.defaultParallelism
+    parts = (
+        df.repartitionByRange(n_parts, *order)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()  # pin the sampled range boundaries across passes
+    )
+    subtotals = parts.groupBy("_pid").agg(F.sum(weight).alias("_w")).collect()
+    acc = 0
+    offsets = []
+    for r in sorted(subtotals, key=lambda r: r["_pid"]):
+        offsets.append((int(r["_pid"]), acc))
+        acc += int(r["_w"])
+    off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off bigint")
+    w = Window.partitionBy("_pid").orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
+    return (
+        parts.join(F.broadcast(off_df), "_pid")
+        .withColumn("cum_before", (F.col("_off") + F.sum(weight).over(w) - weight).cast("bigint"))
+        .drop("_pid", "_off")
+    )
 
 
 def packed_shards(
@@ -33,32 +60,6 @@ def packed_shards(
 ) -> DataFrame:
     """Adds `cum_before` (global exclusive prefix sum of weight_col in
     order_col order) and `shard_id = floor(cum_before / budget)`."""
-    spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    parts = (
-        df.repartitionByRange(n_parts, F.col(order_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()  # pin the sampled range boundaries across passes
-    )
-    subtotals = parts.groupBy("_pid").agg(F.sum(weight_col).alias("_w")).collect()
-    acc = 0
-    offsets = []
-    for r in sorted(subtotals, key=lambda r: r["_pid"]):
-        offsets.append((int(r["_pid"]), acc))
-        acc += int(r["_w"])
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off bigint")
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        parts.join(F.broadcast(off_df), "_pid")
-        .withColumn("_cum_incl", F.sum(weight_col).over(w))
-        .withColumn(
-            "cum_before",
-            (F.col("_off") + F.col("_cum_incl") - F.col(weight_col)).cast("bigint"),
-        )
-        .withColumn("shard_id", F.floor(F.col("cum_before") / budget).cast("int"))
-        .drop("_pid", "_off", "_cum_incl")
+    return prefix_sum(df, [F.col(order_col)], F.col(weight_col), n_parts).withColumn(
+        "shard_id", F.floor(F.col("cum_before") / budget).cast("int")
     )

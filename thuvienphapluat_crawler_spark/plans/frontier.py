@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..functions import urls as U
 from ..operators import bloom as B
-from ..rowmap import flat_map_rows
+from ..rowmap import flat_map_rows, materialize
 from ..sources import synthetic_web as SW
 from .warehouse import SnapshotWarehouse
 
@@ -359,17 +359,16 @@ class CrawlEngine:
 
         pending = frontier.join(log.select("canonical_url"), "canonical_url", "left_anti")
         eligible = pending.filter(F.col("discovered_epoch") <= epoch)
-        n_blocked = 0
+        lineage = {"n_robots_blocked": 0}
         if self.robots:
             from ..sources.robots import apply_robots
 
-            el = apply_robots(
-                eligible.withColumn(
-                    "path", F.regexp_extract("canonical_url", r"^[a-z]+://[^/]+(/.*)$", 1)
-                ),
-                self._robots_rules(),
-            ).localCheckpoint()  # 2 consumers: blocked tally + allowed batch
-            n_blocked = el.filter(~F.col("allowed")).count()
+            path = F.regexp_extract("canonical_url", r"^[a-z]+://[^/]+(/.*)$", 1)
+            el, blocked = materialize(
+                apply_robots(eligible.withColumn("path", path), self._robots_rules()),
+                n_robots_blocked=F.count_if(~F.col("allowed")),
+            )
+            lineage.update(blocked)
             eligible = (
                 el.filter(F.col("allowed"))
                 .withColumnRenamed("crawl_delay", "robots_delay")
@@ -386,10 +385,10 @@ class CrawlEngine:
         fetched = batch.groupBy("host").applyInPandas(
             self._fetch_group_fn(epoch), CRAWL_LOG_SCHEMA
         )
-        fetched = fetched.localCheckpoint()  # cut lineage; epoch outputs reuse it
-        n_ranked = fetched.count()  # cheap: already materialized
-        if n_ranked == 0:
+        fetched, ranked = materialize(fetched, n_ranked=F.count(F.lit(1)))  # epoch outputs reuse it
+        if ranked["n_ranked"] == 0:
             return False
+        lineage.update(ranked)
 
         ok = fetched.filter(F.col("status") == "ok")
         if self.content == "html":
@@ -436,7 +435,7 @@ class CrawlEngine:
         wh.commit_epoch(
             epoch,
             ["crawl_log", "docs", "frontier", "checkpoints"],
-            lineage={"n_ranked": n_ranked, "n_robots_blocked": n_blocked},
+            lineage=lineage,
         )
         return True
 

@@ -5,6 +5,9 @@ The reference walks pages, rows and files with plain `for` loops
 Each becomes `flat_map_rows(df, fn, schema)`: `fn` is the loop body for
 one input row, run inside one Arrow-batched mapInPandas, so per-row
 Python never runs as a row UDF and binary payloads never cross a shuffle.
+`materialize` checkpoints a frame and counts its rows in the same job,
+as the reference counts progress in the loop that writes it
+(ocr/ocr_pdf.py:158-195).
 """
 
 from __future__ import annotations
@@ -12,7 +15,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql.types import StructType
 
 
@@ -34,3 +37,12 @@ def flat_map_rows(
             )
 
     return df.mapInPandas(run, schema)
+
+
+def materialize(df: DataFrame, **counters: Column) -> tuple[DataFrame, dict]:
+    """Checkpoints `df` (localCheckpoint) and returns it with `{name: value}`
+    of each aggregate in `counters`, observed on that one job. Count with
+    `F.count(F.lit(1))` / `F.count_if(cond)`: over no rows `F.sum` is null."""
+    obs = Observation()
+    out = df.observe(obs, *(c.alias(name) for name, c in counters.items())).localCheckpoint()
+    return out, obs.get

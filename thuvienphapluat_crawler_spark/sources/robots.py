@@ -68,7 +68,8 @@ def parse_robots(text: str, agent: str) -> dict:
                 cur = {"agents": [], "rules": [], "delay": None}
                 groups.append(cur)
                 after_rules = False
-            cur["agents"].append(val.lower())
+            if val:  # RFC 9309 has no empty product token: it names no agent
+                cur["agents"].append(val.lower())
         elif cur is not None:
             after_rules = True
             if key in ("allow", "disallow"):
