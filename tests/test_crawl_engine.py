@@ -1,11 +1,14 @@
 from __future__ import annotations
 
+import os
+import shutil
 import threading
 from collections import Counter
 
 import pytest
 
-from thuvienphapluat_crawler_spark.plans import crawl_oracle
+from thuvienphapluat_crawler_spark.operators import bloom as B
+from thuvienphapluat_crawler_spark.plans import crawl_oracle, warehouse
 from thuvienphapluat_crawler_spark.plans.frontier import CrawlEngine
 from thuvienphapluat_crawler_spark.sources import synthetic_web as SW
 
@@ -21,6 +24,13 @@ def spark_log_rows(engine: CrawlEngine):
 
 def oracle_log_rows(res: crawl_oracle.OracleResult):
     return sorted(res.log)
+
+
+def doc_spans(engine: CrawlEngine):
+    return {
+        r.canonical_url: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
+        for r in engine.docs().collect()
+    }
 
 
 @pytest.fixture(scope="module")
@@ -51,10 +61,7 @@ def test_seen_set_has_no_duplicates(run):
 
 def test_docs_span_sequences_match_oracle(run):
     engine, oracle = run
-    rows = engine.docs().collect()
-    got = {
-        r.canonical_url: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows
-    }
+    got = doc_spans(engine)
     assert set(got) == set(oracle.docs)
     for url, spans in oracle.docs.items():
         assert got[url] == spans, f"span mismatch for {url}"
@@ -113,6 +120,22 @@ def test_manifest_n_ranked_is_epoch_log_size(run):
     assert ranked and ranked == dict(Counter(r.epoch for r in engine.crawl_log().collect()))
 
 
+def test_warehouse_root_holds_only_committed_deltas(run):
+    """Every engine write under the root goes through stage() and
+    commit_epoch(): each <table>/epoch=N dir is a committed delta of that
+    table and the manifest is the only other entry. The newest bloom row
+    of each bucket counts every seen URL exactly once."""
+    engine, _ = run
+    root, tables = engine.wh.root, engine.wh.read_manifest()["tables"]
+    assert set(tables) == {"crawl_log", "docs", "frontier", "checkpoints", "bloom"}
+    assert set(os.listdir(root)) == {*tables, "manifest.json"}
+    for t, epochs in tables.items():
+        assert sorted(os.listdir(os.path.join(root, t))) == [f"epoch={e:05d}" for e in sorted(epochs)]
+    last = engine.wh.last_epoch()
+    n_keys = sum(B.load_bucket(root, b, last).n_keys for b in range(engine.n_buckets))
+    assert n_keys == engine.seen().count()
+
+
 def test_resume_equals_full_run(spark, tmp_path_factory, run):
     """Kill after epoch 2, resume with a FRESH engine → identical final
     state to the uninterrupted run (the reference's progress.json resume,
@@ -128,6 +151,15 @@ def test_resume_equals_full_run(spark, tmp_path_factory, run):
     a = {r.canonical_url for r in resumed.seen().collect()}
     b = {r.canonical_url for r in full.seen().collect()}
     assert a == b
+
+
+def test_root_without_committed_bloom_is_refused(spark, tmp_path):
+    """A root whose manifest has epochs but no bloom table (committed while
+    the bloom lived outside the manifest) would resume with empty filters
+    and duplicate seen URLs; the engine refuses it instead."""
+    warehouse.SnapshotWarehouse(str(tmp_path)).commit_epoch(0, ["frontier"])
+    with pytest.raises(ValueError, match="no committed bloom table"):
+        CrawlEngine(spark, WORLD, str(tmp_path), n_buckets=4).run()
 
 
 def _pool_threads() -> set[threading.Thread]:
@@ -174,6 +206,55 @@ def test_epoch_failure_after_writes_start_leaves_no_pool(spark, tmp_path_factory
     oracle = crawl_oracle.crawl(WORLD)
     assert spark_log_rows(resumed) == oracle_log_rows(oracle)
     assert {r.canonical_url for r in resumed.seen().collect()} == oracle.seen
+
+
+@pytest.fixture(scope="module")
+def committed_to_epoch_1(spark, tmp_path_factory):
+    """A warehouse with epochs 0 and 1 committed; each crash case copies it."""
+    root = str(tmp_path_factory.mktemp("wh_e1"))
+    CrawlEngine(spark, WORLD, root, n_buckets=4).run(max_epochs=1)
+    return root
+
+
+@pytest.mark.parametrize("step", ["crawl_log", "docs", "frontier", "checkpoints", "bloom", "commit"])
+def test_crash_at_any_epoch_step_resumes_to_oracle(spark, tmp_path, committed_to_epoch_1, monkeypatch, step):
+    """A failure at any step of epoch 2 (one table's staged write, or the
+    manifest swap) leaves the manifest as it was, and a fresh engine on
+    the same root resumes to the oracle's log, seen set and doc spans."""
+    root = str(tmp_path / "wh")
+    shutil.copytree(committed_to_epoch_1, root)
+    engine = CrawlEngine(spark, WORLD, root, n_buckets=4)
+    before = engine.wh.read_manifest()
+    if step == "commit":
+        real_replace = os.replace
+
+        def replace(src, dst):
+            if dst == engine.wh.manifest_path:
+                raise OSError("injected manifest swap failure")
+            return real_replace(src, dst)
+
+        monkeypatch.setattr(warehouse.os, "replace", replace)
+    else:
+        real_stage = engine.wh.stage
+
+        def stage(table, epoch, df):
+            if table == step:
+                raise OSError(f"injected {table} write failure")
+            return real_stage(table, epoch, df)
+
+        monkeypatch.setattr(engine.wh, "stage", stage)
+    with pytest.raises(OSError, match="injected"):
+        engine.run()
+    monkeypatch.undo()
+    assert engine.wh.read_manifest() == before
+
+    resumed = CrawlEngine(spark, WORLD, root, n_buckets=4)
+    resumed.run()
+    oracle = crawl_oracle.crawl(WORLD)
+    assert spark_log_rows(resumed) == oracle_log_rows(oracle)
+    seen = [r.canonical_url for r in resumed.seen().collect()]
+    assert len(seen) == len(oracle.seen) and set(seen) == oracle.seen
+    assert doc_spans(resumed) == oracle.docs
 
 
 def test_determinism_across_parallelism(spark, tmp_path_factory, run):

@@ -56,19 +56,13 @@ def test_frame_sampling_shape(spark, media):
     assert idxs == {0, 4}
 
 
-def test_real_decoder_path_is_marked():
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"FAKExyz", real_decoders=True)
-
-
 def test_png_payload_decodes_for_real_in_every_mode():
     import numpy as np
 
     from thuvienphapluat_crawler_spark.sources.pngcodec import encode_png
 
     blob = encode_png(np.zeros((5, 9, 3), dtype=np.uint8))
-    for real in (False, True):
-        assert decode_stub(blob, real_decoders=real) == ("png", 9, 5)
+    assert decode_stub(blob) == ("png", 9, 5)
 
 
 def test_url_encode_segment_matches_python_quote(spark):

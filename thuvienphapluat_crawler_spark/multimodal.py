@@ -2,12 +2,11 @@
 
 The reference routes media through external decoders (PyMuPDF page→PNG
 ocr/ocr_pdf.py:37-45, pdfplumber tables, soffice DOC conversion); those
-libraries are not in this container, so the DECODE step is stubbed —
-either a clearly-marked NotImplementedError (real_decoders=True) or a
-deterministic fake (default) — while everything Spark-side is real and
-tested: the binary schema, the Arrow batch shape through mapInPandas,
-partition-size control for fat binary rows, and the feature/metadata
-contracts.
+libraries are not in this container. PNG, PCM WAV and uncompressed AVI
+decode for real (sources/); every other format gets a deterministic
+fake decode, while everything Spark-side is real and tested: the
+binary schema, the Arrow batch shape through mapInPandas, partition-size
+control for fat binary rows, and the feature/metadata contracts.
 
 Scale design: binary payloads never cross a shuffle — features and
 metadata are extracted in the scan-side mapInPandas pass and only the
@@ -107,16 +106,16 @@ def synth_media(
     return flat_map_rows(docs.select("doc_id", "media_ref", "kind"), item, MEDIA_SCHEMA)
 
 
-def decode_stub(content: bytes, real_decoders: bool = False) -> tuple[str, int, int]:
+def decode_stub(content: bytes) -> tuple[str, int, int]:
     """Decode step → (format, width, height).
 
-    PNG payloads are decoded FOR REAL in every mode (sources/pngcodec —
-    stdlib zlib+CRC codec, r03), and so are PCM WAVs since r05
+    PNG payloads are decoded FOR REAL (sources/pngcodec — stdlib
+    zlib+CRC codec, r03), and so are PCM WAVs since r05
     (sources/wavcodec; width=n_frames, height=n_channels — the audio
-    shape in the image-shaped metadata contract). real_decoders=True is
-    the production path for the remaining formats (JPEG via PIL, video
+    shape in the image-shaped metadata contract) and uncompressed-DIB
+    AVIs (sources/avicodec). The remaining formats (JPEG via PIL, video
     via ffmpeg, PDF rasterization via PyMuPDF — not installed in this
-    container)."""
+    container) get the deterministic fake below."""
     if content[:8] == b"\x89PNG\r\n\x1a\n":
         from .sources.pngcodec import decode_png
 
@@ -132,24 +131,17 @@ def decode_stub(content: bytes, real_decoders: bool = False) -> tuple[str, int, 
 
         frames, _fps = decode_avi(content)
         return "avi", int(frames.shape[2]), int(frames.shape[1])
-    if real_decoders:
-        raise NotImplementedError(
-            "JPEG/compressed-video/PDF-raster decoding requires PIL/ffmpeg/PyMuPDF — "
-            "not in this container; PNG, PCM WAV and uncompressed-DIB AVI decode for "
-            "real above, the deterministic fake below exercises the identical Spark "
-            "plumbing for the rest"
-        )
     if content[:4] == b"FAKE":
         return "fake", 64 + content[4], 64 + content[5]
     return "unknown", 0, 0
 
 
-def extract_features(media: DataFrame, real_decoders: bool = False) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Media table → per-item metadata + FEATURE_DIM-dim embedding.
     Arrow-batched; binary stays inside the scan-side pass (never shuffled)."""
 
     def feats(doc_id, ref, kind, content):
-        fmt, w, h = decode_stub(bytes(content), real_decoders)
+        fmt, w, h = decode_stub(bytes(content))
         digest = hashlib.md5(bytes(content)).digest()
         vec = (np.frombuffer(digest[:FEATURE_DIM], dtype=np.uint8) / 255.0).astype(np.float64)
         yield doc_id, ref, kind, len(content), fmt, w, h, list(vec)

@@ -7,10 +7,15 @@ Python). The bloom is a PREFILTER only: negatives are guaranteed-unseen
 against the seen table — so false positives can never violate the
 exact-match requirement; they only cost a join probe.
 
-Bitmaps are persisted per (epoch, bucket) beside the warehouse manifest
-— the seen-set's checkpoint state, versioned with the same epoch commit
-(lineage records the bloom version). On a real cluster the .npy files
-live on shared storage (S3/HDFS); executors read the bucket they own.
+Persistence: the bitmaps are the warehouse's `bloom` table (SCHEMA), one
+row per touched host_bucket per epoch delta, staged and committed in the
+same manifest swap as the epoch's other tables (plans/warehouse.py).
+`update_bucket` only computes a bucket's next row; the engine stages the
+rows. Readers take the newest row for the bucket among the committed
+epochs ≤ up_to_epoch, so a staged but uncommitted epoch is never read
+and a bucket with no new keys in an epoch keeps its previous row.
+`n_keys` is the bucket's cumulative insert count, the input to sizing a
+bucket from its load.
 
 The bloom is the only seen filter. The seen set only grows (no
 deletion), and the benchmark measures the bloom's false-positive rate on
@@ -21,14 +26,16 @@ URLs.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
+import pyarrow.parquet as pq
 
 # splitmix64 constants — public-domain mixing function
 _C1 = np.uint64(0xBF58476D1CE4E5B9)
 _C2 = np.uint64(0x94D049BB133111EB)
 _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
+
+SCHEMA = "host_bucket int, bits binary, n_keys long"
+CAPACITY = 1 << 16  # keys per bucket bitmap at 10 bits per key
 
 
 def _mix(x: np.ndarray) -> np.ndarray:
@@ -45,7 +52,7 @@ def _mix(x: np.ndarray) -> np.ndarray:
 class BloomFilter:
     """Vectorized bloom over int64/uint64 keys (xxhash64 of canonical URL)."""
 
-    def __init__(self, n_bits: int, n_hashes: int = 4, bits: np.ndarray | None = None):
+    def __init__(self, n_bits: int, n_hashes: int = 4, bits: np.ndarray | None = None, n_keys: int = 0):
         # Round n_bits up to a byte multiple: load_bucket reconstructs
         # n_bits as len(bits)*8, so a non-aligned modulus would change
         # after persist+reload and reintroduce false NEGATIVES (breaking
@@ -53,6 +60,7 @@ class BloomFilter:
         self.n_bits = (int(n_bits) + 7) // 8 * 8
         self.n_hashes = int(n_hashes)
         self.bits = bits if bits is not None else np.zeros(self.n_bits // 8, dtype=np.uint8)
+        self.n_keys = int(n_keys)
 
     @classmethod
     def for_capacity(cls, capacity: int, bits_per_key: int = 10) -> "BloomFilter":
@@ -72,6 +80,7 @@ class BloomFilter:
     def add(self, keys: np.ndarray) -> None:
         if len(keys) == 0:
             return
+        self.n_keys += len(keys)
         pos = self._positions(np.asarray(keys)).ravel()
         np.bitwise_or.at(self.bits, (pos >> np.uint64(3)).astype(np.int64), (1 << (pos & np.uint64(7))).astype(np.uint8))
 
@@ -86,58 +95,28 @@ class BloomFilter:
         return hit.all(axis=0)
 
 
-# ---------------------------------------------------------------------------
-# Per-bucket persistence: bloom/epoch=<e>/bucket_<b>.npy under the warehouse
-# root (shared storage on a real cluster). Executors touch ONLY the bucket
-# they own — probe and update both run inside pandas UDF partitions.
-# A bucket with no new keys in an epoch simply has no file there; readers
-# walk back to the most recent epoch that wrote it (copy-forward for free).
-# Crash safety: a half-written epoch-e file is ignored by re-runs because
-# both probe and update base themselves on up_to_epoch = e-1.
-# ---------------------------------------------------------------------------
+def load_bucket(root: str, bucket: int, up_to_epoch: int) -> BloomFilter:
+    """The bucket's newest committed bloom row at epoch ≤ up_to_epoch,
+    or an empty filter if no committed epoch touched the bucket."""
+    from ..plans.warehouse import SnapshotWarehouse  # plans imports this module
 
-
-def _bloom_dir(root: str, epoch: int) -> str:
-    return os.path.join(root, "bloom", f"epoch={epoch:05d}")
-
-
-def load_bucket(root: str, bucket: int, up_to_epoch: int) -> BloomFilter | None:
-    """Most recent persisted bloom for `bucket` at epoch ≤ up_to_epoch.
-    Anything but a 1-D uint8 bitmap is refused: loaded as a bloom, it
-    could answer "definitely new" for a seen URL."""
-    for e in range(up_to_epoch, -1, -1):
-        p = os.path.join(_bloom_dir(root, e), f"bucket_{bucket}.npy")
-        if os.path.exists(p):
-            arr = np.load(p, allow_pickle=False)
-            if arr.ndim != 1 or arr.dtype != np.uint8:
-                raise ValueError(f"{p}: not a bloom bitmap (shape {arr.shape}, dtype {arr.dtype})")
-            return BloomFilter(n_bits=int(arr.shape[0]) * 8, bits=arr)
-    return None
+    for path in reversed(SnapshotWarehouse(root).delta_paths("bloom", up_to_epoch)):
+        rows = pq.read_table(path, filters=[("host_bucket", "=", bucket)]).to_pylist()
+        if rows:
+            bits = np.frombuffer(rows[0]["bits"], dtype=np.uint8).copy()
+            return BloomFilter(n_bits=len(bits) * 8, bits=bits, n_keys=rows[0]["n_keys"])
+    return BloomFilter.for_capacity(CAPACITY)
 
 
 def probe_bucket(root: str, bucket: int, up_to_epoch: int, keys: np.ndarray) -> np.ndarray:
     """maybe-seen flags for keys; all-False if the bucket has no filter yet."""
-    f = load_bucket(root, bucket, up_to_epoch)
-    if f is None:
-        return np.zeros(len(keys), dtype=bool)
-    return f.contains(keys)
+    return load_bucket(root, bucket, up_to_epoch).contains(keys)
 
 
-def update_bucket(
-    root: str,
-    bucket: int,
-    epoch: int,
-    keys: np.ndarray,
-    capacity: int = 1 << 16,
-) -> None:
-    """Add keys to the bucket's bloom and persist it at `epoch`
-    (atomic tmp+rename; based on the last bloom at ≤ epoch-1 so a
-    crashed half-epoch write is never compounded)."""
-    f = load_bucket(root, bucket, epoch - 1) or BloomFilter.for_capacity(capacity)
+def update_bucket(root: str, bucket: int, epoch: int, keys: np.ndarray) -> tuple[int, bytes, int]:
+    """The bucket's `bloom` row for `epoch` (SCHEMA order): its committed
+    filter as of epoch-1 plus `keys`. Based on epoch-1, a re-run of a
+    crashed epoch never compounds that epoch's staged row."""
+    f = load_bucket(root, bucket, epoch - 1)
     f.add(keys)
-    d = _bloom_dir(root, epoch)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".bucket_{bucket}.tmp.npy")
-    with open(tmp, "wb") as fh:  # np.save on a path would re-append .npy
-        np.save(fh, f.bits, allow_pickle=False)
-    os.replace(tmp, os.path.join(d, f"bucket_{bucket}.npy"))
+    return bucket, f.bits.tobytes(), f.n_keys

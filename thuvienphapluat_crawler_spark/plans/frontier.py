@@ -17,7 +17,8 @@ checkpoint loop, ocr/ocr_pdf.py:158-195):
       │                                                          ▼
       seen ◀──bloom prefilter + exact left-anti join── candidate URLs
       frontier += confirmed-new (depth+1, discovered_epoch = e+1)
-      checkpoints += per-bucket metrics;  ONE atomic manifest commit
+      bloom += touched buckets' bitmaps;  checkpoints += per-bucket metrics
+      ONE atomic manifest commit over all five staged tables
 
 Scale notes (the 100 TB story):
   * frontier/seen deltas are written partitioned by host_bucket → epoch
@@ -33,7 +34,9 @@ Scale notes (the 100 TB story):
     parse, bloom) — no row-at-a-time UDFs anywhere.
   * determinism: every ordering is (category_priority, depth, url_fp) —
     no wall clock, no task-order dependence; the same world crawls
-    identically at local[2] and local[32] (tested).
+    identically at n_buckets 4 and 16 (tests/test_crawl_engine.py), and
+    equals the sequential oracle at SPARK_GRAFT_CPUS=1 and =4
+    (tools/verify_oracle.py).
 """
 
 from __future__ import annotations
@@ -127,7 +130,13 @@ class CrawlEngine:
         seen set IS the frontier projected to its identity columns —
         frontier rows are inserted exactly once — so no separate seen
         table is written; see seen().)"""
-        if self.wh.last_epoch() >= 0:
+        m = self.wh.read_manifest()
+        if m["epochs"]:
+            # a root committed while the bloom lived outside the manifest
+            # would resume with empty filters, whose "definitely new"
+            # answers skip the exact anti-join and duplicate seen URLs
+            if "bloom" not in m["tables"]:
+                raise ValueError(f"{self.wh.root}: no committed bloom table; crawl into a fresh root")
             return
         seeds = SW.seed_urls(self.world, self.seeds_per_host)
         raw = self.spark.createDataFrame([(u,) for u in seeds], "canonical_url string")
@@ -135,11 +144,11 @@ class CrawlEngine:
         with ThreadPoolExecutor(max_workers=2) as pool:
             futs = [
                 pool.submit(self.wh.stage, "frontier", 0, fr.repartition(self.n_buckets, "host_bucket")),
-                pool.submit(self._bloom_update, fr, 0),
+                pool.submit(self.wh.stage, "bloom", 0, self._bloom_update(fr, 0)),
             ]
             for f in futs:
                 f.result()
-        self.wh.commit_epoch(0, ["frontier"], lineage={"seeds": len(seeds)})
+        self.wh.commit_epoch(0, ["frontier", "bloom"], lineage={"seeds": len(seeds)})
 
     def _cookie_dim(self) -> DataFrame:
         """Per-host cookie dimension (S1 output shape) broadcast-joined
@@ -249,35 +258,32 @@ class CrawlEngine:
         return outlinks
 
     def _bloom_probe_fn(self, up_to_epoch: int):
-        root, n = self.wh.root, self.n_buckets
+        root = self.wh.root
 
         def probe(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            filters = {}  # host_bucket → its bloom, loaded once per task
             for pdf in it:
                 flags = np.zeros(len(pdf), dtype=bool)
                 for b, idx in pdf.groupby("host_bucket").groups.items():
+                    if b not in filters:
+                        filters[b] = B.load_bucket(root, int(b), up_to_epoch)
                     keys = pdf.loc[idx, "url_hash"].to_numpy(dtype=np.int64)
-                    flags[pdf.index.get_indexer(idx)] = B.probe_bucket(root, int(b), up_to_epoch, keys)
+                    flags[pdf.index.get_indexer(idx)] = filters[b].contains(keys)
                 yield pdf.assign(maybe_seen=flags)
 
         return probe
 
-    def _bloom_update(self, new_rows: DataFrame, epoch: int) -> None:
-        """Distributed bloom update: one applyInPandas task per bucket
-        writes its own .npy (atomic rename); buckets with no new keys
-        keep their previous file (walk-back read)."""
+    def _bloom_update(self, new_rows: DataFrame, epoch: int) -> DataFrame:
+        """The epoch's `bloom` delta: one applyInPandas group per touched
+        bucket adds its new keys to the bucket's committed bitmap. Staging
+        the frame is the action; untouched buckets keep their last row."""
         root = self.wh.root
 
         def upd(pdf: pd.DataFrame) -> pd.DataFrame:
             b = int(pdf["host_bucket"].iloc[0])
-            B.update_bucket(root, b, epoch, pdf["url_hash"].to_numpy(dtype=np.int64))
-            return pd.DataFrame({"host_bucket": [b], "n": [len(pdf)]})
+            return pd.DataFrame([B.update_bucket(root, b, epoch, pdf["url_hash"].to_numpy(dtype=np.int64))])
 
-        counts = (
-            new_rows.select("host_bucket", "url_hash")
-            .groupBy("host_bucket")
-            .applyInPandas(upd, "host_bucket int, n long")
-        )
-        counts.collect()  # action: materialize the writes
+        return new_rows.select("host_bucket", "url_hash").groupBy("host_bucket").applyInPandas(upd, B.SCHEMA)
 
     def _discover(self, ok: DataFrame, frontier: DataFrame, epoch: int) -> tuple[DataFrame, DataFrame]:
         """Outlinks of the ok fetches → (probed candidates, confirmed-new
@@ -416,7 +422,7 @@ class CrawlEngine:
             futs += [
                 pool.submit(wh.stage, "frontier", epoch, new_rows.repartition(self.n_buckets, "host_bucket")),
                 pool.submit(wh.stage, "checkpoints", epoch, checkpoints),
-                pool.submit(self._bloom_update, new_rows, epoch),
+                pool.submit(wh.stage, "bloom", epoch, self._bloom_update(new_rows, epoch)),
             ]
             for f in futs:
                 f.result()  # propagate the first failure, never commit partial
@@ -432,11 +438,7 @@ class CrawlEngine:
             raise
         finally:
             pool.shutdown(wait=True)
-        wh.commit_epoch(
-            epoch,
-            ["crawl_log", "docs", "frontier", "checkpoints"],
-            lineage=lineage,
-        )
+        wh.commit_epoch(epoch, ["crawl_log", "docs", "frontier", "checkpoints", "bloom"], lineage=lineage)
         return True
 
     def run(self, max_epochs: int | None = None) -> int:

@@ -9,17 +9,19 @@ provides the same contract on plain parquet:
     data (writes land in the epoch dir FIRST, the manifest flips LAST
     via atomic os.replace — the Iceberg snapshot-pointer pattern)
   - an epoch's multi-table commit is a single manifest swap covering all
-    tables (docs + seen + frontier + checkpoint move together, the
-    engine's analogue of the reference's progress.json + append + flush
-    unit — ocr/ocr_pdf.py:119-182)
+    tables (crawl_log + docs + frontier + checkpoints + the bloom seen
+    filter move together, the engine's analogue of the reference's
+    progress.json + append + flush unit — ocr/ocr_pdf.py:119-182)
 
 If a crash happens mid-epoch, orphan parquet dirs exist but are not in
 the manifest → resume re-runs that epoch idempotently (MERGE-equivalent:
 deltas are keyed by epoch, so a re-run overwrites the same dir).
 
-Real deployment note: swap this class for Iceberg catalog tables —
-`df.writeTo(tbl).append()` inside one transaction; the engine code only
-touches read()/commit_epoch(), so the swap is local to this module.
+Every engine write under the root goes through stage() and
+commit_epoch(); every read goes through read() or, for the bloom
+bitmaps probed inside executors, delta_paths(). Real deployment note:
+swap this class for Iceberg catalog tables — `df.writeTo(tbl).append()`
+inside one transaction — and the swap stays local to this module.
 """
 
 from __future__ import annotations
@@ -34,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 class SnapshotWarehouse:
     def __init__(self, root: str):
         self.root = root
-        os.makedirs(root, exist_ok=True)
 
     @property
     def manifest_path(self) -> str:
@@ -69,16 +70,21 @@ class SnapshotWarehouse:
             m["tables"].setdefault(t, []).append(epoch)
         m["epochs"].append(epoch)
         m.setdefault("lineage", {})[str(epoch)] = lineage or {}
+        os.makedirs(self.root, exist_ok=True)
         tmp = self.manifest_path + ".tmp"
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump(m, f, indent=1, sort_keys=True)
         os.replace(tmp, self.manifest_path)
 
+    def delta_paths(self, table: str, up_to_epoch: int | None = None) -> list[str]:
+        """The table's COMMITTED delta dirs, oldest first, optionally only
+        those of epochs ≤ up_to_epoch."""
+        epochs = sorted(self.read_manifest()["tables"].get(table, []))
+        return [self._delta_dir(table, e) for e in epochs if up_to_epoch is None or e <= up_to_epoch]
+
     def read(self, spark: SparkSession, table: str, schema: str | None = None) -> DataFrame | None:
         """Union of all COMMITTED deltas of a table (None if none yet)."""
-        m = self.read_manifest()
-        epochs = m["tables"].get(table, [])
-        if not epochs:
+        paths = self.delta_paths(table)
+        if not paths:
             return None if schema is None else spark.createDataFrame([], schema)
-        paths = [self._delta_dir(table, e) for e in sorted(epochs)]
         return spark.read.parquet(*paths)
