@@ -23,7 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from thuvienphapluat_crawler_spark import queries as Q
-from thuvienphapluat_crawler_spark.session import get_spark
+from thuvienphapluat_crawler_spark.session import DEFAULT_CPUS, get_spark
 
 # Every registered query gets a perf sample (r03 verdict #5 closed the
 # last coverage gap). The one exclusion: crawl_engine_demo — the
@@ -54,7 +54,7 @@ def run_crawl_bench(spark, world_kw: dict) -> tuple[float, int]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="tvpl-bench", cpus=cpus)
 

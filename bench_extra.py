@@ -21,14 +21,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from thuvienphapluat_crawler_spark import queries as Q
-from thuvienphapluat_crawler_spark.session import get_spark
+from thuvienphapluat_crawler_spark.session import DEFAULT_CPUS, get_spark
 
 
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     repeats = int(os.environ.get("BENCH_EXTRA_REPEATS", "3"))
     tag = os.environ.get("BENCH_EXTRA_TAG", "before")
     spark = get_spark(app_name="tvpl-bench-extra", cpus=cpus)

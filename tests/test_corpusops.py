@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from thuvienphapluat_crawler_spark.operators import corpusops as C
 from thuvienphapluat_crawler_spark.operators import similarity as S
+from thuvienphapluat_crawler_spark.operators import textstats as T
 
 SF = "/root/testdata/sf0.001"
 
@@ -39,6 +40,48 @@ def test_repetition_metrics_short_doc_is_empty_not_crash(spark):
     docs = spark.createDataFrame([(1, "solo")], "doc_id long, text string")
     row = C.repetition_metrics(docs).collect()[0]
     assert (row.top2_bp, row.dup5_bp, row.keep) == (0, 0, True)
+
+
+def test_split_tokens_equals_spark_tokens(spark):
+    # Spark's trim strips only U+0020 and Java's \s is [ \t\n\x0B\f\r]:
+    # the other whitespace must neither be trimmed nor split on
+    texts = [
+        "", "   ", "\nlead", "trail\n", "\n both \n", "a\tb", "a\x0bb", "a\fb",
+        "a\rb", "a\u00a0b", "\u00a0edge\u00a0", "a\u3000b", "\t x \x0b\f\r y \t",
+        "  Điều 1. Phạm vi  điều chỉnh\n\nNghị định số 15/2020/NĐ-CP  ",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    got = dict(docs.select("i", T.tokens(F.col("text"))).collect())
+    for i, text in enumerate(texts):
+        assert T.split_tokens(text) == got[i], repr(text)
+
+
+def test_repetition_metrics_pins_null_ties_and_overlap(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, None),
+            # "bb a" and "c d" both occur twice: the tie goes to the smaller
+            # gram, so 8 characters are covered, not 6
+            (2, "bb a bb a c d c d"),
+            # overlapping grams count their shared characters again: > 100%
+            (3, "aa aa aa aa aa aa"),
+        ],
+        "doc_id long, text string",
+    )
+    rows = {r.doc_id: tuple(r) for r in C.repetition_metrics(docs).collect()}
+    assert rows == {
+        1: (1, None, 0, 0, 0, 0, True),
+        2: (2, 17, 4705, 3529, 4705, 0, False),
+        3: (3, 17, 14705, 18823, 19411, 16470, False),
+    }
+
+
+def test_repetition_metrics_plan_has_no_exchange(spark):
+    # the rules only read one document's own grams: nothing to shuffle
+    docs = spark.createDataFrame([(1, "a b a b"), (2, "c d c d")], "doc_id long, text string")
+    out = C.repetition_metrics(docs)
+    out.collect()
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_pii_scrub_counts_and_redacts(spark):

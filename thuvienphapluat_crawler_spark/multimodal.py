@@ -38,6 +38,9 @@ MEDIA_SCHEMA = T.StructType(
 
 FEATURE_DIM = 8
 
+# size of every fake-decoded blob; route_media's payload oracle replays it
+FAKE_BLOB_BYTES = 4096
+
 FEATURES_SCHEMA = (
     "doc_id string, media_ref string, kind string, n_bytes long, "
     "format string, width int, height int, features array<double>"
@@ -47,7 +50,7 @@ FRAME_SCHEMA = "doc_id string, media_ref string, frame_idx int, frame_bytes long
 
 
 def synth_media(
-    spark: SparkSession, docs: DataFrame, bytes_per_item: int = 4096, real_codecs: bool = False
+    spark: SparkSession, docs: DataFrame, real_codecs: bool = False
 ) -> DataFrame:
     """Deterministic media blobs derived from (doc_id, media_ref).
 
@@ -99,7 +102,7 @@ def synth_media(
             blob = encode_avi(vid, 10)
         else:
             header = b"FAKE" + bytes([s0, s1]) + kind[:1].encode()
-            body = (seed * (bytes_per_item // 16 + 1))[: bytes_per_item - len(header)]
+            body = (seed * (FAKE_BLOB_BYTES // 16 + 1))[: FAKE_BLOB_BYTES - len(header)]
             blob = header + body
         yield doc_id, ref, kind, blob
 

@@ -21,36 +21,17 @@ the IVF coarse-quantizer ANN layout [Johnson et al., faiss]).
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..rowmap import flat_map_rows
 from .similarity import _dot, _topk_by_cosine, as_double
-from .textstats import tokens
+from .textstats import split_tokens, tokens
 
 # ---------------------------------------------------------------------------
 # Gopher repetition rules
-
-
-def ngrams_of(toks: Column, n: int) -> Column:
-    """NON-distinct word n-grams from an ALREADY-TOKENIZED array column
-    (counting duplicates is the whole point of the repetition rules —
-    dedup.shingles() is the distinct variant). Short-doc guard: < n
-    tokens → empty array, never an ANSI descending-sequence slice error.
-
-    Taking the token array (not raw text) lets callers tokenize ONCE and
-    derive every gram size from the shared array — higher-order-function
-    lambdas block Spark's physical subexpression elimination, so repeated
-    `tokens(text)` subtrees each re-run the regex split (r05's 5×-pass
-    waste in repetition_metrics)."""
-    k = F.size(toks) - (n - 1)
-    return F.when(
-        k >= 1,
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 # Gopher §A1.1 repetition thresholds (basis points of characters):
@@ -58,6 +39,35 @@ def ngrams_of(toks: Column, n: int) -> Column:
 # characters in duplicated 5-grams <= 0.15.
 TOP_NGRAM_MAX_BP = {2: 2000, 3: 1800, 4: 1600}
 DUP_5GRAM_MAX_BP = 1500
+
+
+def _repetition_row(doc_id, text):
+    """One output row of `repetition_metrics` for one document."""
+    if text is None:
+        yield doc_id, None, 0, 0, 0, 0, True
+        return
+    toks = split_tokens(text)
+    base_chars = len(" ".join(toks))
+    bps = []
+    for n in (2, 3, 4, 5):
+        counts = Counter(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
+        if n == 5:
+            cov = sum(c * len(g) for g, c in counts.items() if c >= 2)
+        elif counts:
+            # code-point order of the gram = Spark's binary string order
+            c, g = min((-c, g) for g, c in counts.items())
+            cov = -c * len(g)
+        else:
+            cov = 0
+        bps.append(cov * 10000 // max(base_chars, 1))
+    top2, top3, top4, dup5 = bps
+    keep = (
+        top2 <= TOP_NGRAM_MAX_BP[2]
+        and top3 <= TOP_NGRAM_MAX_BP[3]
+        and top4 <= TOP_NGRAM_MAX_BP[4]
+        and dup5 <= DUP_5GRAM_MAX_BP
+    )
+    yield doc_id, base_chars, top2, top3, top4, dup5, keep
 
 
 def repetition_metrics(docs: DataFrame) -> DataFrame:
@@ -70,85 +80,22 @@ def repetition_metrics(docs: DataFrame) -> DataFrame:
       dup5_bp — characters covered by ALL 5-grams occurring >= 2 times;
       keep — true iff every metric is within its Gopher threshold.
 
-    Scale shape: tokenize ONCE into a localCheckpointed (doc_id, toks)
-    projection — higher-order lambdas defeat physical subexpression
-    elimination, so without the materialization barrier Catalyst's
-    CollapseProject re-inlines `tokens(text)` into every consumer (the
-    r05 plan ran the regex split ~5× per doc and was the slowest
-    registry entry at 36 s). Both branches (gram explode + base_chars
-    join) read the checkpoint. Then: one explode of the four gram
-    sizes -> one groupBy(doc_id, n, gram) count (map-side partial agg)
-    -> per-doc window/conditional agg. Gram rows are narrow (ids +
-    short strings); both shuffles key on doc_id-rooted keys so skew
-    follows document length, not corpus size. At 100 TB the checkpoint
-    becomes a persist(DISK) / intermediate parquet of the token arrays
-    (~= input size) — still 1× tokenization instead of 5×.
-    """
-    def tag(n: int):
-        # closure factory: a default-arg lambda would have arity 2 and
-        # F.transform would bind the ARRAY INDEX to it
-        return lambda g: F.struct(F.lit(n).alias("n"), g.alias("g"))
+    Basis points are integer floor division, never float division then
+    cast: CAST(double AS BIGINT) truncates in Spark but rounds in DuckDB.
 
-    toks_df = docs.select(
-        "doc_id", tokens(F.col("text")).alias("toks")
-    ).localCheckpoint()
-    base = toks_df.select(
-        "doc_id",
-        F.length(F.array_join("toks", " ")).cast("bigint").alias("base_chars"),
-    )
-    counts = (
-        toks_df.select(
-            "doc_id",
-            F.explode(
-                F.flatten(
-                    F.array(
-                        *[F.transform(ngrams_of(F.col("toks"), n), tag(n)) for n in (2, 3, 4, 5)]
-                    )
-                )
-            ).alias("ng"),
-        )
-        .groupBy("doc_id", F.col("ng.n").alias("n"), F.col("ng.g").alias("g"))
-        .agg(F.count("*").alias("cnt"))
-    )
-    # argmax(cnt desc, gram asc) per (doc_id, n) without a window shuffle:
-    # max over struct(cnt, neg-ordered gram) is not expressible for strings,
-    # so invert via min over struct(-cnt, gram) — partial-agg friendly.
-    tops = (
-        counts.filter(F.col("n") <= 4)
-        .groupBy("doc_id", "n")
-        .agg(F.min(F.struct((-F.col("cnt")).alias("nc"), F.col("g").alias("g"))).alias("t"))
-        .select(
-            "doc_id",
-            "n",
-            ((-F.col("t.nc")) * F.length("t.g")).alias("cov"),
-        )
-        .groupBy("doc_id")
-        .pivot("n", [2, 3, 4])
-        .agg(F.first("cov"))
-    )
-    dup5 = (
-        counts.filter((F.col("n") == 5) & (F.col("cnt") >= 2))
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("cnt") * F.length("g")).alias("dup5_cov"))
-    )
-    out = base.join(tops, "doc_id", "left").join(dup5, "doc_id", "left")
-    # Basis points via integer `div`, NOT float-division-then-cast:
-    # CAST(double AS BIGINT) truncates in Spark but rounds in DuckDB —
-    # a parity trap at every .5 boundary.
-    out = out.selectExpr(
-        "doc_id",
-        "base_chars",
-        "(coalesce(`2`, 0) * 10000) div greatest(base_chars, 1) AS top2_bp",
-        "(coalesce(`3`, 0) * 10000) div greatest(base_chars, 1) AS top3_bp",
-        "(coalesce(`4`, 0) * 10000) div greatest(base_chars, 1) AS top4_bp",
-        "(coalesce(dup5_cov, 0) * 10000) div greatest(base_chars, 1) AS dup5_bp",
-    )
-    return out.withColumn(
-        "keep",
-        (F.col("top2_bp") <= TOP_NGRAM_MAX_BP[2])
-        & (F.col("top3_bp") <= TOP_NGRAM_MAX_BP[3])
-        & (F.col("top4_bp") <= TOP_NGRAM_MAX_BP[4])
-        & (F.col("dup5_bp") <= DUP_5GRAM_MAX_BP),
+    Scale shape: the rules only ever look at one document's own
+    n-grams, so they run as one per-row pass over (doc_id, text) in the
+    scan stage: tokenize once (`split_tokens`, the row-side twin of
+    `textstats.tokens`), count one gram size at a time, emit one row.
+    No shuffle and no checkpoint: at 100 TB it is one scan-side pass,
+    and per-task state is one document's counter of one gram size.
+    """
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+    return flat_map_rows(
+        docs.select("doc_id", "text"),
+        _repetition_row,
+        f"doc_id {id_type}, base_chars bigint, top2_bp bigint, top3_bp bigint, "
+        "top4_bp bigint, dup5_bp bigint, keep boolean",
     )
 
 

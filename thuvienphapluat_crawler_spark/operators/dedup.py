@@ -210,6 +210,17 @@ def jaccard_on_pairs(pairs: DataFrame, hash_sets: DataFrame) -> DataFrame:
     )
 
 
+def minhash_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """MinHash+LSH near-duplicate detection end to end over (doc_id,
+    text): signatures → bands → size-capped bucket candidates → exact
+    Jaccard (`jaccard_on_pairs` columns, unfiltered). The hash sets are
+    materialized once, so tokenize+md5 runs once for both the signatures
+    and the verify."""
+    sets = doc_hash_sets(docs).localCheckpoint()
+    pairs = lsh_candidate_pairs(minhash_bands(minhash_signatures(docs, hash_sets=sets)))
+    return jaccard_on_pairs(pairs, sets)
+
+
 def shingles_of(toks, n: int = 3):
     """Word n-gram shingle array (distinct) from an ALREADY-TOKENIZED
     array column. Callers should stage the token array as a projected

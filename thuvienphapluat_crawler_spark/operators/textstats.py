@@ -13,6 +13,8 @@ differs per engine. The crawl seen-set still uses xxhash64 internally.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -30,6 +32,17 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 def tokens(text: Column) -> Column:
     return F.split(F.trim(text), r"\s+")
+
+
+# Java's `\s` without UNICODE_CHARACTER_CLASS: U+00A0 and U+3000 do not split
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def split_tokens(text: str) -> list[str]:
+    """`tokens` for one Python string, for per-row code: Spark's `trim`
+    strips only U+0020, and its split keeps leading and trailing empty
+    tokens, as `re.split` does."""
+    return _JAVA_WS.split(text.strip(" "))
 
 
 def token_hash32(token: Column) -> Column:

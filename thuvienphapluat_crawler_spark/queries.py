@@ -1032,14 +1032,8 @@ def docs_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard ≥ 0.5 verification.
     Candidate generation is a bucket equi-join (never O(n²)); hot buckets
     are the skew case AQE splits."""
-    corpus = _augmented_docs(spark, sf_dir)
-    # one ROW-LOCAL tokenize+md5 pass (zero shuffles) feeds BOTH the
-    # signatures and the exact verify
-    sets = D.doc_hash_sets(corpus).localCheckpoint()
-    sigs = D.minhash_signatures(corpus, hash_sets=sets)
-    pairs = D.lsh_candidate_pairs(D.minhash_bands(sigs))
     return (
-        D.jaccard_on_pairs(pairs, sets)
+        D.minhash_jaccard_pairs(_augmented_docs(spark, sf_dir))
         .filter(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
@@ -1798,8 +1792,8 @@ def docs_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-grams, in integer basis points, with the keep verdict at the
     published thresholds. Docs with doc_id % 10 == 0 get a planted
     repetition payload so the filter demonstrably fires. Scale shape:
-    one explode -> one (doc_id, n, gram) count with map-side combine ->
-    per-doc conditional agg; all shuffle keys are doc-rooted."""
+    one per-document pass after the scan (corpusops.repetition_metrics);
+    the only exchanges are the scan fan-out and the presentation sort."""
     docs = _fanout(load(spark, sf_dir, "documents"), spark).select(
         "doc_id",
         F.when(
@@ -4483,10 +4477,8 @@ def crawl_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " ",
             ).alias("text"),
         )
-        sets = D.doc_hash_sets(texts).localCheckpoint()
-        pairs = D.lsh_candidate_pairs(D.minhash_bands(D.minhash_signatures(texts, hash_sets=sets)))
         out = (
-            D.jaccard_on_pairs(pairs, sets)
+            D.minhash_jaccard_pairs(texts)
             .select("doc_a", "doc_b", F.col("n_inter").cast("bigint").alias("n_inter"),
                     F.col("n_a").cast("bigint").alias("n_a"),
                     F.col("n_b").cast("bigint").alias("n_b"), "jaccard")
@@ -4910,8 +4902,10 @@ def docs_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # justification as _fanout at the scan: at warehouse scale the agg
     # output is already wide and this exchange is no-op-sized)
     content = _fanout(content, spark)
-    names = docs.select(sid.alias("doc_id"), dn.alias("dn"))
-    out = content.join(names, "doc_id").select(
+    # the parse stage keys rows by str(doc_id); the name needs the number
+    out = content.withColumn("doc_id", F.col("doc_id").cast("bigint")).select(
+        sid.alias("doc_id"), dn.alias("dn"), "content"
+    ).select(
         "doc_id",
         F.concat(
             F.regexp_replace(F.regexp_replace("dn", " ", "_"), "/", "-"), F.lit(".txt")

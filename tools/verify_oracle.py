@@ -2,13 +2,18 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB
 at the given SF dir, compares row count, column-name set, and
-order-insensitive values. Exits nonzero on any mismatch.
+order-insensitive values. Exits nonzero on any mismatch. Ends by
+printing the oracle hash (sha256 of the sorted-key JSON of
+``oracle_sql()``) and the Spark master, so a run records which oracle it
+checked and at what core count.
 
 Usage: python tools/verify_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import sys
 
 import duckdb
@@ -81,6 +86,8 @@ def main() -> int:
             failed.append(name)
         else:
             print(f"OK   {name}: {len(a)} rows")
+    print("oracle sha256", hashlib.sha256(json.dumps(oracles, sort_keys=True).encode()).hexdigest())
+    print("master", spark.sparkContext.master)
     spark.stop()
     if failed:
         print("FAILED:", failed)
