@@ -7,8 +7,8 @@ Usage:
   python bench_extra.py all               # time every registered query once
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-(default 32), BENCH_EXTRA_REPEATS (default 3), BENCH_EXTRA_TAG (plan file
-suffix, default "before").
+(default: the CPUs this process may use), BENCH_EXTRA_REPEATS (default 3),
+BENCH_EXTRA_TAG (plan file suffix, default "before").
 """
 
 from __future__ import annotations

@@ -1,55 +1,6 @@
 from __future__ import annotations
 
-from thuvienphapluat_crawler_spark.operators.enrich import (
-    chunk_table_rows,
-    footnote_join,
-    tooltip_join,
-)
-
-
-def test_tooltip_join(spark):
-    elements = spark.createDataFrame(
-        [
-            ("d1", 0, "Điều 5 của Luật X", "tt-a"),
-            ("d1", 1, "khoản 2", "tt-b"),
-            ("d1", 2, "không có tooltip", None),
-        ],
-        "doc_id string, offset int, text string, tooltip_class string",
-    )
-    tooltips = spark.createDataFrame(
-        [
-            ("d1", "tt-a", "Luật X năm 2020"),
-            ("d1", "tt-b", "Click vào để xem nội dung"),  # noise → dropped
-        ],
-        "doc_id string, tooltip_class string, tooltip_text string",
-    )
-    got = {r.offset: r.text for r in tooltip_join(elements, tooltips).collect()}
-    assert got[0] == "Điều 5 của Luật X [Luật X năm 2020]"
-    assert got[1] == "khoản 2"  # noise tooltip not appended (pipeline.py:148)
-    assert got[2] == "không có tooltip"
-
-
-def test_footnote_join(spark):
-    elements = spark.createDataFrame(
-        [
-            ("d1", 0, "xem chú thích", "span-note_7"),
-            ("d1", 1, "bình thường", None),
-            ("d1", 2, "không nguồn", "span-note_8"),
-        ],
-        "doc_id string, offset int, text string, element_id string",
-    )
-    notes = spark.createDataFrame(
-        [
-            ("d1", "note_7", "Nội dung chú thích|~|Nguồn: Công báo"),
-            ("d1", "note_8", "Chỉ có nội dung"),
-        ],
-        "doc_id string, note_id string, note_text string",
-    )
-    rows = {r.offset: r for r in footnote_join(elements, notes).collect()}
-    # the reference's exact replacement format (pipeline.py:177-181)
-    assert rows[0].text == "\nNội dung chú thích [Nguồn: Công báo]"
-    assert rows[1].text == "bình thường"
-    assert rows[2].text == "\nChỉ có nội dung"
+from thuvienphapluat_crawler_spark.operators.enrich import chunk_table_rows
 
 
 def test_chunk_table_rows_header_reemitted(spark):

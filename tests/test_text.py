@@ -45,7 +45,12 @@ def test_merge_lines_to_paragraphs(spark):
 
 
 def test_merge_buffer_machine_reference_fixture():
-    assert TX.merge_buffer_machine(LINES) == EXPECTED
+    # each paragraph comes with the index of its first line
+    assert TX.merge_buffer_machine(LINES) == list(zip([0, 1, 2, 4, 6, 7], EXPECTED))
+
+
+def _paragraphs(lines: list[str]) -> list[str]:
+    return [p for _, p in TX.merge_buffer_machine(lines)]
 
 
 # --- window sessionization ≡ reference buffer machine ----------------------
@@ -85,7 +90,7 @@ def _window_merge_replay(lines: list[str]) -> list[str]:
 @settings(max_examples=300, deadline=None)
 @given(st.lists(st.sampled_from(_WORDS).map(str), min_size=0, max_size=12))
 def test_window_merge_equals_buffer_machine(lines):
-    assert _window_merge_replay(lines) == TX.merge_buffer_machine(lines)
+    assert _window_merge_replay(lines) == _paragraphs(lines)
 
 
 def test_merge_exact_equals_window_on_spark(spark):
@@ -112,7 +117,34 @@ def test_merge_exact_equals_window_on_spark(spark):
         r.paragraph
         for r in TX.merge_lines_exact(df).orderBy("para_offset").collect()
     ]
-    assert win == exact == TX.merge_buffer_machine(lines)
+    assert win == exact == _paragraphs(lines)
+
+
+def test_buffer_machine_reads_lines_as_spark_does(spark):
+    # Spark's regexes are Java's: \s is [ \t\n\x0B\f\r] (NBSP and U+3000
+    # are text, not whitespace), \d is [0-9] (٣ is no digit) and `$` also
+    # matches before one final line terminator such as U+2028
+    lines = [
+        "\xa0Căn cứ luật;\xa0",
+        "Điều ٣. Phạm vi",
+        "tiếp",
+        "\tdòng tab;\x0b",
+        "\x0cnối\r",
+        "\u3000Căn cứ khác\u3000",
+        "tiếp theo. \u2028",
+        "sau dấu chấm",
+        "TT\u2028",
+        "Điều\xa05. Tiêu đề",
+        "đuôi",
+    ]
+    df = spark.createDataFrame(
+        [("d", i, l) for i, l in enumerate(lines)], "doc_id string, offset int, line string"
+    )
+    win = [
+        (r.para_offset, r.paragraph)
+        for r in TX.merge_lines_to_paragraphs(df).orderBy("para_offset").collect()
+    ]
+    assert TX.merge_buffer_machine(lines) == win
 
 
 # --- postprocess fold vs a verbatim port of the reference ------------------

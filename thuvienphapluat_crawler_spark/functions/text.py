@@ -1,4 +1,4 @@
-"""Vietnamese legal-text operators as column expressions + one grouped-map UDF.
+"""Vietnamese legal-text operators as column expressions plus the line merge.
 
 Reproduces the reference's text semantics (NOT its code):
   - paragraph-start predicate battery   (reference: pipeline.py:262-298)
@@ -6,12 +6,17 @@ Reproduces the reference's text semantics (NOT its code):
   - ordered regex postprocess fold      (reference: pipeline.py:325-384)
   - line→paragraph merge state machine  (reference: pipeline.py:256-322)
 
-The merge machine is per-document and order-sensitive, so it runs as a
-window-function sessionization (pure Catalyst: lag + cumsum of new-para
-flags → groupBy paragraph id) — no Python in the hot path.
+The merge comes in two forms that give the same paragraphs. Over line
+rows it is a window sessionization (lag + cumsum of new-paragraph flags
+→ groupBy paragraph id; merge_lines_to_paragraphs). Where one page's or
+document's lines are already in hand it is the buffer machine
+(merge_buffer_machine), which reads lines the way Spark's Java regexes
+do, so the two forms agree on every line.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -56,6 +61,7 @@ SENTENCE_END_PATTERN = r"[.;:?!]$"                   # pipeline.py:311
 # buffer-flush rule: the ACCUMULATED buffer is re.search'd against this
 # (pipeline.py:291,308) — not just the previous line
 DIEU_TITLE_END_PATTERN = r"Điều\s+\d+\.\s+[^\n]+$"
+LINE_STRIP_PATTERN = r"^\s+|\s+$"                     # line.strip(), pipeline.py:294
 TOOLTIP_NOISE = "Click vào để xem nội dung"          # pipeline.py:148
 
 
@@ -194,7 +200,7 @@ def merge_lines_to_paragraphs(
         | is_dieu_title(prev)
     )
     starts = is_new_paragraph(F.col(line_col)) | flush_after_prev
-    stripped = F.regexp_replace(F.col(line_col), r"^\s+|\s+$", "")  # line.strip(), pipeline.py:294
+    stripped = F.regexp_replace(F.col(line_col), LINE_STRIP_PATTERN, "")
     with_pid = (
         lines.withColumn(line_col, stripped)
         .filter(F.col(line_col) != "")                # empty-line filter (pipeline.py:295)
@@ -220,59 +226,58 @@ def merge_lines_to_paragraphs(
 
 
 # ---------------------------------------------------------------------------
-# Exact merge machine — the reference's buffer semantics bit-for-bit
-# (pipeline.py:293-322), per-document inside an Arrow-batched grouped map.
-# Per-doc order is the unit of work, so groupBy(doc_id).applyInPandas is
-# the natural (and shuffle-minimal: one shuffle on doc_id) layout.
+# Exact merge machine — the reference's buffer semantics
+# (pipeline.py:293-322), one document's lines at a time: the per-page
+# HTML extract runs it directly, merge_lines_exact per document.
 # ---------------------------------------------------------------------------
 
 MERGED_SCHEMA = "doc_id string, para_offset int, paragraph string"
 
-
-_COMPILED: dict[str, object] = {}
-
-
-def _compiled_patterns():
-    """Compile-once cache: applyInPandas calls the merge once PER GROUP,
-    so compiling the 26-pattern battery inside the function would pay
-    the compile cost per document."""
-    import re
-
-    if not _COMPILED:
-        _COMPILED["new_para"] = re.compile(NEW_PARAGRAPH_PATTERN)
-        _COMPILED["dieu_end"] = re.compile(DIEU_TITLE_END_PATTERN)
-        _COMPILED["sent_end"] = re.compile(SENTENCE_END_PATTERN)
-    return _COMPILED["new_para"], _COMPILED["dieu_end"], _COMPILED["sent_end"]
+# Java's `$` (non-MULTILINE): the end of input, or before one final line
+# terminator (\r\n, \n, \r, \x85, \u2028 or \u2029)
+_JAVA_END = r"(?=(?:\r\n|(?<!\r)\n|[\r\x85\u2028\u2029])?\Z)"
 
 
-def merge_buffer_machine(lines: list[str]) -> list[str]:
+def java_regex(pattern: str) -> re.Pattern:
+    """`pattern` compiled to match as Spark's rlike / regexp_replace match
+    it: `\\d` and `\\s` are ASCII ([0-9], [ \\t\\n\\x0B\\f\\r]) and `$` is
+    Java's. Every `$` in `pattern` must be an end anchor."""
+    return re.compile(pattern.replace("$", _JAVA_END), re.ASCII)
+
+
+_NEW_PARA, _DIEU_END, _SENT_END, _LINE_STRIP = map(
+    java_regex,
+    (NEW_PARAGRAPH_PATTERN, DIEU_TITLE_END_PATTERN, SENTENCE_END_PATTERN, LINE_STRIP_PATTERN),
+)
+
+
+def merge_buffer_machine(lines: list[str]) -> list[tuple[int, str]]:
     """The reference's line→paragraph fold (pipeline.py:293-322): a
     mutable buffer that (a) flushes before any structural-marker line,
     (b) flushes after itself when it ends a sentence or when the
     ACCUMULATED buffer matches the Điều-title pattern (re.search — an
     'Điều N. <title>' anywhere in the buffer with a non-empty tail
-    triggers the flush, not just the previous line)."""
-    new_para, dieu_end, sent_end = _compiled_patterns()
-    result: list[str] = []
-    buffer = ""
-    for line in lines:
-        line = line.strip()
+    triggers the flush, not just the previous line).
+
+    Returns (index of the paragraph's first line, paragraph) pairs.
+    Lines are stripped and matched with java_regex, so the result equals
+    merge_lines_to_paragraphs on the same lines."""
+    result: list[tuple[int, str]] = []
+    buffer, start = "", 0
+    for i, line in enumerate(lines):
+        line = _LINE_STRIP.sub("", line)
         if not line:
             continue
-        if new_para.search(line):
-            if buffer:
-                result.append(buffer)
-            buffer = line
-        elif buffer:
-            if dieu_end.search(buffer) or sent_end.search(buffer):
-                result.append(buffer)
-                buffer = line
-            else:
-                buffer = buffer + " " + line
-        else:
-            buffer = line
+        if buffer and not (
+            _NEW_PARA.search(line) or _DIEU_END.search(buffer) or _SENT_END.search(buffer)
+        ):
+            buffer = buffer + " " + line
+            continue
+        if buffer:
+            result.append((start, buffer))
+        buffer, start = line, i
     if buffer:
-        result.append(buffer)
+        result.append((start, buffer))
     return result
 
 
@@ -298,7 +303,7 @@ def merge_lines_exact(
         out: list[tuple] = []
         for doc, g in pdf.groupby(doc_col, sort=False):
             paras = merge_buffer_machine(list(g[line_col]))
-            out.extend((str(doc), i, p) for i, p in enumerate(paras))
+            out.extend((str(doc), i, p) for i, (_, p) in enumerate(paras))
         return pd.DataFrame(out, columns=["doc_id", "para_offset", "paragraph"])
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

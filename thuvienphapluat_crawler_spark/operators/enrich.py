@@ -1,10 +1,7 @@
-"""Document-enrichment joins and chunking (SURVEY §2.3 J1/J2, §2.4 A6/A7).
+"""Table enrichment and chunking (SURVEY §2.4 A6/A7, J6).
 
-The reference walks the DOM appending tooltip text in brackets
-(crawler.py:83-142, pipeline.py:129-151) and swapping footnote bodies in
-place (pipeline.py:154-213); both are equi-joins once elements and
-reference divs are rows. The build side (tooltips/footnotes per doc
-batch) is small → broadcast hash join, zero shuffle of the element side.
+The J1 tooltip and J2 footnote rules live with the page parse
+(sources/html_parse.extract_page): both only join one page's own rows.
 
 Chunking reproduces format_xls.py:16-19/221-240: fixed 30-row groups per
 (doc, section) with the header re-emitted per chunk.
@@ -17,56 +14,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-TOOLTIP_NOISE = "Click vào để xem nội dung"  # pipeline.py:148
 CHUNK_ROWS = 30  # format_xls.py:18
-
-
-def tooltip_join(elements: DataFrame, tooltips: DataFrame) -> DataFrame:
-    """elements(..., doc_id, text, tooltip_class) ⟕ tooltips(doc_id,
-    tooltip_class, tooltip_text): append ' [tooltip]' to matched element
-    text (crawler.py:113); noise tooltips dropped (pipeline.py:148);
-    unmatched unchanged. All other element columns pass through — this
-    is THE J1 implementation (the HTML extract path consumes it too)."""
-    tt = tooltips.filter(F.col("tooltip_text") != TOOLTIP_NOISE)
-    joined = elements.join(
-        F.broadcast(tt), ["doc_id", "tooltip_class"], "left"
-    )
-    new_text = (
-        F.when(
-            F.col("tooltip_text").isNotNull(),
-            F.concat(F.col("text"), F.lit(" ["), F.col("tooltip_text"), F.lit("]")),
-        )
-        .otherwise(F.col("text"))
-    )
-    return joined.withColumn("text", new_text).drop("tooltip_text")
-
-
-def footnote_join(elements: DataFrame, notes: DataFrame) -> DataFrame:
-    """<huongdan id="span-note_X"> elements ⟕ notes(doc_id, note_id,
-    note_text); a matched note REPLACES the element text with the
-    reference's exact format (pipeline.py:168-182):
-
-        '\\n{main} [{source}]'  when note_text splits on '|~|'
-        '\\n{main}'             when it has no source part
-        '\\n{note_text}'        when there is no '|~|' at all
-
-    All other element columns pass through — THE J2 implementation."""
-    el = elements.withColumn(
-        "note_id", F.regexp_replace(F.col("element_id"), r"^span-", "")
-    )
-    joined = el.join(F.broadcast(notes), ["doc_id", "note_id"], "left")
-    parts = F.split(F.col("note_text"), r"\|~\|")
-    # try_element_at: a note without '|~|' has one part (ANSI element_at
-    # would throw on index 2)
-    main = F.trim(F.try_element_at(parts, F.lit(1)))
-    src = F.trim(F.try_element_at(parts, F.lit(2)))
-    replacement = F.when(
-        src.isNotNull() & (src != ""), F.concat(F.lit("\n"), main, F.lit(" ["), src, F.lit("]"))
-    ).otherwise(F.concat(F.lit("\n"), main))
-    new_text = F.when(
-        F.col("note_text").isNotNull() & (F.trim(F.col("note_text")) != ""), replacement
-    ).otherwise(F.col("text"))
-    return joined.withColumn("text", new_text).drop("note_text", "note_id")
 
 
 def chunk_table_rows(

@@ -54,6 +54,7 @@ from ..functions import urls as U
 from ..operators import bloom as B
 from ..rowmap import flat_map_rows, materialize
 from ..sources import synthetic_web as SW
+from ..sources.html_parse import extract_page
 from .warehouse import SnapshotWarehouse
 
 FRONTIER_SCHEMA = (
@@ -210,43 +211,16 @@ class CrawlEngine:
         content from the synthetic web)."""
         yield _doc_id_for(url), url, SW.page_spans(url), epoch
 
-    def _html_docs(self, ok: DataFrame, epoch: int) -> DataFrame:
-        """The real extract path: fetch raw HTML (synthetic DOM twin of
-        page_spans), run the DOM pipeline (parse → tooltip/footnote
-        joins → Điều normalization → line merge), fold each page's
-        paragraphs into its doc row as text spans. doc_id derives from
-        the URL with column regexes — same sanitization as _doc_id_for."""
-        from ..sources.html_parse import extract_documents, parse_pages
-
-        def fetch_html(url: str):
-            yield url, SW.page_html(url)
-
-        pages = flat_map_rows(ok.select("canonical_url"), fetch_html, "page_url string, html string")
-        paras = extract_documents(parse_pages(pages, id_col="page_url"))
-        url = F.col("doc_id")  # extract keys on the page URL
-        derived = F.concat(
-            F.regexp_extract(url, r"/van-ban/([^/]+)/", 1),
-            F.lit("_doc-"),
-            F.regexp_extract(url, r"doc-(\d+)\.aspx", 1),
-            F.lit("_host"),
-            F.regexp_extract(url, r"host(\d+)\.", 1),
-        )
-        # merge emits source-line offsets; span offsets are the dense
-        # paragraph sequence (0-based), matching the sequential oracle
-        spans = F.transform(
-            F.sort_array(F.collect_list(F.struct("para_offset", "paragraph"))),
-            lambda p, i: F.struct(
-                F.lit("text").alias("kind"),
-                p["paragraph"].alias("text"),
-                F.lit("").alias("media_ref"),
-                i.alias("offset"),
-            ),
-        )
-        return (
-            paras.groupBy("doc_id")
-            .agg(spans.alias("spans"))
-            .select(derived.alias("doc_id"), url.alias("canonical_url"), "spans", F.lit(epoch).alias("epoch"))
-        )
+    @staticmethod
+    def _html_parse_fn(url: str, epoch: int):
+        """The real extract path: the page's raw HTML (synthetic DOM twin
+        of page_spans) through html_parse.extract_page, its paragraphs
+        as text spans in dense 0-based order; a page without paragraphs
+        yields no doc row."""
+        paragraphs = extract_page(SW.page_html(url))
+        if paragraphs:
+            spans = [("text", p, "", i) for i, (_, p) in enumerate(paragraphs)]
+            yield _doc_id_for(url), url, spans, epoch
 
     def _outlinks_fn(self):
         world = self.world
@@ -397,10 +371,8 @@ class CrawlEngine:
         lineage.update(ranked)
 
         ok = fetched.filter(F.col("status") == "ok")
-        if self.content == "html":
-            docs = self._html_docs(ok, epoch)
-        else:
-            docs = flat_map_rows(ok.select("canonical_url", F.lit(epoch)), self._parse_fn, DOC_SCHEMA)
+        parse = self._html_parse_fn if self.content == "html" else self._parse_fn
+        docs = flat_map_rows(ok.select("canonical_url", F.lit(epoch)), parse, DOC_SCHEMA)
 
         # The epoch's outputs split into two independent dataflows off the
         # localCheckpoint'ed fetch: (a) parse → docs + the crawl_log copy,

@@ -3098,12 +3098,12 @@ _HTML_FRAGS_SQL = """SELECT doc_id,
 def html_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The real DOM extract path (SURVEY §2.2 P2/P3, §2.3 J1/J2;
     crawler.py:83-142, pipeline.py:129-255): raw HTML synthesized per
-    document → stdlib-parser mapInPandas stage → tooltip-class key
-    extraction as column regexes → broadcast tooltip/footnote joins →
-    Điều-heading normalization → flatten → line merge. The DuckDB
-    oracle states the EXPECTED paragraphs directly from the generator's
-    fragments — the engine must invert the HTML to match."""
-    from .sources.html_parse import extract_documents, parse_pages
+    document → one per-page extract stage (stdlib parser, tooltip and
+    footnote resolution, Điều-heading normalization, flatten, line
+    merge). The DuckDB oracle states the EXPECTED paragraphs directly
+    from the generator's fragments — the engine must invert the HTML to
+    match."""
+    from .sources.html_parse import extract_documents
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
     nl = "\n"
@@ -3129,7 +3129,7 @@ def html_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("|~|Điểm a Khoản "), (F.col("doc_id") % 9).cast("string"), F.lit("</div></body></html>"),
     )
     pages = docs.select("doc_id", html.alias("html"))
-    out = extract_documents(parse_pages(pages))
+    out = extract_documents(pages)
     return out.select(
         "doc_id", F.col("para_offset").cast("bigint").alias("para_offset"), "paragraph"
     ).orderBy("doc_id", "para_offset")
@@ -4857,13 +4857,14 @@ _FP_CONTENT_SQL = """
 )
 def docs_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """run_pipeline end-to-end (pipeline.py:387-435): synthesized raw
-    HTML → real parse stage → tooltip/footnote joins → line merge →
-    the full postprocess fold → doc_name header + sanitized output
-    filename (pipeline.py:423-426). The oracle composes closed-form
-    extracted paragraphs with the mechanical DuckDB fold — the engine
-    must reproduce the reference's whole lifecycle byte-for-byte."""
+    HTML → the per-page extract (parse, tooltips/footnotes, line merge)
+    → the full postprocess fold in the same stage → doc_name header +
+    sanitized output filename (pipeline.py:423-426). The oracle
+    composes closed-form extracted paragraphs with the mechanical DuckDB
+    fold — the engine must reproduce the reference's whole lifecycle
+    byte-for-byte."""
     from .functions.text import postprocess_fold
-    from .sources.html_parse import extract_documents, parse_pages
+    from .sources.html_parse import extract_page
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
     nl = "\n"
@@ -4886,26 +4887,16 @@ def docs_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit('<div id="note_'), sid, F.lit('">bổ sung '), f6,
         F.lit("|~|Điểm a Khoản "), (F.col("doc_id") % 9).cast("string"), F.lit("</div></body></html>"),
     )
-    paras = extract_documents(parse_pages(docs.select("doc_id", html.alias("html"))))
-    content = paras.groupBy("doc_id").agg(
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("para_offset", "paragraph"))),
-                lambda s: s["paragraph"],
-            ),
-        ).alias("content")
+
+    def page_content(doc_id, html):
+        paragraphs = [p for _, p in extract_page(html)]
+        if paragraphs:
+            yield doc_id, "\n".join(paragraphs)
+
+    content = flat_map_rows(
+        docs.select("doc_id", html.alias("html")), page_content, "doc_id long, content string"
     )
-    # the 14-regex fold is the expensive per-row step and runs AFTER the
-    # per-doc aggregation, whose tiny output AQE coalesces to 1-2
-    # partitions — fan it back out so the fold parallelizes (same
-    # justification as _fanout at the scan: at warehouse scale the agg
-    # output is already wide and this exchange is no-op-sized)
-    content = _fanout(content, spark)
-    # the parse stage keys rows by str(doc_id); the name needs the number
-    out = content.withColumn("doc_id", F.col("doc_id").cast("bigint")).select(
-        sid.alias("doc_id"), dn.alias("dn"), "content"
-    ).select(
+    out = content.select(sid.alias("doc_id"), dn.alias("dn"), "content").select(
         "doc_id",
         F.concat(
             F.regexp_replace(F.regexp_replace("dn", " ", "_"), "/", "-"), F.lit(".txt")

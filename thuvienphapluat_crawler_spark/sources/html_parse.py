@@ -1,20 +1,19 @@
 """HTML → elements → enriched text: the real parse/extract stage.
 
 Reproduces the reference's DOM flow (crawler.py:83-142, pipeline.py:
-129-255) without BeautifulSoup (stdlib html.parser inside an
-Arrow-batched mapInPandas stage):
+129-255) without BeautifulSoup, one page at a time as the reference
+does (stdlib html.parser; extract_page):
 
   content1 selector filter        → only nodes inside <div class="content1">
                                     (pipeline.py:229-232, P2)
   hover predicate                 → elements with atmm OR onmouseover ~
                                     /lqhlTootip/i (pipeline.py:192-193, P3)
-  tooltip key extraction          → atmm.strip('.') or the onmouseover
-                                    regex ['"]\\.([^'"]+)['"]
-                                    (crawler.py:97-103) — done as COLUMN
-                                    expressions, not in the parser
-  tooltip join (J1)               → broadcast left join + ' [text]' append,
+  tooltip key extraction          → atmm without its edge dots, or (atmm
+                                    absent) the onmouseover regex
+                                    ['"]\\.([^'"]+)['"] (crawler.py:97-103)
+  tooltip append (J1)             → ' [text]' per matching tooltip div,
                                     noise filtered (pipeline.py:145-149)
-  footnote join (J2)              → huongdan id 'span-note_X' ⟕ div#note_X,
+  footnote replacement (J2)       → huongdan id 'span-note_X' → div#note_X,
                                     '|~|' split into (content, source),
                                     '\\n{main} [{source}]' replacement
                                     (pipeline.py:154-184)
@@ -24,9 +23,13 @@ Arrow-batched mapInPandas stage):
                                     document order, split on newlines, merged
                                     by the A1 buffer machine (text.py)
 
-The parser emits ROWS (one per text node / hover element / footnote /
-page-level tooltip or note div); everything downstream is DataFrame
-joins and window ops — the parse is the only Python, and it is batched.
+The parser emits rows (one per text node / hover element / footnote /
+page-level tooltip or note div); extract_page resolves J1 and J2 over
+that one page's rows and merges its lines. Its string rules are
+Spark's (Java regex through text.java_regex, a trim of U+0020 only), so
+a page gives the same paragraphs as the window-form merge over its
+lines. extract_documents runs it per page inside one flat_map_rows
+stage: no row leaves its page's partition.
 """
 
 from __future__ import annotations
@@ -34,21 +37,16 @@ from __future__ import annotations
 import re
 from html.parser import HTMLParser
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..functions.text import merge_lines_to_paragraphs
+from ..functions.text import MERGED_SCHEMA, TOOLTIP_NOISE, java_regex, merge_buffer_machine
 from ..rowmap import flat_map_rows
-
-NODE_SCHEMA = (
-    "doc_id string, offset int, node_kind string, tag string, text string, "
-    "atmm string, onmouseover string, element_id string, css_class string"
-)
 
 _DIEU_B = re.compile(r"^Điều\s+\d+\.")
 _HOVER_ONMOUSE = re.compile(r"lqhlTootip", re.I)
 # the reference's tooltip-class extraction regex, crawler.py:101
-TOOLTIP_CLASS_RE = r"['\"]\.([^'\"]+)['\"]"
+_TOOLTIP_CLASS = re.compile(r"['\"]\.([^'\"]+)['\"]")
+_EDGE_DOTS = java_regex(r"^\.+|\.+$")
 
 
 class _PageParser(HTMLParser):
@@ -146,79 +144,62 @@ def parse_page(html: str) -> list[tuple]:
     return p.rows
 
 
-def parse_pages(df: DataFrame, id_col: str = "doc_id", html_col: str = "html") -> DataFrame:
-    """(doc_id, html) → node/element/tooltip/note rows with a document-order
-    offset: parse_page per page inside one flat_map_rows stage; no
-    per-row Python UDFs."""
-
-    def page_rows(doc_id, html):
-        for off, row in enumerate(parse_page(html)):
-            yield str(doc_id), off, *row
-
-    return flat_map_rows(df.select(F.col(id_col), F.col(html_col)), page_rows, NODE_SCHEMA)
+def _tooltip_key(atmm: str | None, onmouseover: str | None) -> str | None:
+    """J1 key (crawler.py:97-103): atmm without its edge dots; only a
+    missing atmm falls back to the onmouseover class regex. An empty key
+    matches no tooltip: a tooltip div's class is never empty."""
+    if atmm is not None:
+        return _EDGE_DOTS.sub("", atmm)
+    m = _TOOLTIP_CLASS.search(onmouseover or "")
+    return m.group(1) if m else None
 
 
-def tooltip_class_col(atmm: Column, onmouseover: Column) -> Column:
-    """The J1 key extraction as column expressions (crawler.py:97-103):
-    atmm stripped of leading dots, else the onmouseover class regex."""
-    from_atmm = F.when(
-        atmm.isNotNull(), F.regexp_replace(atmm, r"^\.+|\.+$", "")
-    )
-    from_onmouse = F.when(
-        onmouseover.isNotNull(), F.regexp_extract(onmouseover, TOOLTIP_CLASS_RE, 1)
-    )
-    out = F.coalesce(from_atmm, from_onmouse)
-    return F.when(out == "", F.lit(None)).otherwise(out)
+def _footnote(text: str, note: str) -> str:
+    """J2 replacement (pipeline.py:168-182): '\\n{main} [{source}]', or
+    '\\n{main}' when the note has no source part; a blank note keeps the
+    element text. Trims strip U+0020 only, as Spark's trim does."""
+    if not note.strip(" "):
+        return text
+    main, *rest = (part.strip(" ") for part in note.split("|~|"))
+    return f"\n{main} [{rest[0]}]" if rest and rest[0] else f"\n{main}"
 
 
-def extract_documents(parsed: DataFrame) -> DataFrame:
-    """Parsed node rows → (doc_id, para_offset, paragraph): the reference's
-    extract_content + line merge (pipeline.py:216-322), all DataFrame ops.
+def extract_page(html: str) -> list[tuple[int, str]]:
+    """One page's extract (pipeline.py:216-322) as (para_offset,
+    paragraph) pairs, para_offset being the index of the paragraph's
+    first line. Each element's text is replaced by one text per matching
+    tooltip (J1, noise dropped) times one per matching note (J2), sorted;
+    the page's texts are joined in document order, split on newlines and
+    merged by merge_buffer_machine."""
+    rows = parse_page(html)
+    tooltips: dict[str, list[str]] = {}
+    notes: dict[str, list[str]] = {}
+    for kind, _, text, _, _, element_id, css_class in rows:
+        if kind == "tooltip" and text != TOOLTIP_NOISE:
+            tooltips.setdefault(css_class, []).append(text)
+        elif kind == "note":
+            notes.setdefault(element_id, []).append(text)
+    stream: list[str] = []
+    for kind, _, text, atmm, onmouseover, element_id, _ in rows:
+        if kind == "node":
+            stream.append(text)
+        elif kind == "element":
+            tips = tooltips.get(_tooltip_key(atmm, onmouseover), ())
+            texts = [f"{text} [{t}]" for t in tips] or [text]
+            found = notes.get((element_id or "").removeprefix("span-"), ())
+            texts = [_footnote(t, n) for t in texts for n in found] or texts
+            stream.extend(sorted(texts))
+    return merge_buffer_machine("".join(stream).split("\n"))
 
-    Joins are broadcast (tooltip/note dims are small per batch); the only
-    shuffles are the per-doc text re-assembly and the merge window — both
-    keyed on doc_id, so Spark reuses one partitioning."""
-    from ..operators.enrich import footnote_join, tooltip_join
 
-    # four branches (nodes/elements/tooltips/notes) consume the parse —
-    # materialize it once or Catalyst duplicates the MapInPandas subtree
-    # per branch (4× parse cost, observed in .explain). At warehouse
-    # scale this is a staged table write instead.
-    parsed = parsed.localCheckpoint()
-    nodes = parsed.filter(F.col("node_kind") == "node").select(
-        "doc_id", "offset", "text"
-    )
-    elements = parsed.filter(F.col("node_kind") == "element").select(
-        "doc_id", "offset", "text",
-        tooltip_class_col(F.col("atmm"), F.col("onmouseover")).alias("tooltip_class"),
-        F.col("element_id"),
-    )
-    tooltips = parsed.filter(F.col("node_kind") == "tooltip").select(
-        "doc_id", F.col("css_class").alias("tooltip_class"), F.col("text").alias("tooltip_text")
-    )
-    notes = parsed.filter(F.col("node_kind") == "note").select(
-        "doc_id", F.col("element_id").alias("note_id"), F.col("text").alias("note_text")
-    )
+def extract_documents(pages: DataFrame) -> DataFrame:
+    """(doc_id, html) pages → (doc_id, para_offset, paragraph) rows, the
+    reference's extract_content + line merge: extract_page per page in
+    one flat_map_rows stage, so no row leaves its page's partition. A
+    page without paragraphs yields no row."""
 
-    # the canonical J1 + J2 operators (operators/enrich.py) — hover
-    # append first, footnote replacement second, matching the reference's
-    # processing order (pipeline.py:187-213)
-    enriched = footnote_join(tooltip_join(elements, tooltips), notes).select(
-        "doc_id", "offset", "text"
-    )
+    def page_paragraphs(doc_id, html):
+        for offset, paragraph in extract_page(html):
+            yield str(doc_id), offset, paragraph
 
-    # flatten in document order (get_text analogue), split to lines, merge
-    stream = nodes.unionByName(enriched)
-    doc_text = stream.groupBy("doc_id").agg(
-        F.concat_ws(
-            "",
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("offset", "text"))),
-                lambda s: s["text"],
-            ),
-        ).alias("doc_text")
-    )
-    lines = doc_text.select(
-        "doc_id", F.posexplode(F.split("doc_text", "\n")).alias("offset", "line")
-    )
-    return merge_lines_to_paragraphs(lines)
+    return flat_map_rows(pages, page_paragraphs, MERGED_SCHEMA)

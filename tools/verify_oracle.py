@@ -2,7 +2,9 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB
 at the given SF dir, compares row count, column-name set, and
-order-insensitive values. Exits nonzero on any mismatch. Ends by
+order-insensitive values. Exits nonzero on any mismatch. Each OK and
+ROWS-ONLY line carries the sha256 of the normalized Spark frame, so two
+checkouts' row outputs compare by diffing their logs. Ends by
 printing the oracle hash (sha256 of the sorted-key JSON of
 ``oracle_sql()``) and the Spark master, so a run records which oracle it
 checked and at what core count.
@@ -39,6 +41,11 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def frame_sha256(df: pd.DataFrame) -> str:
+    """sha256 of a normalized frame's CSV text (header + rows)."""
+    return hashlib.sha256(df.to_csv(index=False).encode()).hexdigest()
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -59,7 +66,7 @@ def main() -> int:
             failed.append(name)
             continue
         if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(spark_pdf)} rows")
+            print(f"ROWS-ONLY {name}: {len(spark_pdf)} rows sha256 {frame_sha256(normalize(spark_pdf))}")
             continue
         try:
             duck_pdf = con.execute(oracles[name]).df()
@@ -85,7 +92,7 @@ def main() -> int:
             print("duck:\n", b[mask].head(5))
             failed.append(name)
         else:
-            print(f"OK   {name}: {len(a)} rows")
+            print(f"OK   {name}: {len(a)} rows sha256 {frame_sha256(a)}")
     print("oracle sha256", hashlib.sha256(json.dumps(oracles, sort_keys=True).encode()).hexdigest())
     print("master", spark.sparkContext.master)
     spark.stop()
