@@ -5,11 +5,15 @@ import shutil
 import threading
 from collections import Counter
 
+import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from thuvienphapluat_crawler_spark.operators import bloom as B
 from thuvienphapluat_crawler_spark.plans import crawl_oracle, warehouse
-from thuvienphapluat_crawler_spark.plans.frontier import CrawlEngine
+from thuvienphapluat_crawler_spark.plans.frontier import CRAWL_LOG_SCHEMA, FRONTIER_SCHEMA, CrawlEngine
 from thuvienphapluat_crawler_spark.sources import synthetic_web as SW
 
 WORLD = SW.World(n_hosts=4, base_size=60, links_per_page=4, budget_per_host=8, max_epochs=3)
@@ -134,6 +138,44 @@ def test_warehouse_root_holds_only_committed_deltas(run):
     last = engine.wh.last_epoch()
     n_keys = sum(B.load_bucket(root, b, last).n_keys for b in range(engine.n_buckets))
     assert n_keys == engine.seen().count()
+
+
+def _by_url(pdf: pd.DataFrame) -> pd.DataFrame:
+    return pdf.sort_values("canonical_url").reset_index(drop=True)
+
+
+def test_fetch_group_equals_fn_on_collected_groups(spark, run):
+    """The fetch stage's grouped map (one group per host) gives what its
+    function gives on each host group of the collected input."""
+    engine, _ = run
+    w = Window.partitionBy("host").orderBy("category_priority", "depth", "url_fp")
+    batch = (
+        engine.wh.read(spark, "frontier", FRONTIER_SCHEMA)
+        .withColumn("rank", F.row_number().over(w))
+        .withColumn("cookie_header", F.lit(""))
+    )
+    fn = engine._fetch_group_fn(7)
+    got = batch.groupBy("host").applyInPandas(fn, CRAWL_LOG_SCHEMA).toPandas()
+    groups = [g.reset_index(drop=True) for _, g in batch.toPandas().groupby("host")]
+    assert len(groups) == WORLD.n_hosts
+    expected = pd.concat([fn(g) for g in groups], ignore_index=True)[got.columns]
+    pd.testing.assert_frame_equal(_by_url(got), _by_url(expected))
+
+
+def test_bloom_update_equals_update_bucket_per_collected_bucket(spark, run):
+    """The bloom delta's grouped map (one group per host bucket) gives the
+    rows update_bucket gives on each bucket of the collected keys, on top
+    of the committed filters."""
+    engine, _ = run
+    root, epoch = engine.wh.root, engine.wh.last_epoch() + 1
+    rows = engine.wh.read(spark, "frontier", FRONTIER_SCHEMA).filter(F.col("depth") > 0)
+    got = engine._bloom_update(rows, epoch).toPandas()
+    buckets = rows.select("host_bucket", "url_hash").toPandas().groupby("host_bucket")
+    expected = [
+        B.update_bucket(root, int(b), epoch, g["url_hash"].to_numpy(dtype=np.int64)) for b, g in buckets
+    ]
+    assert len(expected) > 1
+    assert sorted(got.itertuples(index=False, name=None)) == sorted(expected)
 
 
 def test_resume_equals_full_run(spark, tmp_path_factory, run):

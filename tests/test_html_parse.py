@@ -155,6 +155,23 @@ def test_extract_page_key_and_duplicate_rules():
     assert extract_page(blank_and_real) == [(1, "realdup")]
 
 
+def test_extract_page_bold_inside_hover_or_note_is_element_text():
+    # the reference replaces hover and note elements before it walks <b>
+    # (pipeline.py:235-249): a <b> inside one keeps its place in that
+    # element's text, emits no row and gets no Điều normalization
+    html = _page(
+        '<a atmm=".k">văn bản <b>in đậm</b> cuối</a>.\n'
+        '<huongdan id="span-note_7">xem <b>Điều 2.  X</b> thêm</huongdan>\n'
+        "<b>Điều 3.  Y</b>\n",
+        '<div class="k">tip</div>',
+    )
+    assert extract_page(html) == [
+        (0, "văn bản in đậm cuối [tip]."),
+        (1, "xem Điều 2.  X thêm"),
+        (2, "Điều 3. Y"),
+    ]
+
+
 def test_extract_documents_one_stage_no_row_for_empty_page(spark):
     pages = spark.createDataFrame(
         [("p", _page("một.\nhai.")), ("empty", "<p>không có content1</p>")],

@@ -140,17 +140,14 @@ def test_xlsx_last_column_xfd_is_accepted():
     assert len(cells) == 16_384 and cells[-1] == "1"
 
 
-def test_sheets_from_xlsx_spark_path(spark):
-    """The distributed decode path: binary xlsx column → mapInPandas real
-    parser → same SHEET_ROW_SCHEMA rows the enrich operators consume."""
-    from thuvienphapluat_crawler_spark.sources.workbook import build_xlsx, sheets_from_xlsx
+def test_parse_xlsx_bytes_rows_by_sheet():
+    """The real decoder's rows, gap cells as None, and by_sheet's
+    {sheet: rows} grouping the per-workbook pass consumes."""
+    from thuvienphapluat_crawler_spark.sources.workbook import build_xlsx, by_sheet, parse_xlsx_bytes
 
-    blob = build_xlsx({"Sheet1": [["a", "b"], ["1", None]]})
-    df = spark.createDataFrame([("d1", bytearray(blob))], "doc_id string, xlsx binary")
-    rows = sorted(
-        (r.doc_id, r.sheet_name, r.row_idx, list(r.cells)) for r in sheets_from_xlsx(df).collect()
-    )
-    assert rows == [("d1", "Sheet1", 0, ["a", "b"]), ("d1", "Sheet1", 1, ["1", None])]
+    rows = parse_xlsx_bytes(build_xlsx({"Sheet1": [["a", "b"], ["1", None]], "S2": [["x"]]}))
+    assert rows == [("Sheet1", 0, ["a", "b"]), ("Sheet1", 1, ["1", None]), ("S2", 0, ["x"])]
+    assert by_sheet(rows) == {"Sheet1": [["a", "b"], ["1", None]], "S2": [["x"]]}
 
 
 def test_xlsx_fuzz_damaged_bytes_raise_value_error(mutants):

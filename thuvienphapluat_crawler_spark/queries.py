@@ -13,8 +13,9 @@ Coverage maps to SURVEY.md §2:
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Iterator
 from functools import reduce
+from itertools import groupby
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -3135,6 +3136,9 @@ def html_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "para_offset")
 
 
+from .operators import enrich as E  # noqa: E402
+from .operators.enrich import Row  # noqa: E402
+
 # --- table machinery: W4 header tiers, A7 annex title, J6 header dedup -----
 #
 # Synthetic table world (mirrored exactly in SQL): each document becomes a
@@ -3170,40 +3174,35 @@ _TABLE_ROWS_SQL = f"""
 """
 
 
-def _table_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _table_rows(d: int, t: str) -> Iterator[Row]:
+    """One document's table in the synthetic table world (_TABLE_ROWS_SQL
+    in Python): title and filler rows before the header at h, the header
+    repeated every 7 rows after it, body rows in between."""
+    h = 3 if d % 8 == 0 else 2 if d % 4 == 0 else 2 + d % 3
+    header = ["STT", "MÃ SỐ", "Tên thủ tục", "Ghi chú"] if d % 4 else ["cột a", "cột b", "cột c", None]
+    for i in range(12 + d % 9):
+        if i < h:
+            lead = f"PHỤ LỤC {d % 5 + 1}" if i == 0 else t[: 10 + d % 30] if i == 1 else t[25:35]
+            yield [lead, None, None, None]
+        elif (i - h) % 7 == 0:
+            yield header
+        else:
+            a = i * 3 % 40
+            yield [f"r{i - h}", f"M{d}.{i}", t[a : a + 12], "ok"]
+
+
+def _table_pass(
+    spark: SparkSession, sf_dir: str, fn: Callable[[int, list[Row]], Iterable[tuple]], schema: str
+) -> DataFrame:
+    """`fn(doc_id, rows)` over each document's synthetic table, in one
+    per-document pass: its tuples are the output rows."""
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
-    base = docs.select(
-        "doc_id",
-        "text",
-        (F.lit(12) + F.col("doc_id") % 9).alias("n"),
-        F.when(F.col("doc_id") % 8 == 0, 3)
-        .when(F.col("doc_id") % 4 == 0, 2)
-        .otherwise(2 + F.col("doc_id") % 3)
-        .alias("h"),
-    )
-    rows = base.select(
-        "doc_id", "n", "h", "text",
-        F.explode(F.sequence(F.lit(0), F.col("n") - 1)).alias("_ri"),
-    ).select("doc_id", "n", "h", "text", F.col("_ri").cast("int").alias("row_idx"))
-    null_s = F.lit(None).cast("string")
-    idx, h = F.col("row_idx"), F.col("h")
-    stt_header = F.array(F.lit("STT"), F.lit("MÃ SỐ"), F.lit("Tên thủ tục"), F.lit("Ghi chú"))
-    plain_header = F.array(F.lit("cột a"), F.lit("cột b"), F.lit("cột c"), null_s)
-    cells = (
-        F.when(idx == 0, F.array(F.concat(F.lit("PHỤ LỤC "), (F.col("doc_id") % 5 + 1).cast("string")), null_s, null_s, null_s))
-        .when(idx == 1, F.array(F.expr("substr(text, 1, 10 + CAST(doc_id % 30 AS INT))"), null_s, null_s, null_s))
-        .when(idx < h, F.array(F.substring("text", 26, 10), null_s, null_s, null_s))
-        .when((idx - h) % 7 == 0, F.when(F.col("doc_id") % 4 != 0, stt_header).otherwise(plain_header))
-        .otherwise(
-            F.array(
-                F.concat(F.lit("r"), (idx - h).cast("string")),
-                F.concat(F.lit("M"), F.col("doc_id").cast("string"), F.lit("."), idx.cast("string")),
-                F.expr("substr(text, (row_idx * 3) % 40 + 1, 12)"),
-                F.lit("ok"),
-            )
-        )
-    )
-    return rows.select("doc_id", "n", "h", "row_idx", cells.alias("cells"))
+    return flat_map_rows(docs, lambda d, t: fn(int(d), list(_table_rows(int(d), str(t)))), schema)
+
+
+def _pipe_line(cells: Row) -> str:
+    """A table row as a markdown line, null cells skipped (array_join)."""
+    return "| " + " | ".join(c for c in cells if c is not None) + " |"
 
 
 @register(
@@ -3217,14 +3216,9 @@ def table_header_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4 3-tier header detection (format_xls.py:40-80): the engine must
     DETECT the planted header position through the STT/density/fixed
     tiers; the oracle states the planted position in closed form."""
-    from .operators.enrich import detect_header_row
-
-    rows = _table_rows(spark, sf_dir)
-    return (
-        detect_header_row(rows)
-        .select("doc_id", F.col("header_idx").cast("bigint").alias("header_idx"))
-        .orderBy("doc_id")
-    )
+    return _table_pass(
+        spark, sf_dir, lambda d, rows: [(d, E.header_row(rows))], "doc_id bigint, header_idx bigint"
+    ).orderBy("doc_id")
 
 
 @register(
@@ -3244,10 +3238,12 @@ def table_header_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def table_annex_title(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 length-gated annex title (format_doc.py:122-129 variant:
     min_len=40 — the gate actually fires, ~2/3 of docs emit NULL)."""
-    from .operators.enrich import annex_title
-
-    rows = _table_rows(spark, sf_dir)
-    return annex_title(rows, max_rows=2, min_len=40).orderBy("doc_id")
+    return _table_pass(
+        spark,
+        sf_dir,
+        lambda d, rows: [(d, t) for t in E.annex_title(rows, max_rows=2, min_len=40)],
+        "doc_id bigint, annex_title string",
+    ).orderBy("doc_id")
 
 
 @register(
@@ -3271,35 +3267,20 @@ def table_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (format_ocr_image_2.py:151-153), then 5-row chunking with header
     re-emission (format_xls.py:221-240). The oracle computes the
     expected drop/chunk/row counts arithmetically from the planted
-    layout."""
-    from .operators.enrich import chunk_table_rows, detect_header_row, drop_repeated_headers
+    layout. n_rows counts the chunk output: kept body rows plus one
+    header per chunk."""
+    return _table_pass(
+        spark, sf_dir, _table_chunk_stats, "doc_id bigint, n_dropped bigint, n_chunks bigint, n_rows bigint"
+    ).orderBy("doc_id")
 
-    rows = _table_rows(spark, sf_dir).select("doc_id", "row_idx", "cells")
-    hdr = detect_header_row(rows)
-    dedup = drop_repeated_headers(rows, hdr)
-    n_dropped = (
-        rows.groupBy("doc_id").agg(F.count("*").alias("_all"))
-        .join(dedup.groupBy("doc_id").agg(F.count("*").alias("_kept")), "doc_id")
-        .select("doc_id", (F.col("_all") - F.col("_kept")).alias("n_dropped"))
-    )
-    post = dedup.join(F.broadcast(hdr), "doc_id").filter(F.col("row_idx") >= F.col("header_idx")).drop("header_idx")
-    chunks = chunk_table_rows(post, ["doc_id"], order_col="row_idx", chunk_rows=5)
-    stats = chunks.groupBy("doc_id").agg(
-        F.countDistinct("chunk_id").alias("n_chunks"),
-        F.count("*").alias("n_rows"),
-    )
-    # n_rows excludes the per-chunk re-emitted header's own source row:
-    # chunk output = kept body + one header per chunk
-    return (
-        n_dropped.join(stats, "doc_id")
-        .select(
-            "doc_id",
-            F.col("n_dropped").cast("bigint").alias("n_dropped"),
-            F.col("n_chunks").cast("bigint").alias("n_chunks"),
-            F.col("n_rows").cast("bigint").alias("n_rows"),
-        )
-        .orderBy("doc_id")
-    )
+
+def _table_chunk_stats(d: int, rows: list[Row]) -> Iterator[tuple]:
+    """table_chunks' row for one table; a table without a header has none."""
+    h = E.header_row(rows)
+    if h is not None:
+        kept = E.drop_repeated_headers(rows, h)
+        n_chunks = len(E.chunk_table_rows(kept, chunk_rows=5))
+        yield d, len(rows) - h - len(kept), n_chunks, len(kept) - 1 + n_chunks
 
 
 # --- S8: multi-sheet workbook scan → per-sheet header detection -------------
@@ -3318,13 +3299,12 @@ def table_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def workbook_sheet_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8 multi-sheet scan (format_xls.py:182-186): a serialized workbook
-    column → mapInPandas sheet scan → per-(doc, sheet) 3-tier header
-    detection with the STT/MÃ markers (format_doc.py:110-116). The
-    oracle states the planted per-sheet layout in closed form: Sheet1
-    has an STT header at row 1+id%2 (tier 1), PhuLuc has no marker and a
-    dense row 2 (tier 2)."""
-    from .operators.enrich import detect_header_row
-    from .sources.workbook import GS, RS, US, sheets_from_workbooks
+    column → one pass per workbook that parses it and runs the 3-tier
+    header detection per sheet with the STT/MÃ markers
+    (format_doc.py:110-116). The oracle states the planted per-sheet
+    layout in closed form: Sheet1 has an STT header at row 1+id%2
+    (tier 1), PhuLuc has no marker and a dense row 2 (tier 2)."""
+    from .sources.workbook import GS, RS, US
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
     base = docs.select(
@@ -3354,18 +3334,20 @@ def workbook_sheet_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(GS),
         F.lit("PhuLuc" + RS), F.array_join(sheet2_rows, RS),
     )
-    sheets = sheets_from_workbooks(base.select("doc_id", wb.alias("workbook")))
-    hdr = detect_header_row(sheets, doc_col=["doc_id", "sheet_name"], markers=("STT", "MÃ"))
-    nrows = sheets.groupBy("doc_id", "sheet_name").agg(F.count("*").alias("n_rows"))
-    return (
-        hdr.join(nrows, ["doc_id", "sheet_name"])
-        .select(
-            "doc_id", "sheet_name",
-            F.col("header_idx").cast("bigint").alias("header_idx"),
-            F.col("n_rows").cast("bigint").alias("n_rows"),
-        )
-        .orderBy("doc_id", "sheet_name")
-    )
+    return flat_map_rows(
+        base.select("doc_id", wb.alias("workbook")),
+        _workbook_sheet_tables,
+        "doc_id string, sheet_name string, header_idx bigint, n_rows bigint",
+    ).orderBy("doc_id", "sheet_name")
+
+
+def _workbook_sheet_tables(doc_id, workbook: str) -> Iterator[tuple]:
+    """workbook_sheet_tables' rows for one serialized workbook: every
+    sheet, its header_idx None when no tier hits."""
+    from .sources.workbook import by_sheet, parse_workbook
+
+    for name, rows in by_sheet(parse_workbook(workbook)).items():
+        yield str(doc_id), name, E.header_row(rows, markers=("STT", "MÃ")), len(rows)
 
 
 @register(
@@ -3385,14 +3367,14 @@ def xlsx_real_sheets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zip of SpreadsheetML with a shared-string table — sources/
     workbook.py:build_xlsx), decode it with the stdlib reader
     (parse_xlsx_bytes — the production scan is binaryFile + the same
-    mapInPandas), then run the 3-tier header detection over the decoded
-    rows. The planted layout matches workbook_sheet_tables, so the
-    oracle states it in closed form; header_cell0 additionally pins the
-    decoded CELL VALUES (shared-string resolution, None-gap padding),
-    not just row counts. Replaces the r02 'xlsx decode stubbed' caveat
-    (reference: format_xls.py:182-186 pd.read_excel(sheet_name=None))."""
-    from .operators.enrich import detect_header_row
-    from .sources.workbook import SHEET_ROW_SCHEMA, build_xlsx, parse_xlsx_bytes
+    pass), then run the 3-tier header detection over each decoded sheet
+    in that pass. The planted layout matches workbook_sheet_tables, so
+    the oracle states it in closed form; header_cell0 additionally pins
+    the decoded CELL VALUES (shared-string resolution, None-gap padding),
+    not just row counts. A sheet without a header has no row. Replaces
+    the r02 'xlsx decode stubbed' caveat (reference: format_xls.py:182-186
+    pd.read_excel(sheet_name=None))."""
+    from .sources.workbook import build_xlsx
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
 
@@ -3410,26 +3392,23 @@ def xlsx_real_sheets(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["x3", "y3", "z3"],
             ["x4", "y4", "z4"],
         ]
-        for name, i, cells in parse_xlsx_bytes(build_xlsx({"Sheet1": s1, "PhuLuc": s2})):
-            yield str(d), name, i, cells
+        return _xlsx_sheet_rows(d, build_xlsx({"Sheet1": s1, "PhuLuc": s2}))
 
-    sheets = flat_map_rows(docs, synth_and_scan, SHEET_ROW_SCHEMA).localCheckpoint()  # 3 consumers
-    hdr = detect_header_row(sheets, doc_col=["doc_id", "sheet_name"], markers=("STT", "MÃ"))
-    nrows = sheets.groupBy("doc_id", "sheet_name").agg(F.count("*").alias("n_rows"))
-    cell0 = sheets.select(
-        "doc_id", "sheet_name", F.col("row_idx").alias("header_idx"), F.col("cells").getItem(0).alias("header_cell0")
-    )
-    return (
-        hdr.join(nrows, ["doc_id", "sheet_name"])
-        .join(cell0, ["doc_id", "sheet_name", "header_idx"])
-        .select(
-            "doc_id", "sheet_name",
-            F.col("header_idx").cast("bigint").alias("header_idx"),
-            F.col("n_rows").cast("bigint").alias("n_rows"),
-            "header_cell0",
-        )
-        .orderBy("doc_id", "sheet_name")
-    )
+    return flat_map_rows(
+        docs,
+        synth_and_scan,
+        "doc_id string, sheet_name string, header_idx bigint, n_rows bigint, header_cell0 string",
+    ).orderBy("doc_id", "sheet_name")
+
+
+def _xlsx_sheet_rows(doc_id, blob: bytes) -> Iterator[tuple]:
+    """xlsx_real_sheets' rows for one .xlsx: a sheet without a header has none."""
+    from .sources.workbook import by_sheet, parse_xlsx_bytes
+
+    for name, rows in by_sheet(parse_xlsx_bytes(blob)).items():
+        h = E.header_row(rows, markers=("STT", "MÃ"))
+        if h is not None:
+            yield str(doc_id), name, h, len(rows), next(iter(rows[h]), None)
 
 
 @register(
@@ -3736,15 +3715,14 @@ def docx_real_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes an actual .docx (zip + WordprocessingML: body paragraphs +
     a w:tbl; every 4th doc gets a too-short paragraph list so the
     format_doc.py:122-129 length gate FIRES → NULL annex); parse_docx
-    recovers paragraphs and table rows in document order; then the REAL
-    operators run Spark-side: annex_title (limit 12 / min_len 40 — the
-    format_doc variant), detect_header_row (STT/MÃ markers), and the
-    write_chunk markdown rendering (format_doc.py:135-146: header line,
-    `|---|` separator row, data lines). At 100 TB: one mapInPandas scan,
-    one agg per doc, broadcast header join — no cross-doc shuffle beyond
-    the doc_id hash."""
-    from .operators.enrich import annex_title, detect_header_row
-    from .sources.docxdoc import build_docx, parse_docx
+    recovers paragraphs and table rows in document order (several tables
+    read as one); then, in the same per-document pass, the enrich rules
+    run over them: annex_title (limit 12 / min_len 40 — the format_doc
+    variant), header_row (STT/MÃ markers), and the write_chunk markdown
+    rendering (format_doc.py:135-146: header line, `|---|` separator row,
+    data lines). A doc with no annex text or no table rows has no row;
+    one without a header gets a NULL header_idx and an empty chunk."""
+    from .sources.docxdoc import build_docx
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
 
@@ -3758,57 +3736,32 @@ def docx_real_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             [str(j), f"M{d}.{j}", t[6 * (j - 1) : 6 * (j - 1) + 8]]
             for j in range(1, 4 + d % 2)
         ]
-        blob = build_docx([*paras, table])
-        ps, tbls = parse_docx(blob)
-        for i, p in enumerate(ps):
-            yield str(d), "p", i, [p]
-        for tbl in tbls:
-            for i, row in enumerate(tbl):
-                yield str(d), "t", i, row
+        return _docx_chunk_rows(d, build_docx([*paras, table]))
 
-    rows = flat_map_rows(
-        docs, synth_and_scan, "doc_id string, src string, row_idx int, cells array<string>"
-    ).localCheckpoint()  # 3 consumers (annex, header, markdown): parse once
-    annex = annex_title(rows.filter(F.col("src") == "p"), max_rows=12, min_len=40)
-    trows = rows.filter(F.col("src") == "t")
-    hdr = detect_header_row(trows, markers=("STT", "MÃ"))
-    line = F.concat(F.lit("| "), F.array_join("cells", " | "), F.lit(" |"))
-    md = (
-        trows.join(hdr.hint("broadcast"), "doc_id")
-        .select("doc_id", "row_idx", "header_idx", line.alias("line"), F.size("cells").alias("nc"))
-        .groupBy("doc_id", "header_idx")
-        .agg(
-            F.max(F.when(F.col("row_idx") == F.col("header_idx"), F.col("line"))).alias("hline"),
-            F.max(F.when(F.col("row_idx") == F.col("header_idx"), F.col("nc"))).alias("ncols"),
-            F.sum(F.when(F.col("row_idx") > F.col("header_idx"), 1).otherwise(0)).alias("n_data"),
-            F.concat_ws(
-                "\n",
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.when(
-                                F.col("row_idx") > F.col("header_idx"),
-                                F.struct("row_idx", "line"),
-                            )
-                        )
-                    ),
-                    lambda s: s["line"],
-                ),
-            ).alias("data_md"),
-        )
-    )
-    sep = F.concat(F.lit("|"), F.expr("repeat('---|', ncols)"))
-    return (
-        md.join(annex.hint("broadcast"), "doc_id")
-        .select(
-            "doc_id",
-            "annex_title",
-            F.col("header_idx").cast("int").alias("header_idx"),
-            F.col("n_data").cast("int").alias("n_data_rows"),
-            F.concat_ws("\n", F.col("hline"), sep, F.col("data_md")).alias("chunk_md"),
-        )
-        .orderBy("doc_id")
-    )
+    return flat_map_rows(
+        docs,
+        synth_and_scan,
+        "doc_id string, annex_title string, header_idx int, n_data_rows int, chunk_md string",
+    ).orderBy("doc_id")
+
+
+def _docx_chunk_rows(doc_id, blob: bytes) -> Iterator[tuple]:
+    """docx_real_chunks' row for one .docx: none without annex text or
+    table rows; a NULL header_idx and an empty chunk without a header."""
+    from .sources.docxdoc import parse_docx
+
+    ps, tbls = parse_docx(blob)
+    rows = [row for tbl in tbls for row in tbl]
+    if not rows:
+        return
+    for annex in E.annex_title([[p] for p in ps], max_rows=12, min_len=40):
+        h = E.header_row(rows, markers=("STT", "MÃ"))
+        if h is None:
+            yield str(doc_id), annex, None, 0, ""
+        else:
+            data_md = "\n".join(_pipe_line(r) for r in rows[h + 1 :])
+            sep = "|" + "---|" * len(rows[h])
+            yield str(doc_id), annex, h, len(rows) - h - 1, "\n".join([_pipe_line(rows[h]), sep, data_md])
 
 
 @register(
@@ -3840,18 +3793,15 @@ def pdf_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     PDF whose cells are absolutely-positioned `x y Td` text ops (a title
     row, an STT header row, 4 + doc_id%3 data rows on a 3-column grid;
     odd docs Flate-compressed); parse_pdf_cells recovers (x, y, text)
-    words; then the TABLE STRUCTURE is rebuilt Spark-side, not in the
-    UDF: dense_rank over y DESC → row index, dense_rank over x ASC →
-    column index, collect_list per row → cells array — the same
-    clustering pdfplumber does, as two window functions Catalyst can
-    plan. The recovered rows then flow through the REAL W4 3-tier header
-    detection (enrich.detect_header_row: the STT marker tier fires on
-    the extracted cells, header_idx=1 is detected, not stated) and the
-    S7 markdown rendering. At 100 TB: one mapInPandas scan, two windows
-    and one agg all partitioned by (doc, page) — no driver work, no
-    cross-doc shuffle beyond the hash on doc_id."""
-    from .operators.enrich import detect_header_row
-    from .sources.pdfdoc import build_pdf_positioned, parse_pdf_cells
+    words; then the same per-document pass rebuilds the table as
+    pdfplumber clusters it: within a page, the distinct y values
+    descending give the row index and the distinct x values ascending the
+    column index, and a row's cells are sorted by (column, text). The
+    rows then go through the W4 3-tier header detection
+    (enrich.header_row: the STT marker tier fires on the extracted
+    cells, header_idx=1 is detected, not stated) and the S7 markdown
+    rendering."""
+    from .sources.pdfdoc import build_pdf_positioned
 
     docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
 
@@ -3864,37 +3814,34 @@ def pdf_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             y = 720.0 - 20.0 * (j - 1)
             row = (str(j), f"M{d}.{j}", t[8 * (j - 1) : 8 * (j - 1) + 10])
             cells.extend((cx, y, v) for cx, v in zip((72.0, 200.0, 330.0), row))
-        data = build_pdf_positioned([cells], compress=(d % 2 == 1))
-        for pg, x, y, cell in parse_pdf_cells(data):
-            yield str(d), pg, x, y, cell
+        return _pdf_table_rows(d, build_pdf_positioned([cells], compress=(d % 2 == 1)))
 
-    words = flat_map_rows(
-        docs, synth_and_scan, "doc_id string, page_idx int, x double, y double, cell string"
-    )
-    pg = Window.partitionBy("doc_id", "page_idx")
-    placed = words.select(
-        "doc_id",
-        "cell",
-        (F.dense_rank().over(pg.orderBy(F.desc("y"))) - 1).alias("row_idx"),
-        (F.dense_rank().over(pg.orderBy(F.asc("x"))) - 1).alias("col_idx"),
-    )
-    tab = placed.groupBy("doc_id", "row_idx").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("col_idx", "cell"))), lambda s: s["cell"]
-        ).alias("cells")
-    ).localCheckpoint()  # 2 consumers (hdr + output join): don't re-run the parse
-    hdr = detect_header_row(tab, markers=("STT", "MÃ"))
-    return (
-        tab.join(hdr.hint("broadcast"), "doc_id")
-        .select(
-            "doc_id",
-            F.col("row_idx").cast("int").alias("row_idx"),
-            F.col("header_idx").cast("int").alias("header_idx"),
-            F.size("cells").cast("int").alias("n_cells"),
-            F.concat(F.lit("| "), F.array_join("cells", " | "), F.lit(" |")).alias("line"),
-        )
-        .orderBy("doc_id", "row_idx")
-    )
+    return flat_map_rows(
+        docs,
+        synth_and_scan,
+        "doc_id string, row_idx int, header_idx int, n_cells int, line string",
+    ).orderBy("doc_id", "row_idx")
+
+
+def _pdf_table_rows(doc_id, blob: bytes) -> Iterator[tuple]:
+    """pdf_table_extract's rows for one PDF: a page's words placed on the
+    grid of its distinct y values (descending) and x values (ascending);
+    equal row indices of different pages form one row."""
+    from .sources.pdfdoc import parse_pdf_cells
+
+    pages: dict[int, list] = {}
+    for pg, x, y, cell in parse_pdf_cells(blob):
+        pages.setdefault(pg, []).append((x, y, cell))
+    placed: dict[int, list] = {}
+    for words in pages.values():
+        row_of = {y: r for r, y in enumerate(sorted({y for _, y, _ in words}, reverse=True))}
+        col_of = {x: c for c, x in enumerate(sorted({x for x, _, _ in words}))}
+        for x, y, cell in words:
+            placed.setdefault(row_of[y], []).append((col_of[x], cell))
+    rows = [[cell for _, cell in sorted(placed[r])] for r in range(len(placed))]
+    h = E.header_row(rows, markers=("STT", "MÃ"))
+    for r, cells in enumerate(rows):
+        yield str(doc_id), r, h, len(cells), _pipe_line(cells)
 
 
 @register(
@@ -3932,65 +3879,32 @@ def table_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     trimmed, a page-marker comment per chunk) after header-dedup and
     5-row chunking. The oracle rebuilds the markdown in closed form from
     the planted layout."""
-    from .operators.enrich import chunk_table_rows, detect_header_row, drop_repeated_headers
+    return _table_pass(spark, sf_dir, _table_markdown, "doc_id bigint, markdown string").orderBy("doc_id")
 
-    rows = _table_rows(spark, sf_dir).select("doc_id", "row_idx", "cells")
-    hdr = detect_header_row(rows)
-    dedup = drop_repeated_headers(rows, hdr)
-    post = dedup.join(F.broadcast(hdr), "doc_id").filter(F.col("row_idx") >= F.col("header_idx")).drop("header_idx")
-    chunks = chunk_table_rows(post, ["doc_id"], order_col="row_idx", chunk_rows=5)
-    line = F.concat(
-        F.lit("| "),
-        F.array_join(
-            F.transform(F.col("cells"), lambda c: F.trim(F.regexp_replace(F.coalesce(c, F.lit("")), "\n", " "))),
-            " | ",
-        ),
-        F.lit(" |"),
-    )
-    sep = F.concat(
-        F.lit("|"),
-        F.array_join(F.transform(F.col("cells"), lambda c: F.lit("---")), "|"),
-        F.lit("|"),
-    )
-    fmt = chunks.select(
-        "doc_id", "chunk_id", "is_header", "row_idx", line.alias("line"), sep.alias("sep")
-    )
-    per_chunk = fmt.groupBy("doc_id", "chunk_id").agg(
-        F.concat(
-            F.lit("<!-- Page "), (F.col("chunk_id") + 1).cast("string"), F.lit(" -->\n"),
-            F.max(F.when(F.col("is_header"), F.col("line"))), F.lit("\n"),
-            F.max(F.when(F.col("is_header"), F.col("sep"))), F.lit("\n"),
-            F.concat_ws(
-                "\n",
-                F.transform(
-                    F.sort_array(F.collect_list(F.when(~F.col("is_header"), F.struct("row_idx", "line")))),
-                    lambda s: s["line"],
-                ),
-            ),
-        ).alias("chunk_md")
-    )
-    return (
-        per_chunk.groupBy("doc_id")
-        .agg(
-            F.concat_ws(
-                "\n",
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("chunk_id", "chunk_md"))),
-                    lambda s: s["chunk_md"],
-                ),
-            ).alias("markdown")
+
+def _md_line(cells: Row) -> str:
+    """extract_tables.py:80-92's row line: a null cell is '', newlines
+    become spaces, each cell trimmed."""
+    return "| " + " | ".join((c or "").replace("\n", " ").strip(" ") for c in cells) + " |"
+
+
+def _table_markdown(d: int, rows: list[Row]) -> Iterator[tuple]:
+    """table_markdown's row for one table; a table without a header has none."""
+    h = E.header_row(rows)
+    if h is not None:
+        head = f"{_md_line(rows[h])}\n|{'---|' * len(rows[h])}\n"
+        chunks = E.chunk_table_rows(E.drop_repeated_headers(rows, h), chunk_rows=5)
+        yield d, "\n".join(
+            f"<!-- Page {k + 1} -->\n{head}" + "\n".join(_md_line(cells) for _, cells in chunk[1:])
+            for k, chunk in enumerate(chunks)
         )
-        .orderBy("doc_id")
-    )
 
 
 # --- merged-cell section headers → section-scoped chunking ------------------
 
 def _section_prefix_sql() -> str:
-    from .operators.enrich import SECTION_CONTAINS, SECTION_PREFIXES
-
-    conds = [f"contains(upper(ne[1]), '{m}')" for m in SECTION_CONTAINS]
-    conds += [f"starts_with(upper(ne[1]), '{p}')" for p in SECTION_PREFIXES]
+    conds = [f"contains(upper(ne[1]), '{m}')" for m in E.SECTION_CONTAINS]
+    conds += [f"starts_with(upper(ne[1]), '{p}')" for p in E.SECTION_PREFIXES]
     return " OR ".join(conds)
 
 
@@ -4059,63 +3973,48 @@ def table_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-way rotation (MỤC / XÉT NGHIỆM / numeric-prefix sections, plus an
     identical-but-markerless decoy that must stay a DATA row), blank rows
     to drop, and pre-section rows that must get section_id 0 with a NULL
-    title. The engine detects the header (W4), assigns cumsum section ids
-    with flush-at-boundary chunking (chunk numbering restarts per
-    section); the oracle replays the same list semantics in DuckDB."""
-    from .operators.enrich import detect_header_row, section_chunks
-
+    title. One pass per document builds its table, detects the header
+    (W4) and assigns section ids with flush-at-boundary chunking (chunk
+    numbering restarts per section) over the rows after it; only sections
+    with a data row are emitted. The oracle replays the same list
+    semantics in DuckDB."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    idx = F.col("row_idx")
-    k = F.floor(idx / 6).cast("int")
-    null_s = F.lit(None).cast("string")
-    s0 = F.concat(F.lit("MỤC "), (k + 1).cast("string"))
-    s1 = F.concat(F.lit("XÉT NGHIỆM NHÓM "), (k + 1).cast("string"))
-    s2 = F.concat(F.lit("2. Danh mục "), (k + 1).cast("string"))
-    s3 = F.lit("ghi chú chung")
-    v = ((F.col("doc_id") + k) % 4).cast("int")
-    cells = (
-        F.when(idx == 0, F.array(F.lit("STT"), F.lit("MÃ SỐ"), F.lit("Tên thủ tục")))
-        .when(
-            idx % 6 == 3,
-            F.when(v == 0, F.array(s0, s0, s0))
-            .when(v == 1, F.array(s1, s1, s1))
-            .when(v == 2, F.array(s2, s2, s2))
-            .otherwise(F.array(s3, s3, s3)),
-        )
-        .when((idx % 6 == 5) & (F.col("doc_id") % 3 == 0), F.array(F.lit(""), F.lit(""), null_s))
-        .otherwise(
-            F.array(
-                F.concat(F.lit("r"), idx.cast("string")),
-                F.concat(F.lit("M"), F.col("doc_id").cast("string"), F.lit("."), idx.cast("string")),
-                F.expr("substr(text, (row_idx * 3) % 40 + 1, 12)"),
-            )
-        )
-    )
-    rows = (
-        docs.select(
-            "doc_id", "text",
-            F.explode(F.sequence(F.lit(0), (F.lit(13) + F.col("doc_id") % 7))).alias("row_idx"),
-        )
-        .select("doc_id", "text", F.col("row_idx").cast("int").alias("row_idx"))
-        .select("doc_id", "row_idx", cells.alias("cells"))
-    )
-    hdr = detect_header_row(rows)
-    data = (
-        rows.join(F.broadcast(hdr), "doc_id")
-        .filter(F.col("row_idx") > F.col("header_idx"))
-        .drop("header_idx")
-    )
-    sc = section_chunks(data, chunk_rows=5)
-    return (
-        sc.groupBy("doc_id", "section_id")
-        .agg(
-            F.max("section_title").alias("section_title"),
-            F.min("row_idx").cast("bigint").alias("first_row_idx"),
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.countDistinct("chunk_id").cast("bigint").alias("n_chunks"),
-        )
-        .orderBy("doc_id", "section_id")
-    )
+    return flat_map_rows(
+        docs,
+        lambda d, t: _table_section_stats(int(d), list(_section_rows(int(d), str(t)))),
+        "doc_id bigint, section_id int, section_title string, first_row_idx bigint, "
+        "n_rows bigint, n_chunks bigint",
+    ).orderBy("doc_id", "section_id")
+
+
+def _section_rows(d: int, t: str) -> Iterator[Row]:
+    """One document's table in table_sections' planted world (the
+    oracle's `c` CTE in Python)."""
+    for i in range(14 + d % 7):
+        k = i // 6
+        if i == 0:
+            yield ["STT", "MÃ SỐ", "Tên thủ tục"]
+        elif i % 6 == 3:
+            s = (f"MỤC {k + 1}", f"XÉT NGHIỆM NHÓM {k + 1}", f"2. Danh mục {k + 1}", "ghi chú chung")
+            yield [s[(d + k) % 4]] * 3
+        elif i % 6 == 5 and d % 3 == 0:
+            yield ["", "", None]
+        else:
+            a = i * 3 % 40
+            yield [f"r{i}", f"M{d}.{i}", t[a : a + 12]]
+
+
+def _table_section_stats(d: int, rows: list[Row]) -> Iterator[tuple]:
+    """table_sections' rows for one table: per section of the rows after
+    the header, its first row, row count and chunk count. A section
+    without data rows, and a table without a header, have none."""
+    h = E.header_row(rows)
+    if h is None:
+        return
+    chunked = E.section_chunks(list(enumerate(rows))[h + 1 :], chunk_rows=5)
+    for (section_id, title), grp in groupby(chunked, key=lambda r: r[:2]):
+        grp = list(grp)
+        yield d, section_id, title, grp[0][2], len(grp), grp[-1][3] + 1
 
 
 # --- docs_postprocess: the full 14-step doc_name-parameterized regex fold ---

@@ -59,8 +59,7 @@ class _PageParser(HTMLParser):
         self._content_depth = 0  # >0 while inside div.content1
         self._div_depth_at_entry = 0
         self._div_depth = 0
-        self._el_stack: list[dict] = []  # open hover/huongdan/b elements
-        self._el_text: list[str] = []
+        self._el_stack: list[dict] = []  # open hover/huongdan/b elements, each with its text
         self._page_div: dict | None = None  # open page-level div (tooltip/note)
         self._page_text: list[str] = []
 
@@ -99,8 +98,7 @@ class _PageParser(HTMLParser):
         )
         is_note = tag == "huongdan" and (attrs.get("id") or "").startswith("span-note_")
         if is_hover or is_note or tag == "b":
-            self._el_stack.append({"tag": tag, "attrs": attrs})
-            self._el_text = []
+            self._el_stack.append({"tag": tag, "attrs": attrs, "text": []})
 
     def handle_endtag(self, tag: str) -> None:
         if tag == "div":
@@ -114,23 +112,24 @@ class _PageParser(HTMLParser):
             return
         if self._el_stack and self._el_stack[-1]["tag"] == tag:
             el = self._el_stack.pop()
-            text = "".join(self._el_text)
-            if tag == "b":
-                if _DIEU_B.match(text.strip()):
-                    # normalize inner whitespace + newline marker after the
-                    # heading (pipeline.py:243-249,255)
-                    self._emit("node", "b_dieu", " ".join(text.split()) + "\n")
-                else:
-                    self._emit("node", "b", text)
-            elif tag == "huongdan":
+            text = "".join(el["text"])
+            if tag != "b":
                 self._emit("element", tag, text, el["attrs"])
+            elif any(e["tag"] != "b" for e in self._el_stack):
+                # the reference replaces hover and note elements before it
+                # walks <b> (pipeline.py:235-249): a <b> inside one is only
+                # part of that element's text
+                self._el_stack[-1]["text"].append(text)
+            elif _DIEU_B.match(text.strip()):
+                # normalize inner whitespace + newline marker after the
+                # heading (pipeline.py:243-249,255)
+                self._emit("node", "b_dieu", " ".join(text.split()) + "\n")
             else:
-                self._emit("element", tag, text, el["attrs"])
-            self._el_text = []
+                self._emit("node", "b", text)
 
     def handle_data(self, data: str) -> None:
         if self._el_stack:
-            self._el_text.append(data)
+            self._el_stack[-1]["text"].append(data)
         elif self._in_content():
             self._emit("node", "", data)
         elif self._page_div is not None:

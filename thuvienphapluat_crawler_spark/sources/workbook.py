@@ -13,13 +13,11 @@ Two decode paths, same output contract:
   * parse_workbook — the serialized stand-in used where queries need to
     synthesize workbook columns cheaply inside Spark expressions.
 
-What was always real is the Spark shape the reference's sheet
-processing maps to:
-
-    workbook column → mapInPandas sheet scan
-      → (doc_id, sheet_name, row_idx, cells:array<string>) rows
-      → per-sheet header detection / annex title / chunking
-        (operators/enrich.py — the same W4/A7/A6/J6 machinery)
+Either decode runs inside the one per-workbook flat_map_rows pass that
+the reference's sheet loop maps to: by_sheet groups the decoded rows
+into {sheet: rows}, and the per-sheet header detection / annex title /
+chunking (operators/enrich.py — the W4/A7/A6/J6 rules) run on each
+sheet in the same pass.
 
 Serialized stand-in format (deterministic, produced by the synthetic
 workbook builder in queries.py): sheets separated by GS (\\x1d), the
@@ -35,15 +33,9 @@ import re
 import xml.etree.ElementTree as ET
 import zipfile
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..rowmap import flat_map_rows
 from .docxdoc import ZIP_XML_ERRORS
 
 GS, RS, US = "\x1d", "\x1e", "\x1f"
-
-SHEET_ROW_SCHEMA = "doc_id string, sheet_name string, row_idx int, cells array<string>"
 
 
 def parse_workbook(payload: str) -> list[tuple[str, int, list[str | None]]]:
@@ -274,27 +266,10 @@ def _xlsx_rows(data: bytes) -> list[tuple[str, int, list[str | None]]]:
     return out
 
 
-def sheets_from_xlsx(df: DataFrame, id_col: str = "doc_id", bin_col: str = "xlsx") -> DataFrame:
-    """(doc_id, xlsx:binary) → one row per sheet row via the REAL decoder,
-    same Arrow-batched flat_map_rows stage as sheets_from_workbooks — the
-    production S8 scan is `spark.read.format('binaryFile')` + this."""
-
-    def sheet_rows(doc_id, payload):
-        for name, i, cells in parse_xlsx_bytes(bytes(payload)):
-            yield str(doc_id), name, i, cells
-
-    return flat_map_rows(df.select(F.col(id_col), F.col(bin_col)), sheet_rows, SHEET_ROW_SCHEMA)
-
-
-def sheets_from_workbooks(
-    df: DataFrame, id_col: str = "doc_id", wb_col: str = "workbook"
-) -> DataFrame:
-    """(doc_id, workbook) → one row per sheet row, Arrow-batched. With a
-    real xlsx source this is `binaryFile` scan + openpyxl inside the same
-    flat_map_rows stage (decode swap is local to this function)."""
-
-    def sheet_rows(doc_id, payload):
-        for name, i, cells in parse_workbook(payload):
-            yield str(doc_id), name, i, cells
-
-    return flat_map_rows(df.select(F.col(id_col), F.col(wb_col)), sheet_rows, SHEET_ROW_SCHEMA)
+def by_sheet(rows: list[tuple[str, int, list[str | None]]]) -> dict[str, list[list[str | None]]]:
+    """parse_workbook / parse_xlsx_bytes rows → {sheet_name: its rows in
+    order}, the {sheet → raw DataFrame} shape of pd.read_excel(sheet_name=None)."""
+    sheets: dict[str, list[list[str | None]]] = {}
+    for name, _, cells in rows:
+        sheets.setdefault(name, []).append(cells)
+    return sheets
