@@ -11,6 +11,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import SF_CORRECT
 
 from thuvienphapluat_crawler_spark import queries as Q
 
@@ -231,3 +232,40 @@ def test_every_family_has_exactly_one_head_representative():
         f"head queries representing no family: {unmapped} — add/merge a "
         "family entry in FAMILY_REPRESENTATIVE"
     )
+
+
+# Each query whose per-row pass sorts through flat_map_rows' `order`, with
+# the orderBy key it had: collect() must come back in that order, which
+# the oracle compare (it sorts both sides) cannot see.
+SORTED_PASS_ORDER = {
+    "docs_full_pipeline": ("doc_id",),
+    "docs_repetition_filter": ("doc_id",),
+    "media_sniff_formats": ("doc_id",),
+    "media_features": ("doc_id", "media_ref"),
+    "media_ocr_route": ("doc_id", "media_ref"),
+    "html_extract_docs": ("doc_id", "para_offset"),
+    "table_header_tiers": ("doc_id",),
+    "table_annex_title": ("doc_id",),
+    "table_chunks": ("doc_id",),
+    "table_markdown": ("doc_id",),
+    "table_sections": ("doc_id", "section_id"),
+    "workbook_sheet_tables": ("doc_id", "sheet_name"),
+    "xlsx_real_sheets": ("doc_id", "sheet_name"),
+    "pdf_real_text": ("doc_id", "page_idx"),
+    "png_real_features": ("doc_id",),
+    "wav_real_features": ("doc_id",),
+    "avi_real_frames": ("doc_id", "frame_idx"),
+    "docx_real_chunks": ("doc_id",),
+    "pdf_table_extract": ("doc_id", "row_idx"),
+    "pdf_page_raster": ("doc_id",),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SORTED_PASS_ORDER))
+def test_sorted_pass_collects_in_order_by_order(spark, name):
+    rows = Q.QUERIES[name](spark, SF_CORRECT).collect()
+    # ascending, nulls first; Python str order is code-point order, which
+    # is the UTF-8 byte order Spark sorts strings by
+    keys = [tuple((r[c] is not None, r[c]) for c in SORTED_PASS_ORDER[name]) for r in rows]
+    assert len(rows) > 100
+    assert keys == sorted(keys)

@@ -1,7 +1,8 @@
 """flat_map_rows against its own definition: the Spark output must equal
 `fn` applied serially to the collected input rows, across many small
-Arrow batches. materialize against a separate count() per counter, in
-one Spark job."""
+Arrow batches; with `order`, it must equal the same pass followed by
+`orderBy`, row for row, with `fn` called once per input row.
+materialize against a separate count() per counter, in one Spark job."""
 
 from __future__ import annotations
 
@@ -129,3 +130,44 @@ def test_materialize_runs_one_job(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def _spread_expander(calls):
+    # nested, so Spark pickles it by value; `calls` counts invocations
+    def expand(doc_id, seq, text):
+        calls.add(1)
+        # 0, 1 or many rows per input row; the key goes long -> string
+        for i in range(seq % 4):
+            yield str(doc_id), seq, i, f"{text}:{i}"
+
+    return expand
+
+
+SORTED_OUT = "doc_id string, seq long, i int, piece string"
+
+
+def _spread_input(spark):
+    # duplicate leading keys whose string order differs from their numeric
+    # order (7 < 10 < 100 but "10" < "100" < "7"), over several partitions
+    rows = [((s * 37) % 23 * 10 ** (s % 3), s, f"t{s}") for s in range(60)]
+    return spark.createDataFrame(rows, "doc_id long, seq long, text string").repartition(3)
+
+
+def test_flat_map_rows_order_equals_order_by(spark):
+    df = _spread_input(spark)
+    calls = spark.sparkContext.accumulator(0)
+    order = ("doc_id", "seq", "i")
+    got = flat_map_rows(df, _spread_expander(calls), SORTED_OUT, order=order).collect()
+    want = flat_map_rows(df, _spread_expander(calls), SORTED_OUT).orderBy(*order).collect()
+    assert got == want
+    assert len({r.doc_id for r in got}) < len({r.seq for r in got})
+    counts = {s: sum(1 for r in want if r.seq == s) for s in range(60)}
+    assert {0, 1}.issubset(counts.values()) and max(counts.values()) > 1
+
+
+def test_flat_map_rows_order_runs_fn_once_per_row(spark):
+    df = _spread_input(spark)
+    calls = spark.sparkContext.accumulator(0)
+    out = flat_map_rows(df, _spread_expander(calls), SORTED_OUT, order=("doc_id", "seq", "i"))
+    out.collect()
+    assert calls.value == df.count()

@@ -50,7 +50,7 @@ FRAME_SCHEMA = "doc_id string, media_ref string, frame_idx int, frame_bytes long
 
 
 def synth_media(
-    spark: SparkSession, docs: DataFrame, real_codecs: bool = False
+    spark: SparkSession, docs: DataFrame, real_codecs: bool = False, order: tuple[str, ...] = ()
 ) -> DataFrame:
     """Deterministic media blobs derived from (doc_id, media_ref).
 
@@ -64,7 +64,10 @@ def synth_media(
     (sources/wavcodec), and video items spec-valid uncompressed-DIB
     AVIs (sources/avicodec) — all with seed-derived dims/params and
     pixel/sample formulas an oracle can replay. The remaining ffmpeg
-    boundary is COMPRESSED video (MJPEG/H.264), not the container."""
+    boundary is COMPRESSED video (MJPEG/H.264), not the container.
+
+    With `order`, the rows come sorted by it (flat_map_rows' `order`);
+    a later per-row pass or projection keeps that order."""
     from .sources.avicodec import encode_avi
     from .sources.pngcodec import encode_png
     from .sources.wavcodec import encode_wav
@@ -106,7 +109,7 @@ def synth_media(
             blob = header + body
         yield doc_id, ref, kind, blob
 
-    return flat_map_rows(docs.select("doc_id", "media_ref", "kind"), item, MEDIA_SCHEMA)
+    return flat_map_rows(docs.select("doc_id", "media_ref", "kind"), item, MEDIA_SCHEMA, order)
 
 
 def decode_stub(content: bytes) -> tuple[str, int, int]:

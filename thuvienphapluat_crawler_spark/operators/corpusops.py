@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..rowmap import flat_map_rows
-from .similarity import _dot, _topk_by_cosine, as_double
+from .similarity import _dot, _topk_by_cosine, as_double, doubles_sql
 from .textstats import split_tokens, tokens
 
 # ---------------------------------------------------------------------------
@@ -70,7 +70,7 @@ def _repetition_row(doc_id, text):
     yield doc_id, base_chars, top2, top3, top4, dup5, keep
 
 
-def repetition_metrics(docs: DataFrame) -> DataFrame:
+def repetition_metrics(docs: DataFrame, order: tuple[str, ...] = ()) -> DataFrame:
     """Per-doc Gopher repetition metrics, integer-exact:
 
       top{2,3,4}_bp — characters covered by the single most frequent
@@ -88,7 +88,9 @@ def repetition_metrics(docs: DataFrame) -> DataFrame:
     scan stage: tokenize once (`split_tokens`, the row-side twin of
     `textstats.tokens`), count one gram size at a time, emit one row.
     No shuffle and no checkpoint: at 100 TB it is one scan-side pass,
-    and per-task state is one document's counter of one gram size.
+    and per-task state is one document's counter of one gram size. With
+    `order`, the rows come sorted by it (flat_map_rows' `order`: one
+    range exchange of the input, then a per-partition sort).
     """
     id_type = docs.schema["doc_id"].dataType.simpleString()
     return flat_map_rows(
@@ -96,6 +98,7 @@ def repetition_metrics(docs: DataFrame) -> DataFrame:
         _repetition_row,
         f"doc_id {id_type}, base_chars bigint, top2_bp bigint, top3_bp bigint, "
         "top4_bp bigint, dup5_bp bigint, keep boolean",
+        order,
     )
 
 
@@ -279,16 +282,16 @@ def _cents_lit(cents: list[tuple[int, list[float]]]) -> Column:
     order) as the JVM fold F.sqrt(_dot(ce, ce)) they replace, so sims
     are bit-unchanged while a third of the per-row HOF work (the K
     constant self-dot folds Catalyst cannot fold through a lambda)
-    disappears."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(cid).cast("bigint").alias("cid"),
-                F.array(*[F.lit(x) for x in ce]).alias("ce"),
-                F.lit(math.sqrt(sum(x * x for x in ce))).alias("nrm"),
-            )
+    disappears. The table reaches the JVM as one SQL literal in one call
+    (doubles as round-trip reprs, similarity.doubles_sql)."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('cid', {int(cid)}L, 'ce', {doubles_sql(ce)}, "
+            f"'nrm', {math.sqrt(sum(x * x for x in ce))!r}D)"
             for cid, ce in cents
-        ]
+        )
+        + ")"
     )
 
 

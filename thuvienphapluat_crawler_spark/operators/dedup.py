@@ -89,18 +89,17 @@ def minhash_signatures(
     shuffled every (doc_id, h) row into a 16-aggregate groupBy. Pass
     hash_sets (a doc_hash_sets result, ideally materialized) when the
     caller also needs the sets elsewhere (exact-Jaccard verify) so
-    tokenize+md5 runs once, not once per consumer."""
+    tokenize+md5 runs once, not once per consumer. The K permutations
+    reach the JVM as one selectExpr, their coefficients inlined as int
+    literals (the type F.lit gives them)."""
     hsets = hash_sets if hash_sets is not None else doc_hash_sets(docs, id_col, text_col)
-    sig_cols = [
-        F.array_min(
-            F.transform(
-                F.col("hs"),
-                lambda h: ((h % MINHASH_P) * F.lit(MINHASH_A[k]) + F.lit(MINHASH_B[k])) % MINHASH_P,
-            )
-        ).alias(f"sig{k}")
-        for k in range(MINHASH_K)
-    ]
-    return hsets.select("doc_id", *sig_cols)
+    return hsets.selectExpr(
+        "doc_id",
+        *(
+            f"array_min(transform(hs, h -> ((h % {MINHASH_P}) * {a} + {b}) % {MINHASH_P})) AS sig{k}"
+            for k, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
+        ),
+    )
 
 
 def minhash_bands(sigs: DataFrame) -> DataFrame:

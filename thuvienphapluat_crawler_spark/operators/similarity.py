@@ -112,13 +112,24 @@ HYPERPLANE_TABLES: list[list[list[float]]] = _make_hyperplanes(LSH_TABLES, LSH_P
 NEARDUP_HYPERPLANES: list[list[list[float]]] = _make_hyperplanes(NEARDUP_TABLES, NEARDUP_PLANES_PER_TABLE, 4321)
 
 
+def doubles_sql(xs: list[float]) -> str:
+    """A SQL array<double> literal of `xs`: each value as its shortest
+    round-trip repr with the D suffix, so the JVM parses the same doubles."""
+    return "array(" + ", ".join(f"{float(x)!r}D" for x in xs) + ")"
+
+
 def planes_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature: bit p set iff <v, plane_p> > 0."""
-    sig = F.lit(0)
-    for p, plane in enumerate(planes):
-        plane_col = F.array(*[F.lit(x) for x in plane])
-        sig = sig + F.when(_dot(vec, plane_col) > 0, F.lit(2**p)).otherwise(F.lit(0))
-    return sig
+    """Random-hyperplane signature: bit p set iff <v, plane_p> > 0. The
+    planes reach the JVM as one literal in one call, each with its bit
+    value; each dot product folds in index order, as `_dot` does."""
+    table = F.expr(
+        "array("
+        + ", ".join(f"named_struct('bit', {1 << p}, 'w', {doubles_sql(w)})" for p, w in enumerate(planes))
+        + ")"
+    )
+    return F.aggregate(
+        table, F.lit(0), lambda sig, plane: sig + F.when(_dot(vec, plane["w"]) > 0, plane["bit"]).otherwise(0)
+    )
 
 
 # Probe radius for emb_knn_multiprobe (and its oracle — the mask list is

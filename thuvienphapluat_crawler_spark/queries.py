@@ -34,11 +34,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _fanout(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Spread a small single-file scan across all cores before a
-    CPU-heavy mapInPandas stage (the codec queries). A test-SF
+    CPU-heavy stage (the text, dedup and similarity queries). A test-SF
     documents.parquet arrives as 1-2 input splits, which would serialize
-    the Python codec work; at warehouse scale the input already has
+    the per-row work; at warehouse scale the input already has
     thousands of splits and the repartition is a no-op-sized shuffle of
-    (doc_id, text) — never of binary payloads."""
+    (doc_id, text) — never of binary payloads. A per-row Python pass
+    that ends in a presentation sort (the codec and table queries) takes
+    flat_map_rows' `order` instead: its range exchange of the scan fans
+    out the same way and also leaves each partition to sort by itself."""
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
@@ -1794,8 +1797,9 @@ def docs_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     published thresholds. Docs with doc_id % 10 == 0 get a planted
     repetition payload so the filter demonstrably fires. Scale shape:
     one per-document pass after the scan (corpusops.repetition_metrics);
-    the only exchanges are the scan fan-out and the presentation sort."""
-    docs = _fanout(load(spark, sf_dir, "documents"), spark).select(
+    the only exchange is the range partitioning of the scan on doc_id,
+    which fans it out and leaves each partition to sort by itself."""
+    docs = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.when(
             F.col("doc_id") % 10 == 0,
@@ -1804,7 +1808,7 @@ def docs_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    return C.repetition_metrics(docs).orderBy("doc_id")
+    return C.repetition_metrics(docs, order=("doc_id",))
 
 
 @register(
@@ -2094,9 +2098,7 @@ def media_sniff_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
         fmt, depth = sniff_format(blob)
         yield d, fmt, depth
 
-    return flat_map_rows(docs, sniff, "doc_id long, fmt string, sniff_depth long").orderBy(
-        "doc_id"
-    )
+    return flat_map_rows(docs, sniff, "doc_id long, fmt string, sniff_depth long", order=("doc_id",))
 
 
 def _pagerank_oracle() -> str:
@@ -3106,7 +3108,7 @@ def html_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     match."""
     from .sources.html_parse import extract_documents
 
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     nl = "\n"
     sid = F.col("doc_id").cast("string")
     f1, f2 = F.substring("text", 1, 20), F.substring("text", 21, 15)
@@ -3130,10 +3132,8 @@ def html_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("|~|Điểm a Khoản "), (F.col("doc_id") % 9).cast("string"), F.lit("</div></body></html>"),
     )
     pages = docs.select("doc_id", html.alias("html"))
-    out = extract_documents(pages)
-    return out.select(
-        "doc_id", F.col("para_offset").cast("bigint").alias("para_offset"), "paragraph"
-    ).orderBy("doc_id", "para_offset")
+    out = extract_documents(pages, order=("doc_id", "para_offset"))
+    return out.select("doc_id", F.col("para_offset").cast("bigint").alias("para_offset"), "paragraph")
 
 
 from .operators import enrich as E  # noqa: E402
@@ -3195,9 +3195,11 @@ def _table_pass(
     spark: SparkSession, sf_dir: str, fn: Callable[[int, list[Row]], Iterable[tuple]], schema: str
 ) -> DataFrame:
     """`fn(doc_id, rows)` over each document's synthetic table, in one
-    per-document pass: its tuples are the output rows."""
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
-    return flat_map_rows(docs, lambda d, t: fn(int(d), list(_table_rows(int(d), str(t)))), schema)
+    per-document pass: its tuples are the output rows, ordered by doc_id."""
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    return flat_map_rows(
+        docs, lambda d, t: fn(int(d), list(_table_rows(int(d), str(t)))), schema, order=("doc_id",)
+    )
 
 
 def _pipe_line(cells: Row) -> str:
@@ -3218,7 +3220,7 @@ def table_header_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiers; the oracle states the planted position in closed form."""
     return _table_pass(
         spark, sf_dir, lambda d, rows: [(d, E.header_row(rows))], "doc_id bigint, header_idx bigint"
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -3243,7 +3245,7 @@ def table_annex_title(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         lambda d, rows: [(d, t) for t in E.annex_title(rows, max_rows=2, min_len=40)],
         "doc_id bigint, annex_title string",
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -3271,7 +3273,7 @@ def table_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     header per chunk."""
     return _table_pass(
         spark, sf_dir, _table_chunk_stats, "doc_id bigint, n_dropped bigint, n_chunks bigint, n_rows bigint"
-    ).orderBy("doc_id")
+    )
 
 
 def _table_chunk_stats(d: int, rows: list[Row]) -> Iterator[tuple]:
@@ -3306,7 +3308,7 @@ def workbook_sheet_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tier 1), PhuLuc has no marker and a dense row 2 (tier 2)."""
     from .sources.workbook import GS, RS, US
 
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.select(
         "doc_id", "text",
         (F.lit(5) + F.col("doc_id") % 4).alias("n1"),
@@ -3338,7 +3340,8 @@ def workbook_sheet_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.select("doc_id", wb.alias("workbook")),
         _workbook_sheet_tables,
         "doc_id string, sheet_name string, header_idx bigint, n_rows bigint",
-    ).orderBy("doc_id", "sheet_name")
+        order=("doc_id", "sheet_name"),
+    )
 
 
 def _workbook_sheet_tables(doc_id, workbook: str) -> Iterator[tuple]:
@@ -3376,7 +3379,7 @@ def xlsx_real_sheets(spark: SparkSession, sf_dir: str) -> DataFrame:
     pd.read_excel(sheet_name=None))."""
     from .sources.workbook import build_xlsx
 
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
 
     def synth_and_scan(doc_id, text):
         d, t = int(doc_id), str(text)
@@ -3398,7 +3401,8 @@ def xlsx_real_sheets(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         synth_and_scan,
         "doc_id string, sheet_name string, header_idx bigint, n_rows bigint, header_cell0 string",
-    ).orderBy("doc_id", "sheet_name")
+        order=("doc_id", "sheet_name"),
+    )
 
 
 def _xlsx_sheet_rows(doc_id, blob: bytes) -> Iterator[tuple]:
@@ -3445,7 +3449,7 @@ def pdf_real_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     form. Replaces the r02 'pdf text-layer decode stubbed' caveat."""
     from .sources.pdfdoc import build_pdf, parse_pdf_text
 
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
 
     def synth_and_scan(doc_id, text):
         d, t = int(doc_id), str(text)
@@ -3458,13 +3462,11 @@ def pdf_real_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, txt in parse_pdf_text(data):
             yield str(d), i, flate, txt, len(txt)
 
-    return (
-        flat_map_rows(
-            docs,
-            synth_and_scan,
-            "doc_id string, page_idx int, flate boolean, page_text string, page_chars int",
-        )
-        .orderBy("doc_id", "page_idx")
+    return flat_map_rows(
+        docs,
+        synth_and_scan,
+        "doc_id string, page_idx int, flate boolean, page_text string, page_chars int",
+        order=("doc_id", "page_idx"),
     )
 
 
@@ -3508,7 +3510,7 @@ def png_real_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .sources.pngcodec import decode_png, encode_png, resize_nearest
 
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id"), spark)
+    docs = load(spark, sf_dir, "documents").select("doc_id")
 
     def synth_and_scan(doc_id):
         d = int(doc_id)
@@ -3531,14 +3533,12 @@ def png_real_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(br[0]), int(br[1]), int(br[2]),
         )
 
-    return (
-        flat_map_rows(
-            docs,
-            synth_and_scan,
-            "doc_id string, width int, height int, r_sum bigint, g_sum bigint, "
-            "b_sum bigint, br_r int, br_g int, br_b int",
-        )
-        .orderBy("doc_id")
+    return flat_map_rows(
+        docs,
+        synth_and_scan,
+        "doc_id string, width int, height int, r_sum bigint, g_sum bigint, "
+        "b_sum bigint, br_r int, br_g int, br_b int",
+        order=("doc_id",),
     )
 
 
@@ -3582,7 +3582,7 @@ def wav_real_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .sources.wavcodec import encode_wav, wav_stats
 
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id"), spark)
+    docs = load(spark, sf_dir, "documents").select("doc_id")
 
     def synth_and_scan(doc_id):
         d = int(doc_id)
@@ -3597,14 +3597,12 @@ def wav_real_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             st["duration_ms"], len(blob), st["peak"], st["sum_sq"],
         )
 
-    return (
-        flat_map_rows(
-            docs,
-            synth_and_scan,
-            "doc_id string, sample_rate int, channels int, n_frames int, "
-            "duration_ms bigint, wav_bytes bigint, peak int, sum_sq bigint",
-        )
-        .orderBy("doc_id")
+    return flat_map_rows(
+        docs,
+        synth_and_scan,
+        "doc_id string, sample_rate int, channels int, n_frames int, "
+        "duration_ms bigint, wav_bytes bigint, peak int, sum_sq bigint",
+        order=("doc_id",),
     )
 
 
@@ -3652,7 +3650,7 @@ def avi_real_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .sources.avicodec import avi_frame_stats, encode_avi
 
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id"), spark)
+    docs = load(spark, sf_dir, "documents").select("doc_id")
 
     def synth_and_scan(doc_id):
         d = int(doc_id)
@@ -3668,14 +3666,12 @@ def avi_real_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                 st["pix_sum"], st["frame_md5"],
             )
 
-    return (
-        flat_map_rows(
-            docs,
-            synth_and_scan,
-            "doc_id string, frame_idx int, fps int, width int, height int, "
-            "pix_sum bigint, frame_md5 string",
-        )
-        .orderBy("doc_id", "frame_idx")
+    return flat_map_rows(
+        docs,
+        synth_and_scan,
+        "doc_id string, frame_idx int, fps int, width int, height int, "
+        "pix_sum bigint, frame_md5 string",
+        order=("doc_id", "frame_idx"),
     )
 
 
@@ -3724,7 +3720,7 @@ def docx_real_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     one without a header gets a NULL header_idx and an empty chunk."""
     from .sources.docxdoc import build_docx
 
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
 
     def synth_and_scan(doc_id, text):
         d, t = int(doc_id), str(text)
@@ -3742,7 +3738,8 @@ def docx_real_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         synth_and_scan,
         "doc_id string, annex_title string, header_idx int, n_data_rows int, chunk_md string",
-    ).orderBy("doc_id")
+        order=("doc_id",),
+    )
 
 
 def _docx_chunk_rows(doc_id, blob: bytes) -> Iterator[tuple]:
@@ -3803,7 +3800,7 @@ def pdf_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendering."""
     from .sources.pdfdoc import build_pdf_positioned
 
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
 
     def synth_and_scan(doc_id, text):
         d, t = int(doc_id), str(text)
@@ -3820,7 +3817,8 @@ def pdf_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         synth_and_scan,
         "doc_id string, row_idx int, header_idx int, n_cells int, line string",
-    ).orderBy("doc_id", "row_idx")
+        order=("doc_id", "row_idx"),
+    )
 
 
 def _pdf_table_rows(doc_id, blob: bytes) -> Iterator[tuple]:
@@ -3879,7 +3877,7 @@ def table_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     trimmed, a page-marker comment per chunk) after header-dedup and
     5-row chunking. The oracle rebuilds the markdown in closed form from
     the planted layout."""
-    return _table_pass(spark, sf_dir, _table_markdown, "doc_id bigint, markdown string").orderBy("doc_id")
+    return _table_pass(spark, sf_dir, _table_markdown, "doc_id bigint, markdown string")
 
 
 def _md_line(cells: Row) -> str:
@@ -3984,7 +3982,8 @@ def table_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda d, t: _table_section_stats(int(d), list(_section_rows(int(d), str(t)))),
         "doc_id bigint, section_id int, section_title string, first_row_idx bigint, "
         "n_rows bigint, n_chunks bigint",
-    ).orderBy("doc_id", "section_id")
+        order=("doc_id", "section_id"),
+    )
 
 
 def _section_rows(d: int, t: str) -> Iterator[Row]:
@@ -4503,12 +4502,10 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan stage."""
     from .multimodal import extract_features, media_from_documents, synth_media
 
-    media = synth_media(spark, media_from_documents(spark, sf_dir), real_codecs=True)
-    return (
-        extract_features(media)
-        .select("doc_id", "media_ref", "kind", "format", "width", "height")
-        .orderBy("doc_id", "media_ref")
+    media = synth_media(
+        spark, media_from_documents(spark, sf_dir), real_codecs=True, order=("doc_id", "media_ref")
     )
+    return extract_features(media).select("doc_id", "media_ref", "kind", "format", "width", "height")
 
 
 @register(
@@ -4600,8 +4597,8 @@ def media_ocr_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     base64 payload byte-for-byte."""
     from .multimodal import media_from_documents, route_media, synth_media
 
-    media = synth_media(spark, media_from_documents(spark, sf_dir))
-    return route_media(media).orderBy("doc_id", "media_ref")
+    media = synth_media(spark, media_from_documents(spark, sf_dir), order=("doc_id", "media_ref"))
+    return route_media(media)
 
 
 # --- S5 closed: PDF page → glyph raster → PNG round-trip → OCR routing ------
@@ -4670,7 +4667,7 @@ def pdf_page_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.pngcodec import decode_png, encode_png
     from .sources.raster import rasterize_draws
 
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     san1 = F.upper(F.regexp_replace(F.substring("text", 1, 30), "[^A-Za-z0-9 ]", ""))
     san3 = F.upper(F.regexp_replace(F.substring("text", 31, 30), "[^A-Za-z0-9 ]", ""))
     prepped = docs.select(
@@ -4699,20 +4696,16 @@ def pdf_page_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id string, media_ref string, kind string, width_px int, height_px int, "
         "n_draws int, ink_pixels bigint, content binary"
     )
-    rastered = flat_map_rows(prepped, raster, schema)
+    # the pass comes out sorted by doc_id and runs once per page (the range
+    # bounds are sampled from the scan, not from the codec's output); the
+    # routing columns are a projection of each sorted partition
+    rastered = flat_map_rows(prepped, raster, schema, order=("doc_id",))
     routed = route_media(
         rastered, passthrough=("width_px", "height_px", "n_draws", "ink_pixels")
     )
-    # materialize the 8 scalar columns before the presentation sort: the
-    # range-sort's sampling pass would otherwise re-run the whole codec
-    # mapInPandas a second time
-    return (
-        routed.select(
-            "doc_id", "width_px", "height_px", "n_draws", "ink_pixels",
-            "route", "status", "attempts",
-        )
-        .localCheckpoint()
-        .orderBy("doc_id")
+    return routed.select(
+        "doc_id", "width_px", "height_px", "n_draws", "ink_pixels",
+        "route", "status", "attempts",
     )
 
 
@@ -4765,7 +4758,7 @@ def docs_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.text import postprocess_fold
     from .sources.html_parse import extract_page
 
-    docs = _fanout(load(spark, sf_dir, "documents").select("doc_id", "text"), spark)
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     nl = "\n"
     sid = F.col("doc_id").cast("string")
     f1, f2 = F.substring("text", 1, 20), F.substring("text", 21, 15)
@@ -4787,22 +4780,24 @@ def docs_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("|~|Điểm a Khoản "), (F.col("doc_id") % 9).cast("string"), F.lit("</div></body></html>"),
     )
 
-    def page_content(doc_id, html):
+    def page_content(doc_id, html, dn):
         paragraphs = [p for _, p in extract_page(html)]
         if paragraphs:
-            yield doc_id, "\n".join(paragraphs)
+            yield doc_id, dn, "\n".join(paragraphs)
 
     content = flat_map_rows(
-        docs.select("doc_id", html.alias("html")), page_content, "doc_id long, content string"
+        docs.select(sid.alias("doc_id"), html.alias("html"), dn.alias("dn")),
+        page_content,
+        "doc_id string, dn string, content string",
+        order=("doc_id",),
     )
-    out = content.select(sid.alias("doc_id"), dn.alias("dn"), "content").select(
+    return content.select(
         "doc_id",
         F.concat(
             F.regexp_replace(F.regexp_replace("dn", " ", "_"), "/", "-"), F.lit(".txt")
         ).alias("out_file"),
         F.concat(F.col("dn"), F.lit("\n"), postprocess_fold(F.col("content"), F.col("dn"))).alias("final_text"),
     )
-    return out.orderBy("doc_id")
 
 
 # --- J5: golden-comparison join across OCR model outputs -------------------

@@ -5,6 +5,9 @@ The reference walks pages, rows and files with plain `for` loops
 Each becomes `flat_map_rows(df, fn, schema)`: `fn` is the loop body for
 one input row, run inside one Arrow-batched mapInPandas, so per-row
 Python never runs as a row UDF and binary payloads never cross a shuffle.
+With `order`, the rows come sorted and `fn` still runs once per row (an
+`orderBy` of the output would run it twice: to sample the range bounds,
+then to shuffle).
 `materialize` checkpoints a frame and counts its rows in the same job,
 as the reference counts progress in the loop that writes it
 (ocr/ocr_pdf.py:158-195).
@@ -12,15 +15,19 @@ as the reference counts progress in the loop that writes it
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
 
 def flat_map_rows(
-    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str | StructType
+    df: DataFrame,
+    fn: Callable[..., Iterable[tuple]],
+    schema: str | StructType,
+    order: Sequence[str] = (),
 ) -> DataFrame:
     """`fn(*row)` for every row of `df`, its columns in `df`'s order; each
     tuple `fn` yields, in `schema` order, becomes one output row.
@@ -28,7 +35,18 @@ def flat_map_rows(
     Column names live only in `schema`: the batch frame is built by
     position, which Spark matches to `schema` for non-string labels. A
     batch with no output rows is a zero-column frame, which Spark takes
-    as empty."""
+    as empty.
+
+    With `order`, the output is `orderBy(*order)`'s rows in that order,
+    and `fn` still runs once per input row. Every row `fn` yields must
+    carry in `order[0]` the value of the input's first column cast to
+    that column's type in `schema`: the input is range-partitioned on
+    that cast (one partition per core, a count AQE keeps), and each
+    partition's output is sorted by `order`."""
+    if order:
+        out_type = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+        key = F.col(df.columns[0]).cast(out_type[order[0]].dataType)
+        df = df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, key)
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -36,7 +54,8 @@ def flat_map_rows(
                 [out for row in pdf.itertuples(index=False, name=None) for out in fn(*row)]
             )
 
-    return df.mapInPandas(run, schema)
+    out = df.mapInPandas(run, schema)
+    return out.sortWithinPartitions(*order) if order else out
 
 
 def materialize(df: DataFrame, **counters: Column) -> tuple[DataFrame, dict]:

@@ -191,14 +191,15 @@ def extract_page(html: str) -> list[tuple[int, str]]:
     return merge_buffer_machine("".join(stream).split("\n"))
 
 
-def extract_documents(pages: DataFrame) -> DataFrame:
+def extract_documents(pages: DataFrame, order: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, html) pages → (doc_id, para_offset, paragraph) rows, the
     reference's extract_content + line merge: extract_page per page in
     one flat_map_rows stage, so no row leaves its page's partition. A
-    page without paragraphs yields no row."""
+    page without paragraphs yields no row. With `order`, the rows come
+    sorted by it (flat_map_rows' `order`)."""
 
     def page_paragraphs(doc_id, html):
         for offset, paragraph in extract_page(html):
             yield str(doc_id), offset, paragraph
 
-    return flat_map_rows(pages, page_paragraphs, MERGED_SCHEMA)
+    return flat_map_rows(pages, page_paragraphs, MERGED_SCHEMA, order)
